@@ -3254,43 +3254,46 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
             F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")
         )
     )
-    # init labels stay LAZY over the checkpointed sym: round 1's two
-    # references re-derive the (tiny) distinct inside one job via
-    # exchange reuse, which beats paying a separate materialization
-    # action just to snapshot id==comp (one fewer serial job; rounds
-    # 2+ read the round-1 checkpoint, so nothing compounds)
-    labels = (
-        sym.select(F.col("src").alias("id")).distinct()
-        .withColumn("comp", F.col("id"))
+    # Round 1 needs no label frame: every vertex (a src of sym) starts
+    # as its own label, so its neighbors' minimum label is min(dst)
+    # over its own edges — one aggregate over sym. A lazy initial label
+    # frame would be referenced twice, and AQE picks by stage timing
+    # which reference becomes the reused exchange, so a warm call could
+    # meet a plan (and generated classes) it had not compiled yet.
+    cand = sym.groupBy("src").agg(F.min("dst").alias("nb_comp")).select(
+        F.col("src").alias("id"), F.col("src").alias("comp"), "nb_comp"
     )
     for _ in range(max_iter):
-        nb_min = (
-            sym.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("comp").alias("nb_comp"))
-        )
         # Carry the convergence flag INSIDE the checkpointed frame:
         # the per-round changed-test is then a shuffle-free scan of
         # the already-materialized rows instead of a second join job
         # against the previous round's labels (one join + exchange
         # fewer per round; same labels, same fixpoint).
-        new_labels = (
-            labels.join(nb_min, labels["id"] == nb_min["src"], "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce("nb_comp", "comp")
-                ).alias("comp"),
-                (F.coalesce("nb_comp", "comp") < F.col("comp")).alias(
-                    "chg"
-                ),
-            )
-            .localCheckpoint()
-        )
+        new_labels = cand.select(
+            "id",
+            F.least(F.col("comp"), F.coalesce("nb_comp", "comp")).alias(
+                "comp"
+            ),
+            (F.coalesce("nb_comp", "comp") < F.col("comp")).alias("chg"),
+        ).localCheckpoint()
         changed = new_labels.where("chg").count()
         labels = new_labels.drop("chg")
         if changed == 0:
             break
+        # shuffle-hash on the label side, pinned by hint: left to AQE,
+        # this join became a broadcast of whichever side's shuffle
+        # stage happened to finish first (both fit under the threshold
+        # on small corpora), another timing-dependent plan; at scale
+        # labels is one row per vertex and must not be broadcast anyway
+        nb_min = (
+            sym.join(
+                labels.withColumnRenamed("id", "dst").hint("shuffle_hash"),
+                "dst",
+            )
+            .groupBy("src")
+            .agg(F.min("comp").alias("nb_comp"))
+        )
+        cand = labels.join(nb_min, labels["id"] == nb_min["src"], "left")
     return labels.select(F.col("id").alias("doc_id"), "comp")
 
 
@@ -3320,7 +3323,17 @@ def _collapsed_component_frames(
     token (replica pairs at Jaccard 1): see the non-empty-text fixture
     precondition on :func:`_ngram_jaccard_oracle` — token-less docs
     shingle to ∅ in the engine (no pairs, even between identical
-    empty texts) but to {''} in the oracle."""
+    empty texts) but to {''} in the oracle.
+
+    Cache lifetime: the MEMORY_AND_DISK banded shingle index lives
+    until session end (the returned frames are lazy, so this function
+    cannot unpersist it) — acceptable for the one-invocation driver
+    jobs the CC family registers, and deliberate across calls: every
+    CC-family query over the same corpus re-persists the SAME analyzed
+    plan, which the CacheManager dedupes, so later calls read the
+    warm index instead of rebuilding it. A long-lived session over
+    many different corpora should spill the index to a real table
+    instead, which is what production does anyway."""
     docs = _docs(spark, sf_dir)
     w = W.partitionBy(F.xxhash64("text"), F.col("text"))
     rr = docs.select(
@@ -3400,19 +3413,20 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     its representative's collapsed-graph label (its own rep when the
     rep has no cross-text pairs — this also covers singletons), the
     cluster size is a grouped count over ALL docs, and the heavy pair
-    stage only ever sees one doc per distinct text."""
+    stage only ever sees one doc per distinct text. The size is a
+    window count, not a self-join of the labeled frame against its own
+    aggregate: the two references of a self-join let AQE pick by stage
+    timing which one becomes the reused exchange, so a warm call could
+    meet a plan (and generated classes) it had not compiled yet."""
     rr, comp_c = _collapsed_component_frames(spark, sf_dir)
-    labeled = rr.join(comp_c, "rep", "left").select(
-        "doc_id", F.coalesce("comp", "rep").alias("component")
-    )
-    sizes = labeled.groupBy("component").agg(
-        F.count("*").alias("cluster_size")
-    )
-    return labeled.join(sizes, "component").select(
+    component = F.coalesce("comp", "rep")
+    return rr.join(comp_c, "rep", "left").select(
         "doc_id",
-        "component",
-        "cluster_size",
-        (F.col("doc_id") == F.col("component")).alias("is_canonical"),
+        component.alias("component"),
+        F.count(F.lit(1))
+        .over(W.partitionBy(component))
+        .alias("cluster_size"),
+        (F.col("doc_id") == component).alias("is_canonical"),
     )
 
 

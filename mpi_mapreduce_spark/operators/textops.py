@@ -965,13 +965,26 @@ BPE_MERGE_ROUNDS = 5
 def bpe_train_merges(
     docs: DataFrame, rounds: int = BPE_MERGE_ROUNDS
 ) -> DataFrame:
+    """The trained merges of :func:`bpe_merge_list` as a DataFrame —
+    (merge_rank, lhs, rhs, merged, pair_freq), the merge table a
+    tokenizer ships."""
+    return docs.sparkSession.createDataFrame(
+        bpe_merge_list(docs, rounds),
+        "merge_rank int, lhs string, rhs string, merged string, pair_freq long",
+    )
+
+
+def bpe_merge_list(
+    docs: DataFrame, rounds: int = BPE_MERGE_ROUNDS
+) -> list[tuple[int, str, str, str, int]]:
     """Train the first N byte-pair-encoding merges on the corpus:
     per round, the most frequent adjacent symbol pair (weighted by
     word frequency, ties broken lexicographically) is merged
     everywhere, classic Sennrich-style, starting from characters.
 
-    Returns (merge_rank, lhs, rhs, merged, pair_freq) — the merge
-    table a tokenizer ships.
+    Returns the driver-side merge list, one ``(merge_rank, lhs, rhs,
+    merged, pair_freq)`` tuple per round, so the encode queries build
+    their replace chain from it without a DataFrame round trip.
 
     Scale shape: the corpus is touched ONCE (token count); every
     round after that runs over the DISTINCT-WORD vocabulary weighted
@@ -990,7 +1003,6 @@ def bpe_train_merges(
     scan rather than twice (the classic greedy would pair twice);
     this deterministic variant is pinned identically in the DuckDB
     oracle's chained-CTE rounds."""
-    spark = docs.sparkSession
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     words = (
         toks.groupBy("w")
@@ -1055,10 +1067,7 @@ def bpe_train_merges(
                 rep_expr.alias("rep"), "freq"
             ).localCheckpoint()
             rep_expr = F.col("rep")
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, lhs string, rhs string, merged string, pair_freq long",
-    )
+    return merges
 
 
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,6 +1131,21 @@ def _bpe_oracle(rounds: int = BPE_MERGE_ROUNDS) -> str:
 ORACLE_BPE_MERGES = _bpe_oracle()
 
 
+def _bpe_vocab(docs: DataFrame, toks: DataFrame) -> DataFrame:
+    """(w, n_sym): the BPE symbol count of every distinct word in
+    ``toks``, under the merges trained on ``docs``. The merge list is
+    tiny (<= rounds tuples, already on the driver) and is applied IN
+    RANK ORDER as chained literal replaces."""
+    rep = F.concat(
+        F.lit(" "), F.array_join(F.split("w", ""), " "), F.lit(" ")
+    )
+    for _, lhs, rhs, merged, _ in bpe_merge_list(docs):
+        rep = F.replace(rep, F.lit(f" {lhs} {rhs} "), F.lit(f" {merged} "))
+    return toks.select("w").distinct().select(
+        "w", F.size(F.split(F.trim(rep), " ")).alias("n_sym")
+    )
+
+
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode-side of the trained tokenizer: apply the
     ``BPE_MERGE_ROUNDS`` trained merges to every word and report
@@ -1130,28 +1154,18 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-data budget (packing, context windows, cost estimates)
     is computed from.
 
-    The merge table is tiny (collected once, ≤ rounds rows); merges
-    are applied IN RANK ORDER as chained literal replaces over the
-    DISTINCT-WORD vocabulary, and per-doc sums come from one
-    token-to-vocab equi-join — corpus cost is the join + grouped sum,
-    the merge arithmetic amortizes over word types."""
+    The merge list is tiny (≤ rounds tuples, trained on the driver);
+    merges are applied IN RANK ORDER as chained literal replaces over
+    the DISTINCT-WORD vocabulary (:func:`_bpe_vocab`), and per-doc
+    sums come from one token-to-vocab equi-join — corpus cost is the
+    join + grouped sum, the merge arithmetic amortizes over word
+    types."""
     docs = _docs(spark, sf_dir)
-    merges = bpe_train_merges(docs).collect()  # bounded: <= rounds rows
     toks = docs.select(
         "doc_id", F.explode(tokens(F.col("text"))).alias("w")
     )
-    rep = F.concat(
-        F.lit(" "), F.array_join(F.split("w", ""), " "), F.lit(" ")
-    )
-    for m in merges:
-        rep = F.replace(
-            rep, F.lit(f" {m.lhs} {m.rhs} "), F.lit(f" {m.merged} ")
-        )
-    vocab = toks.select("w").distinct().select(
-        "w", F.size(F.split(F.trim(rep), " ")).alias("n_sym")
-    )
     return (
-        toks.join(vocab, "w")
+        toks.join(_bpe_vocab(docs, toks), "w")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_words"),
@@ -1197,22 +1211,11 @@ def text_bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id; fertility = exact Σ tokens / Σ words, one divide,
     quantized."""
     docs = _docs(spark, sf_dir)
-    merges = bpe_train_merges(docs).collect()
     toks = docs.select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("w")
     )
-    rep = F.concat(
-        F.lit(" "), F.array_join(F.split("w", ""), " "), F.lit(" ")
-    )
-    for m in merges:
-        rep = F.replace(
-            rep, F.lit(f" {m.lhs} {m.rhs} "), F.lit(f" {m.merged} ")
-        )
-    vocab = toks.select("w").distinct().select(
-        "w", F.size(F.split(F.trim(rep), " ")).alias("n_sym")
-    )
     return (
-        toks.join(vocab, "w")
+        toks.join(_bpe_vocab(docs, toks), "w")
         .groupBy("lang")
         .agg(
             F.count("*").alias("n_words"),

@@ -1139,8 +1139,12 @@ ORACLE_DSIR = f"""
 # ---------------------------------------------------------------------------
 
 #: full-batch gradient-descent rounds (weight updates); kept small so
-#: the oracle can unroll the training loop CTE-for-CTE — a production
-#: run raises this, the per-round cost is unchanged
+#: the oracle can unroll the training loop CTE-for-CTE. The in-plan
+#: loop references the weight frame about 5× per round, so the plan
+#: grows geometrically in the rounds since ``w`` was last materialized;
+#: a caller raising this pays one localCheckpoint job per 2 rounds
+#: (the depth guard bpe_merge_list applies every 32), which keeps the
+#: final plan no larger than the default's
 QL_ROUNDS = 2
 
 
@@ -1170,10 +1174,21 @@ def quality_logreg_scores(
     at sf0.1; this shape benches 3.46 → 1.82 s min-of-3, bit-equal
     output, /tmp/ab_logreg.py). Round 1 exploits w₀ = 0: every logit
     is exactly 0.0, so err₁ = 0.5 - y without touching counts
-    (quantize(σ(0)) = 0.5 bit-for-bit). The feature matrix is
-    persisted (five consumers across the rounds); the deployable
-    frozen-model path (:func:`logreg_model`) keeps the driver-side
-    collect loop — a bounded model fetch is its entire purpose.
+    (quantize(σ(0)) = 0.5 bit-for-bit). Every 2nd round but the
+    last, the weight frame is localCheckpoint'ed, so a large
+    ``rounds`` costs one eager job per checkpoint instead of a plan
+    5× larger per round. The feature matrix is persisted (five
+    consumers across the rounds); the deployable frozen-model path
+    (:func:`logreg_model`) keeps the driver-side collect loop — a
+    bounded model fetch is its entire purpose.
+
+    Cache lifetime: the persisted feature matrix lives until session
+    end (the returned frame is lazy, so this function cannot
+    unpersist it) — acceptable for the one-invocation driver jobs
+    this registers, and re-invoking on the same docs re-persists the
+    SAME analyzed plan, which the CacheManager dedupes; a long-lived
+    session scoring MANY different doc frames should clear the cache
+    between them or spill the features to a real table.
 
     Exactness discipline (what makes 2 training rounds hash-match a
     DuckDB oracle bit for bit): every per-row contribution is
@@ -1253,8 +1268,8 @@ def quality_logreg_scores(
     w = spark.range(-1, n_buckets).select(
         F.col("id").alias("bucket"), F.lit(0.0).alias("wgt")
     )
-    for r in range(rounds):
-        if r == 0:
+    for r in range(1, rounds + 1):
+        if r == 1:
             err = y.select(
                 "doc_id", (F.lit(0.5) - F.col("y")).alias("err")
             )
@@ -1275,6 +1290,8 @@ def quality_logreg_scores(
             "bucket",
             (F.col("wgt") - F.coalesce("g", F.lit(0.0))).alias("wgt"),
         )
+        if r % 2 == 0 and r < rounds:
+            w = w.localCheckpoint()
     final = logits_frame(w)
     logit_q = ex.quantize(F.col("logit"), 6)
     return final.select(

@@ -472,3 +472,37 @@ def test_quality_logreg_deterministic(spark, sf_dir):
     )
     assert a == b
     assert all(0.0 <= p <= 1.0 for _, _, p, _ in a)
+
+
+def test_quality_logreg_many_rounds_plan_stays_bounded(spark, sf_dir):
+    """Every weight-update round references the weight frame about 5×,
+    so without re-materialization the plan grows geometrically in
+    ``rounds``. With the periodic checkpoint the exchange count
+    must grow no faster than linearly, and rounds=10 must build, run
+    and match the driver-side GD loop bit for bit."""
+    from mpi_mapreduce_spark.functions import exact as ex
+
+    docs = T._docs(spark, sf_dir)
+
+    def n_exchanges(rounds):
+        df = T.quality_logreg_scores(docs, rounds=rounds)
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "Exchange"
+        )
+
+    base = n_exchanges(2)
+    assert n_exchanges(10) <= base * 10 / 2
+
+    weights, bias, counts, y = T._logreg_fit(
+        docs, T.DSIR_TARGET_SOURCE, T.DSIR_BUCKETS, 10
+    )
+    logit_q = ex.quantize(F.col("logit"), 6)
+    loop_scores = T._logreg_logits(counts, y, weights, bias).select(
+        "doc_id",
+        logit_q.alias("logit"),
+        ex.quantize(
+            F.lit(1.0) / (F.lit(1.0) + F.exp(-logit_q)), 6
+        ).alias("prob"),
+        (logit_q > 0).alias("keep"),
+    )
+    assert _rows(T.quality_logreg_scores(docs, rounds=10)) == _rows(loop_scores)
