@@ -36,7 +36,10 @@ signature path's invariants are driver-attested via its banded
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from contextlib import contextmanager
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -786,8 +789,8 @@ def _nightly_minhash_core(
         bands_n.select(
             F.col("doc_id").alias("doc_b"), "band_id", "band_hash"
         ),
-        bkey,
         index_dir,
+        exclude=bkey,
     )
     if cross_cands is not None:
         # the estimated-Jaccard rescore needs the mh columns, which
@@ -2839,8 +2842,8 @@ def _nightly_embedding_core(
             bands_new.select(
                 F.col("vec_id").alias("vec_a"), "band", "bucket"
             ),
-            bkey,
             bands_dir,
+            exclude=bkey,
         )
         if has_committed_parquet(vecs_dir)
         else None
@@ -4187,118 +4190,41 @@ def substring_gram_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: bucket count for the co-located gram-index serving layout; at
-#: 100 TB this scales with vocabulary bytes / target bucket size
+#: bucket count for the co-located serving base of every stored index
+#: family; at 100 TB this scales with index bytes / target bucket size
 #: (buckets are the unit both the compactor and the probe shuffle to)
 GRAM_INDEX_BUCKETS = 32
 
 
-def compact_gram_index_bucketed(
-    spark: SparkSession,
-    index_dir: str,
-    table: str,
-    num_buckets: int = GRAM_INDEX_BUCKETS,
-    path: str | None = None,
-    paths: list[str] | None = None,
-) -> None:
-    """Compact the nightly per-batch gram partitions into the
-    CO-LOCATED serving layout: one catalog table bucketed (and
-    bucket-sorted) on ``s`` — the SCALING.md round-9 recipe made real.
+class _IndexFamily(NamedTuple):
+    """How one stored dedup index is served: ``rows`` turns its
+    per-batch partition rows into serving rows (what the weekly base
+    stores and what a delta tier probes), ``keys`` is the probe's join
+    key — the base's bucket and sort columns — and ``distinct`` marks
+    a set-valued base (the gram vocabulary: each partition is distinct
+    but grams repeat across batches)."""
 
-    The nightly leg appends ``batch=<bkey>`` partitions (cheap,
-    append-only); this weekly job pays the vocabulary's shuffle ONCE —
-    distinct over all partitions, hash-clustered into ``num_buckets``
-    files — after which every nightly probe semi join plans with NO
-    Exchange on the index side (:func:`incremental_span_rows_
-    colocated`; pytest-asserted). At 100 TB that is the difference
-    between re-shuffling a multi-TB vocabulary every night and
-    shuffling only the nightly batch's grams to meet it. Same
-    division of labor as compact_and_cluster for range layouts.
-
-    ``paths`` restricts the fold to specific partition directories —
-    the scheduled form passes the LEDGER-COMMITTED partitions only
-    (ADVICE r10: folding a crashed night's uncommitted partial bakes
-    its grams into the base, where the replayed batch is flagged as a
-    duplicate of itself and reconciliation can no longer help)."""
-    from mpi_mapreduce_spark.sources.io import write_bucketed
-
-    src = (
-        spark.read.parquet(*paths)
-        if paths is not None
-        else spark.read.parquet(index_dir)
-    )
-    vocab = src.select("s").distinct()
-    write_bucketed(
-        vocab, table, num_buckets, ["s"], sort_cols=["s"], path=path
-    )
+    rows: Callable[[DataFrame], DataFrame]
+    keys: list[str]
+    distinct: bool = False
 
 
-def incremental_span_rows_colocated(
-    spark: SparkSession, batch: DataFrame, table: str, n: int = SPAN_N
-) -> DataFrame:
-    """Serve :func:`incremental_span_rows` from the BUCKETED stored
-    vocabulary (:func:`compact_gram_index_bucketed`): the probe semi
-    join reads the index through the catalog, whose scan reports the
-    bucket HashPartitioning, so only the BATCH side shuffles (to the
-    bucket count) and the vocabulary never moves — plan-asserted in
-    tests/test_dedup.py, results identical to the plain stored path
-    by the same pytest."""
-    from mpi_mapreduce_spark.sources.io import read_bucketed
-
-    seen = read_bucketed(spark, table).select("s")
-    return incremental_span_rows(batch, corpus_grams=seen, n=n)
-
-
-def incremental_span_rows_tiered(
-    spark: SparkSession,
-    batch: DataFrame,
-    table: str,
-    deltas: DataFrame | None = None,
-    n: int = SPAN_N,
-    broadcast_deltas: bool = True,
-) -> DataFrame:
-    """TWO-TIER gram serving — the shape the 1M composite measurement
-    (SCALING.md round-10) motivated: between weekly compactions the
-    vocabulary lives as the bucketed BASE table plus a few small
-    post-compaction per-batch DELTA partitions, and the nightly probe
-    must touch both without re-shuffling the base. Two semi joins —
-    base probed co-located (index side shuffle-free, as in
-    :func:`incremental_span_rows_colocated`), deltas probed via an
-    explicit broadcast (they are nightly-batch-sized by construction)
-    — and a union+distinct of the covered starts, which is exactly
-    "gram ∈ base ∪ deltas" (a start can hit both tiers). Result
-    equality with the flat union-vocabulary path is pytest-pinned.
-
-    At 100 TB this removes the corpus-shaped term from EVERY night:
-    the multi-TB base never moves (bucket-co-located), the deltas ride
-    a broadcast, and the weekly compactor is the only job that ever
-    shuffles the vocabulary.
-
-    EAGER (registry-contract sense) when deltas are present: the
-    batch's positional grams feed BOTH tier joins, so they are
-    localCheckpoint-materialized once instead of re-deriving the
-    posexplode/window chain per tier — measured at 1M this is the
-    difference between 31.6 s and ~the co-located wall."""
-    from mpi_mapreduce_spark.sources.io import read_bucketed
-
-    occ = positional_ngram_rows(batch, n).where(F.col("glen") == n)
-    base = read_bucketed(spark, table).select("s")
-    if deltas is None:
-        starts = occ.join(base, "s", "left_semi").select("doc_id", "q")
-        return _spans_from_starts(starts, n)
-    occ = occ.localCheckpoint()
-    delta_side = deltas.select("s")
-    if broadcast_deltas:
-        delta_side = F.broadcast(delta_side)
-    starts = (
-        occ.join(base, "s", "left_semi")
-        .select("doc_id", "q")
-        .unionByName(
-            occ.join(delta_side, "s", "left_semi").select("doc_id", "q")
-        )
-        .distinct()
-    )
-    return _spans_from_starts(starts, n)
+#: serving family -> layout; the family name also keys the derived
+#: serving table (:func:`_serving_table`). The MinHash base stores band
+#: keys, not signatures, so it also amortizes the per-night band
+#: derivation the signature-shaped index forces on a flat probe.
+_INDEX_FAMILIES = {
+    "grams": _IndexFamily(lambda df: df.select("s"), ["s"], distinct=True),
+    "mhband": _IndexFamily(
+        lambda df: minhash_band_keys(
+            df.select("doc_id", *[f"mh{i}" for i in range(MINHASH_HASHES)])
+        ),
+        ["band_id", "band_hash"],
+    ),
+    "embband": _IndexFamily(
+        lambda df: df.select("vec_id", "band", "bucket"), ["band", "bucket"]
+    ),
+}
 
 
 def _batch_partition_dirs(
@@ -4345,42 +4271,48 @@ def _serving_table(index_dir: str, family: str) -> str:
 
 def _fold_3step(
     spark: SparkSession,
-    table: str,
-    keys,
-    write_base,
-    ledger_path: str | None = None,
+    index_dir: str,
+    family: str,
+    keys: list[str],
+    paths: list[str],
+    path: str,
 ) -> int:
-    """The shared crash-safe fold protocol of every weekly compaction
-    (gram / MinHash band / embedding band): (1) INVALIDATE the fold
-    ledger ``<table>_folded``, (2) overwrite the bucketed base via
-    ``write_base()``, (3) record the folded batch keys LAST. Every
-    intermediate state degrades serving to the flat probe — correct,
-    merely corpus-shaped — because the probes are duplicate-tolerant
-    and the per-batch partitions are never deleted.
+    """The crash-safe fold protocol of the weekly compaction: (1)
+    INVALIDATE the fold ledger ``<table>_folded``, (2) overwrite the
+    bucketed base from the partition dirs ``paths``, (3) record the
+    folded batch ``keys`` LAST. Every intermediate state degrades
+    serving to the flat probe — correct, merely corpus-shaped —
+    because the probes are duplicate-tolerant and the per-batch
+    partitions are never deleted, so the base is always re-derivable
+    and the overwrite idempotent.
 
-    ``ledger_path`` pins the fold-ledger table's data location
-    (external table). Pass it whenever the serving state must survive
-    the Spark session: catalog METADATA is session-scoped here while
-    the warehouse DIRECTORY is not, so a managed fold ledger left by
-    a previous session blocks re-creation with
-    LOCATION_ALREADY_EXISTS (found driving bench.py in a fresh
-    session against rehearse-session state)."""
+    Both tables are external: the base lives at ``path``, the ledger
+    at ``<path>_folded``. Catalog METADATA is session-scoped here
+    while the warehouse DIRECTORY is not, so a managed table left by
+    a previous session blocks re-creation with LOCATION_ALREADY_EXISTS
+    (found driving bench.py in a fresh session against
+    rehearse-session state). Returns the number of folded keys."""
+    from mpi_mapreduce_spark.sources.io import write_bucketed
 
-    def _ledger_writer(df):
-        w = df.write.mode("overwrite")
-        if ledger_path:
-            w = w.option("path", ledger_path)
-        return w
+    fam = _INDEX_FAMILIES[family]
+    table = _serving_table(index_dir, family)
 
-    keys = sorted(keys)
-    ledger_tbl = f"{table}_folded"
-    _ledger_writer(
-        spark.createDataFrame([], "batch_key string")
-    ).saveAsTable(ledger_tbl)
-    write_base()
-    _ledger_writer(
-        spark.createDataFrame([(k,) for k in keys], "batch_key string")
-    ).saveAsTable(ledger_tbl)
+    def _write_ledger(folded: list[str]) -> None:
+        spark.createDataFrame(
+            [(k,) for k in folded], "batch_key string"
+        ).write.mode("overwrite").option("path", f"{path}_folded").saveAsTable(
+            f"{table}_folded"
+        )
+
+    _write_ledger([])
+    base = fam.rows(spark.read.parquet(*paths))
+    if fam.distinct:
+        base = base.distinct()
+    write_bucketed(
+        base, table, GRAM_INDEX_BUCKETS, fam.keys, sort_cols=fam.keys,
+        path=path,
+    )
+    _write_ledger(sorted(keys))
     return len(keys)
 
 
@@ -4396,17 +4328,11 @@ def _fold_3step(
 DELTA_BROADCAST_MAX_BYTES = 256 << 20
 
 
-def _delta_dirs_small(
-    spark: SparkSession,
-    delta_dirs: list[str],
-    limit: int | None = None,
-) -> bool:
+def _delta_dirs_small(spark: SparkSession, delta_dirs: list[str]) -> bool:
     """True iff the delta partitions' summed on-disk footprint is
-    under ``limit`` (default :data:`DELTA_BROADCAST_MAX_BYTES`,
-    resolved at call time so tests can shrink it) — driver-side
-    Hadoop FS metadata only, no job."""
-    if limit is None:
-        limit = DELTA_BROADCAST_MAX_BYTES
+    under :data:`DELTA_BROADCAST_MAX_BYTES` (read at call time so
+    tests can shrink it) — driver-side Hadoop FS metadata only, no
+    job."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
     total = 0
@@ -4415,28 +4341,18 @@ def _delta_dirs_small(
         fs = jp.getFileSystem(hconf)
         if fs.exists(jp):
             total += fs.getContentSummary(jp).getLength()
-            if total > limit:
+            if total > DELTA_BROADCAST_MAX_BYTES:
                 return False
     return True
 
 
-def _broadcast_if_small(
-    spark: SparkSession, df: DataFrame, delta_dirs: list[str]
-) -> DataFrame:
-    """The delta tier's join hint: ``F.broadcast(df)`` while the
-    backing partitions fit :data:`DELTA_BROADCAST_MAX_BYTES`, the
-    unhinted frame (plain shuffle join) above it."""
-    if _delta_dirs_small(spark, delta_dirs):
-        return F.broadcast(df)
-    return df
-
-
 def _fold_state(
-    spark: SparkSession, index_dir: str, table: str
+    spark: SparkSession, index_dir: str, family: str
 ) -> tuple[set[str], dict[str, str]]:
     """(folded batch keys — empty when no VALID compaction exists,
-    {key: path} of all current partitions) for a production serving
-    entry point."""
+    {key: path} of all current partitions) of the stored index at
+    ``index_dir``."""
+    table = _serving_table(index_dir, family)
     folded: set[str] = set()
     ledger_tbl = f"{table}_folded"
     if spark.catalog.tableExists(table) and spark.catalog.tableExists(
@@ -4468,20 +4384,23 @@ def _committed_partitions(
     return keys, [parts[k] for k in keys]
 
 
-def weekly_gram_compaction(
+def weekly_index_compaction(
     spark: SparkSession,
     index_dir: str,
-    table: str,
+    family: str,
     ledger_dir: str,
-    num_buckets: int = GRAM_INDEX_BUCKETS,
-    path: str | None = None,
+    path: str,
 ) -> int:
-    """The scheduled form of :func:`compact_gram_index_bucketed` —
-    fold every LEDGER-COMMITTED per-batch gram partition currently in
-    ``index_dir`` into the bucketed base ``table`` and record WHICH
-    batch keys were folded in a catalog companion ``<table>_folded``,
-    so :func:`incremental_span_rows_production` can derive the delta
-    set (partitions that landed since) without any out-of-band state.
+    """Fold every LEDGER-COMMITTED per-batch partition of the stored
+    index at ``index_dir`` (``family`` one of :data:`_INDEX_FAMILIES`:
+    ``grams``, ``mhband``, ``embband``) into its bucketed serving base
+    (:func:`_serving_table`, files at ``path``) plus the fold ledger
+    ``<table>_folded`` that tells :func:`_serving_tiers` which batch
+    keys the base holds. The weekly job pays the index's shuffle once
+    — hash-clustered and sorted on the family's join key — so every
+    nightly probe of the base plans with NO Exchange on the index
+    side (the SCALING.md round-9 recipe; pytest plan-asserted).
+
     ``ledger_dir`` is REQUIRED (ADVICE r10): partitions with no
     committed batch_key are crashed partials — folding one bakes it
     into the base, where the replayed batch would be flagged as a
@@ -4489,19 +4408,7 @@ def weekly_gram_compaction(
     deletes the partition cannot un-fold the base. With nothing
     committed (or a legacy NULL-key ledger) the compaction is a
     NO-OP returning 0 — the existing base, if any, stays valid.
-
-    Crash-safe in three steps, exploiting the probe's duplicate
-    tolerance (a gram present in base AND a partition is harmless —
-    left-semi semantics):
-
-    1. INVALIDATE the fold ledger (overwrite ``<table>_folded``
-       empty) — a crash after this point makes serving fall back to
-       probing every partition flat: slower, never wrong;
-    2. overwrite the bucketed base from the partitions (the
-       partitions are never deleted, so the base is always
-       re-derivable and the overwrite is idempotent);
-    3. write the fold ledger LAST — only a fully-written base ever
-       has a non-empty ledger.
+    Crash-safe via :func:`_fold_3step`.
 
     100 TB note — incremental folds: this fold re-derives the base
     from ALL committed partitions, which is the simplest idempotent
@@ -4512,252 +4419,172 @@ def weekly_gram_compaction(
     overwrite a table its own plan reads; the fold ledger would carry
     the live generation. Worth building when Σ|partitions| ≫ |vocab|
     (heavy cross-batch gram repetition); at the measured 1M scale the
-    full fold is 41 s weekly against a 51 s nightly saving, so the
-    simple shape wins on risk.
+    full gram fold is 41 s weekly against a 51 s nightly saving, so
+    the simple shape wins on risk.
 
     Returns the number of folded partitions."""
     keys, paths = _committed_partitions(spark, index_dir, ledger_dir)
     if not keys:
         return 0
-    return _fold_3step(
-        spark,
-        table,
-        keys,
-        lambda: compact_gram_index_bucketed(
-            spark,
-            index_dir,
-            table,
-            num_buckets=num_buckets,
-            path=path,
-            paths=paths,
-        ),
-        ledger_path=f"{path}_folded" if path else None,
-    )
+    return _fold_3step(spark, index_dir, family, keys, paths, path)
 
 
-def incremental_span_rows_production(
+def _serving_tiers(
     spark: SparkSession,
-    batch: DataFrame,
     index_dir: str,
-    table: str,
-    n: int = SPAN_N,
-) -> DataFrame:
-    """The serving entry point a nightly deployment actually calls:
-    given the per-batch gram partitions (``index_dir``, maintained by
-    nightly_substring_update / the composite) and the weekly base
-    ``table`` (:func:`weekly_gram_compaction`), derive the delta set
-    from the fold ledger and probe two-tier
-    (:func:`incremental_span_rows_tiered`). Degrades, never breaks:
+    family: str,
+    exclude: str | None = None,
+) -> list[DataFrame]:
+    """The serving ladder of every stored dedup index — the frames a
+    nightly probe joins tonight's batch against, in the family's
+    serving-row shape (:data:`_INDEX_FAMILIES`). The fold state is
+    listed once; each probe joins the batch side against every
+    returned tier and unions the results, which is exactly "key ∈
+    base ∪ deltas" because the probes are duplicate-tolerant.
 
-    - no base table yet (or a compaction died before step 2) → flat
-      probe over all partitions — correct, just corpus-shaped;
-    - empty fold ledger (compaction died between steps 1 and 3) →
-      base ignored, flat probe over all partitions — correct, the
-      torn base is never read;
-    - partitions newer than the last compaction → probed as
-      broadcast deltas alongside the co-located base."""
-    folded, all_parts = _fold_state(spark, index_dir, table)
-    if not folded:
-        # no (valid) compaction yet: flat probe over everything
-        return incremental_span_rows(
-            batch,
-            corpus_grams=spark.read.parquet(index_dir).select("s"),
-            n=n,
-        )
-    delta_dirs = [p for k, p in sorted(all_parts.items()) if k not in folded]
-    deltas = (
-        spark.read.parquet(*delta_dirs).select("s") if delta_dirs else None
+    - a VALID weekly compaction exists (base table + non-empty fold
+      ledger, :func:`weekly_index_compaction`) → the bucketed BASE,
+      read through the catalog so its scan reports the bucket
+      HashPartitioning and only the batch side shuffles, plus one
+      DELTA tier over the partitions that landed since — broadcast
+      while their on-disk bytes stay under
+      :data:`DELTA_BROADCAST_MAX_BYTES`, a plain shuffle join above;
+    - no base yet, or a compaction that died between invalidating
+      and rewriting its fold ledger (empty ledger) → the FLAT union of
+      every partition: correct, merely corpus-shaped — a torn base is
+      never read;
+    - no committed partition at all (first night) → no tier.
+
+    ``exclude`` is tonight's batch key: its partition is left out of
+    every rung, or a crash replay would probe its own persisted rows
+    and flag the whole batch as duplicates of itself. It is never in
+    the base — compactions fold only ledger-committed keys and a
+    replayed night is by definition uncommitted (ADVICE r10) — so an
+    ``exclude`` that IS folded serves flat. ``None`` (the serving
+    queries' case) adds no filter: ``batch != NULL`` is NULL and would
+    drop every row.
+
+    At 100 TB this removes the corpus-shaped term from every night
+    (95.5 s of the 142.9 s 1M marginal night for the flat substring
+    leg, SCALING.md round-10): the multi-TB base never moves, the
+    deltas ride a broadcast, and the weekly compactor is the only job
+    that ever shuffles the index."""
+    from mpi_mapreduce_spark.sources.io import (
+        has_committed_parquet,
+        read_bucketed,
     )
-    return incremental_span_rows_tiered(
-        spark,
-        batch,
-        table,
-        deltas,
-        n,
-        broadcast_deltas=_delta_dirs_small(spark, delta_dirs),
-    )
 
-
-# ---------------------------------------------------------------------------
-# Nightly-core serving probes — the composite's two-tier wiring (r11)
-# ---------------------------------------------------------------------------
-# Each nightly core used to probe its stored index FLAT (read every
-# per-batch partition, re-shuffle/re-derive it into tonight's join) —
-# the corpus-shaped term the round-10 1M composite measurement put at
-# 95.5 s of a 142.9 s marginal night for the substring leg alone.
-# These helpers are the cores' probe stage factored out so (a) the
-# cores consult the weekly fold ledger and serve two-tier (co-located
-# bucketed base + broadcast post-compaction deltas) whenever a valid
-# compaction exists, degrading to the flat probe otherwise (the
-# ladder's documented semantics), and (b) pytest can plan-assert the
-# bucketed scan on EXACTLY the probe the composite runs. The serving
-# table name is derived from the index path (_serving_table), so the
-# cores and weekly_curation_compaction agree with no out-of-band
-# state. Tonight's own partition (bkey) is excluded on every rung —
-# and can never be in the BASE, because the weekly compactions fold
-# only ledger-committed keys and a replayed night is by definition
-# uncommitted (ADVICE r10).
+    rows = _INDEX_FAMILIES[family].rows
+    folded, parts = _fold_state(spark, index_dir, family)
+    if folded and exclude not in folded:
+        tiers = [read_bucketed(spark, _serving_table(index_dir, family))]
+        delta_dirs = [
+            p for k, p in parts.items() if k not in folded and k != exclude
+        ]
+        if delta_dirs:
+            delta = rows(spark.read.parquet(*delta_dirs))
+            if _delta_dirs_small(spark, delta_dirs):
+                delta = F.broadcast(delta)
+            tiers.append(delta)
+        return tiers
+    if has_committed_parquet(index_dir):
+        flat = spark.read.parquet(index_dir)
+        if exclude is not None:
+            flat = flat.where(F.col("batch") != F.lit(exclude))
+        return [rows(flat)]
+    return []
 
 
 def _gram_cross_spans(
     spark: SparkSession,
     batch: DataFrame,
-    bkey: str,
     index_dir: str,
+    exclude: str | None = None,
     n: int = SPAN_N,
 ) -> DataFrame:
-    """The substring core's probe: tonight's corpus-covered spans
-    against the stored gram vocabulary — two-tier when a valid weekly
-    base exists, flat otherwise, empty-vocabulary on the first
-    night."""
-    from mpi_mapreduce_spark.sources.io import has_committed_parquet
-
-    tbl = _serving_table(index_dir, "grams")
-    folded, all_parts = _fold_state(spark, index_dir, tbl)
-    if folded and bkey not in folded:
-        delta_dirs = [
-            p
-            for k, p in sorted(all_parts.items())
-            if k not in folded and k != bkey
-        ]
-        deltas = (
-            spark.read.parquet(*delta_dirs).select("s")
-            if delta_dirs
-            else None
-        )
-        return incremental_span_rows_tiered(
-            spark,
-            batch,
-            tbl,
-            deltas,
-            n,
-            broadcast_deltas=_delta_dirs_small(spark, delta_dirs),
-        )
-    if has_committed_parquet(index_dir):
-        stored = (
-            spark.read.parquet(index_dir)
-            .where(F.col("batch") != F.lit(bkey))
-            .select("s")
-        )
-        return incremental_span_rows(batch, corpus_grams=stored, n=n)
-    # first night: nothing seen before, nothing to flag
-    return incremental_span_rows(
-        batch,
-        corpus_grams=batch.select(F.lit("").alias("s")).limit(0),
-        n=n,
+    """The substring probe: :func:`incremental_span_rows` of ``batch``
+    against the stored gram vocabulary at ``index_dir``, one left
+    semi join per serving tier (:func:`_serving_tiers`). With two
+    tiers the batch's positional grams feed both joins, so they are
+    localCheckpoint-materialized once instead of re-deriving the
+    posexplode/window chain per tier (measured at 1M: 17.3 s vs
+    31.6 s) and the covered starts are distinct'd (a start can hit
+    both tiers)."""
+    occ = positional_ngram_rows(batch, n).where(F.col("glen") == n)
+    # first night: an empty vocabulary, nothing to flag
+    tiers = _serving_tiers(spark, index_dir, "grams", exclude) or [
+        batch.select(F.lit("").alias("s")).limit(0)
+    ]
+    if len(tiers) > 1:
+        occ = occ.localCheckpoint()
+    starts = reduce(
+        DataFrame.unionByName,
+        [
+            occ.join(t.select("s"), "s", "left_semi").select("doc_id", "q")
+            for t in tiers
+        ],
     )
+    if len(tiers) > 1:
+        starts = starts.distinct()
+    return _spans_from_starts(starts, n)
 
 
 def _minhash_cross_candidates(
-    spark: SparkSession, bands_b: DataFrame, bkey: str, index_dir: str
+    spark: SparkSession,
+    bands_b: DataFrame,
+    index_dir: str,
+    exclude: str | None = None,
 ) -> DataFrame | None:
-    """The MinHash core's candidate probe: tonight's batch band keys
-    ``bands_b`` (doc_b, band_id, band_hash) against the stored corpus
-    — served from the co-located weekly band table + broadcast of the
-    band keys derived from post-compaction delta partitions when a
-    valid compaction exists (this removes the per-night
-    minhash_band_keys derivation over the FULL signature index — the
-    r10 verdict's named corpus-shaped term), flat band derivation
-    otherwise. Returns (doc_b, doc_c) pairs, or None when no stored
-    corpus exists yet. The signature-estimated Jaccard rescore stays
-    the caller's job (it needs the mh columns, which only the
-    signature partitions carry)."""
-    from mpi_mapreduce_spark.sources.io import (
-        has_committed_parquet,
-        read_bucketed,
-    )
-
-    sig_cols = ["doc_id"] + [f"mh{i}" for i in range(MINHASH_HASHES)]
-    tbl = _serving_table(index_dir, "mhband")
-    folded, all_parts = _fold_state(spark, index_dir, tbl)
-    if folded and bkey not in folded:
-        base = read_bucketed(spark, tbl).select(
-            F.col("doc_id").alias("doc_c"), "band_id", "band_hash"
-        )
-        cands = bands_b.join(base, ["band_id", "band_hash"]).select(
-            "doc_b", "doc_c"
-        )
-        delta_dirs = [
-            p
-            for k, p in sorted(all_parts.items())
-            if k not in folded and k != bkey
-        ]
-        if delta_dirs:
-            delta = minhash_band_keys(
-                spark.read.parquet(*delta_dirs).select(*sig_cols)
-            ).select(
-                F.col("doc_id").alias("doc_c"), "band_id", "band_hash"
-            )
-            cands = cands.unionByName(
-                bands_b.join(
-                    _broadcast_if_small(spark, delta, delta_dirs),
-                    ["band_id", "band_hash"],
-                ).select("doc_b", "doc_c")
-            )
-        return cands.distinct()
-    if has_committed_parquet(index_dir):
-        bands_o = minhash_band_keys(
-            spark.read.parquet(index_dir)
-            .where(F.col("batch") != F.lit(bkey))
-            .select(*sig_cols)
-        ).select(F.col("doc_id").alias("doc_c"), "band_id", "band_hash")
-        return (
-            bands_b.join(bands_o, ["band_id", "band_hash"])
-            .select("doc_b", "doc_c")
-            .distinct()
-        )
-    return None
+    """The MinHash candidate probe: tonight's band keys ``bands_b``
+    (doc_b, band_id, band_hash) equi-joined against every serving
+    tier of the signature index at ``index_dir``
+    (:func:`_serving_tiers`). Returns distinct (doc_b, doc_c) pairs,
+    or None when no stored corpus exists yet. The
+    signature-estimated Jaccard rescore stays the caller's job (it
+    needs the mh columns, which only the signature partitions
+    carry)."""
+    tiers = _serving_tiers(spark, index_dir, "mhband", exclude)
+    if not tiers:
+        return None
+    return reduce(
+        DataFrame.unionByName,
+        [
+            bands_b.join(
+                t.select(
+                    F.col("doc_id").alias("doc_c"), "band_id", "band_hash"
+                ),
+                ["band_id", "band_hash"],
+            ).select("doc_b", "doc_c")
+            for t in tiers
+        ],
+    ).distinct()
 
 
 def _embedding_cross_candidates(
-    spark: SparkSession, bb: DataFrame, bkey: str, bands_dir: str
+    spark: SparkSession,
+    bb: DataFrame,
+    bands_dir: str,
+    exclude: str | None = None,
 ) -> DataFrame | None:
-    """The embedding core's candidate probe: tonight's batch band rows
-    ``bb`` (vec_a, band, bucket) against the stored bucket index —
-    co-located base + broadcast deltas when a valid weekly compaction
-    exists, flat stored-bands join otherwise. Returns (vec_a, vec_b)
-    pairs, or None when no stored bands exist yet. The exact cosine
-    rescore stays the caller's job (it needs the vectors leg)."""
-    from mpi_mapreduce_spark.sources.io import (
-        has_committed_parquet,
-        read_bucketed,
-    )
-
-    tbl = _serving_table(bands_dir, "embband")
-    folded, all_parts = _fold_state(spark, bands_dir, tbl)
-    if folded and bkey not in folded:
-        base = read_bucketed(spark, tbl).select(
-            F.col("vec_id").alias("vec_b"), "band", "bucket"
-        )
-        cands = bb.join(base, ["band", "bucket"]).select("vec_a", "vec_b")
-        delta_dirs = [
-            p
-            for k, p in sorted(all_parts.items())
-            if k not in folded and k != bkey
-        ]
-        if delta_dirs:
-            delta = spark.read.parquet(*delta_dirs).select(
-                F.col("vec_id").alias("vec_b"), "band", "bucket"
-            )
-            cands = cands.unionByName(
-                bb.join(
-                    _broadcast_if_small(spark, delta, delta_dirs),
-                    ["band", "bucket"],
-                ).select("vec_a", "vec_b")
-            )
-        return cands.distinct()
-    if has_committed_parquet(bands_dir):
-        stored = (
-            spark.read.parquet(bands_dir)
-            .where(F.col("batch") != F.lit(bkey))
-            .select(F.col("vec_id").alias("vec_b"), "band", "bucket")
-        )
-        return (
-            bb.join(stored, ["band", "bucket"])
-            .select("vec_a", "vec_b")
-            .distinct()
-        )
-    return None
+    """The embedding candidate probe: tonight's band rows ``bb``
+    (vec_a, band, bucket) equi-joined against every serving tier of
+    the bucket index at ``bands_dir`` (:func:`_serving_tiers`).
+    Returns distinct (vec_a, vec_b) pairs, or None when no stored
+    bands exist yet. The exact cosine rescore stays the caller's job
+    (it needs the vectors leg)."""
+    tiers = _serving_tiers(spark, bands_dir, "embband", exclude)
+    if not tiers:
+        return None
+    return reduce(
+        DataFrame.unionByName,
+        [
+            bb.join(
+                t.select(F.col("vec_id").alias("vec_b"), "band", "bucket"),
+                ["band", "bucket"],
+            ).select("vec_a", "vec_b")
+            for t in tiers
+        ],
+    ).distinct()
 
 
 def _serving_bench_state(
@@ -4854,16 +4681,11 @@ def _serving_bench_state(
             )
             _fold_3step(
                 spark,
-                tbl,
+                index_dir,
+                "grams",
                 ["b1"],
-                lambda: compact_gram_index_bucketed(
-                    spark,
-                    index_dir,
-                    tbl,
-                    paths=[os.path.join(index_dir, "batch=b1")],
-                    path=os.path.join(index_dir, "_base"),
-                ),
-                ledger_path=os.path.join(index_dir, "_base_folded"),
+                [os.path.join(index_dir, "batch=b1")],
+                os.path.join(index_dir, "_base"),
             )
             _write_serving_fingerprint(index_dir)
         finally:
@@ -5020,321 +4842,15 @@ def substring_serving_tiered(
 ) -> DataFrame:
     """Headline PRODUCTION serving shape: the same probe as
     :func:`substring_serving_flat` over the same stored state, served
-    through :func:`incremental_span_rows_production` — fold ledger
-    consulted, b1 entering via the bucketed co-located base (no
+    through the serving ladder (:func:`_gram_cross_spans`) — fold
+    ledger consulted, b1 entering via the bucketed co-located base (no
     Exchange on the index side), b2 riding the broadcast delta tier.
     Identical results, different physical plan: the bench pair IS the
     serving win, budget-gated."""
-    index_dir, tbl = _serving_bench_state(spark, sf_dir)
+    index_dir, _ = _serving_bench_state(spark, sf_dir)
     docs = _docs(spark, sf_dir)
     batch = docs.where(F.col("doc_id") % INCR_BATCH_MOD == 0)
-    return incremental_span_rows_production(
-        spark, batch, index_dir, tbl
-    )
-
-
-def compact_minhash_band_index_bucketed(
-    spark: SparkSession,
-    sig_index_dir: str,
-    table: str,
-    num_buckets: int = GRAM_INDEX_BUCKETS,
-    path: str | None = None,
-    paths: list[str] | None = None,
-) -> None:
-    """MinHash sibling of :func:`compact_gram_index_bucketed`: derive
-    the band-key table ``(doc_id, band_id, band_hash)`` from the
-    nightly per-batch SIGNATURE partitions once, and write it as a
-    catalog table bucketed (and bucket-sorted) on the join key
-    ``(band_id, band_hash)``. The nightly candidate probe
-    (:func:`minhash_incremental_candidates_colocated`) then equi-joins
-    tonight's batch band keys against it with NO Exchange on the index
-    side — at 100 TB the corpus band table (n_bands rows/doc) never
-    moves; the weekly compactor pays its shuffle once and also
-    amortizes the per-night band derivation the signature-shaped
-    index forces on every probe. ``paths`` restricts the fold to the
-    ledger-committed partitions (ADVICE r10, see the gram sibling)."""
-    from mpi_mapreduce_spark.sources.io import write_bucketed
-
-    src = (
-        spark.read.parquet(*paths)
-        if paths is not None
-        else spark.read.parquet(sig_index_dir)
-    )
-    sig = src.select(
-        "doc_id", *[f"mh{i}" for i in range(MINHASH_HASHES)]
-    )
-    write_bucketed(
-        minhash_band_keys(sig),
-        table,
-        num_buckets,
-        ["band_id", "band_hash"],
-        sort_cols=["band_id", "band_hash"],
-        path=path,
-    )
-
-
-def minhash_incremental_candidates_colocated(
-    spark: SparkSession, batch: DataFrame, table: str
-) -> DataFrame:
-    """Batch-vs-corpus candidate pairs ``(doc_b = batch id, doc_c =
-    corpus id)`` served from the CO-LOCATED band table
-    (:func:`compact_minhash_band_index_bucketed`): only the batch's
-    band keys shuffle to the bucket layout — plan-asserted in
-    tests/test_dedup.py, result-identical to the flat band join."""
-    from mpi_mapreduce_spark.sources.io import read_bucketed
-
-    bands_b = minhash_band_keys(
-        minhash_signature_table(shingle_rows(batch))
-    ).select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
-    bands_c = read_bucketed(spark, table).select(
-        F.col("doc_id").alias("doc_c"), "band_id", "band_hash"
-    )
-    return (
-        bands_b.join(bands_c, ["band_id", "band_hash"])
-        .select("doc_b", "doc_c")
-        .distinct()
-    )
-
-
-def weekly_minhash_compaction(
-    spark: SparkSession,
-    sig_index_dir: str,
-    table: str,
-    ledger_dir: str,
-    num_buckets: int = GRAM_INDEX_BUCKETS,
-    path: str | None = None,
-) -> int:
-    """MinHash sibling of :func:`weekly_gram_compaction`: fold every
-    LEDGER-COMMITTED per-batch SIGNATURE partition into the
-    co-located band table + fold ledger (same three-step crash
-    protocol via :func:`_fold_3step`; same ADVICE-r10 rule — crashed
-    partials are never folded, legacy ledgers fold nothing). Returns
-    the folded partition count."""
-    keys, paths = _committed_partitions(spark, sig_index_dir, ledger_dir)
-    if not keys:
-        return 0
-    return _fold_3step(
-        spark,
-        table,
-        keys,
-        lambda: compact_minhash_band_index_bucketed(
-            spark,
-            sig_index_dir,
-            table,
-            num_buckets=num_buckets,
-            path=path,
-            paths=paths,
-        ),
-        ledger_path=f"{path}_folded" if path else None,
-    )
-
-
-def minhash_incremental_candidates_production(
-    spark: SparkSession, batch: DataFrame, sig_index_dir: str, table: str
-) -> DataFrame:
-    """Production candidate serving for the MinHash modality:
-    batch-vs-corpus candidate pairs ``(doc_b, doc_c)`` with the corpus
-    entered through the co-located band table for FOLDED signature
-    partitions and a broadcast band derivation for the post-compaction
-    deltas; degrades to the flat whole-index band join when no valid
-    compaction exists (same ladder as the gram loop). Tier results
-    union + distinct — a pair co-banding in both tiers dedups."""
-    sig_cols = ["doc_id"] + [f"mh{i}" for i in range(MINHASH_HASHES)]
-    bands_b = minhash_band_keys(
-        minhash_signature_table(shingle_rows(batch))
-    ).select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
-
-    folded, all_parts = _fold_state(spark, sig_index_dir, table)
-    if not folded:
-        bands_c = minhash_band_keys(
-            spark.read.parquet(sig_index_dir).select(*sig_cols)
-        ).select(F.col("doc_id").alias("doc_c"), "band_id", "band_hash")
-        return (
-            bands_b.join(bands_c, ["band_id", "band_hash"])
-            .select("doc_b", "doc_c")
-            .distinct()
-        )
-    from mpi_mapreduce_spark.sources.io import read_bucketed
-
-    base = read_bucketed(spark, table).select(
-        F.col("doc_id").alias("doc_c"), "band_id", "band_hash"
-    )
-    delta_dirs = [p for k, p in sorted(all_parts.items()) if k not in folded]
-    if not delta_dirs:
-        return (
-            bands_b.join(base, ["band_id", "band_hash"])
-            .select("doc_b", "doc_c")
-            .distinct()
-        )
-    delta_bands = minhash_band_keys(
-        spark.read.parquet(*delta_dirs).select(*sig_cols)
-    ).select(F.col("doc_id").alias("doc_c"), "band_id", "band_hash")
-    # batch band keys feed both tier joins: materialize once (the
-    # round-10 tiered-probe lesson, SCALING.md)
-    bands_b = bands_b.localCheckpoint()
-    return (
-        bands_b.join(base, ["band_id", "band_hash"])
-        .select("doc_b", "doc_c")
-        .unionByName(
-            bands_b.join(
-                _broadcast_if_small(spark, delta_bands, delta_dirs),
-                ["band_id", "band_hash"],
-            ).select("doc_b", "doc_c")
-        )
-        .distinct()
-    )
-
-
-def compact_embedding_band_index_bucketed(
-    spark: SparkSession,
-    band_index_dir: str,
-    table: str,
-    num_buckets: int = GRAM_INDEX_BUCKETS,
-    path: str | None = None,
-    paths: list[str] | None = None,
-) -> None:
-    """Embedding sibling of :func:`compact_gram_index_bucketed`: the
-    nightly ``bands`` partitions (``vec_id, band, bucket`` — the
-    embedding_bucket_index artifact) compacted into a catalog table
-    bucketed (and bucket-sorted) on the join key ``(band, bucket)``,
-    so :func:`embedding_incremental_candidates` served through
-    :func:`embedding_incremental_candidates_colocated` moves only
-    tonight's batch band rows. ``paths`` restricts the fold to the
-    ledger-committed partitions (ADVICE r10, see the gram sibling)."""
-    from mpi_mapreduce_spark.sources.io import write_bucketed
-
-    src = (
-        spark.read.parquet(*paths)
-        if paths is not None
-        else spark.read.parquet(band_index_dir)
-    )
-    bands = src.select("vec_id", "band", "bucket")
-    write_bucketed(
-        bands,
-        table,
-        num_buckets,
-        ["band", "bucket"],
-        sort_cols=["band", "bucket"],
-        path=path,
-    )
-
-
-def embedding_incremental_candidates_colocated(
-    spark: SparkSession,
-    batch: DataFrame,
-    table: str,
-    dim: int,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> DataFrame:
-    """:func:`embedding_incremental_candidates` with ``corpus_bands``
-    read through the catalog so the bucketed scan's HashPartitioning
-    reaches the (band, bucket) equi-join — no Exchange on the index
-    side (plan-asserted in tests/test_dedup.py, result-identical to
-    the flat stored path)."""
-    from mpi_mapreduce_spark.sources.io import read_bucketed
-
-    return embedding_incremental_candidates(
-        batch,
-        corpus=None,
-        dim=dim,
-        band_bits=band_bits,
-        n_bands=n_bands,
-        corpus_bands=read_bucketed(spark, table).select(
-            "vec_id", "band", "bucket"
-        ),
-    )
-
-
-def weekly_embedding_compaction(
-    spark: SparkSession,
-    band_index_dir: str,
-    table: str,
-    ledger_dir: str,
-    num_buckets: int = GRAM_INDEX_BUCKETS,
-    path: str | None = None,
-) -> int:
-    """Embedding sibling of :func:`weekly_gram_compaction`: fold every
-    LEDGER-COMMITTED per-batch BANDS partition (the
-    embedding_bucket_index artifact's nightly appends) into the
-    co-located (band, bucket) table + fold ledger, same three-step
-    crash protocol and same ADVICE-r10 committed-only rule."""
-    keys, paths = _committed_partitions(spark, band_index_dir, ledger_dir)
-    if not keys:
-        return 0
-    return _fold_3step(
-        spark,
-        table,
-        keys,
-        lambda: compact_embedding_band_index_bucketed(
-            spark,
-            band_index_dir,
-            table,
-            num_buckets=num_buckets,
-            path=path,
-            paths=paths,
-        ),
-        ledger_path=f"{path}_folded" if path else None,
-    )
-
-
-def embedding_incremental_candidates_production(
-    spark: SparkSession,
-    batch: DataFrame,
-    band_index_dir: str,
-    table: str,
-    dim: int,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> DataFrame:
-    """Production candidate serving for the embedding modality — same
-    ladder as the gram and MinHash loops: co-located base for folded
-    bands partitions, broadcast for post-compaction deltas, flat
-    whole-index join when no valid compaction exists."""
-    bb = embedding_band_rows(batch, dim, band_bits, n_bands).select(
-        F.col("vec_id").alias("vec_a"), "band", "bucket"
-    )
-
-    def _cands(corpus_bands: DataFrame) -> DataFrame:
-        bc = corpus_bands.select(
-            F.col("vec_id").alias("vec_b"), "band", "bucket"
-        )
-        return (
-            bb.join(bc, ["band", "bucket"]).select("vec_a", "vec_b")
-        )
-
-    folded, all_parts = _fold_state(spark, band_index_dir, table)
-    if not folded:
-        return _cands(
-            spark.read.parquet(band_index_dir).select(
-                "vec_id", "band", "bucket"
-            )
-        ).distinct()
-    from mpi_mapreduce_spark.sources.io import read_bucketed
-
-    base = read_bucketed(spark, table).select("vec_id", "band", "bucket")
-    delta_dirs = [p for k, p in sorted(all_parts.items()) if k not in folded]
-    if not delta_dirs:
-        return _cands(base).distinct()
-    deltas = spark.read.parquet(*delta_dirs).select(
-        "vec_id", "band", "bucket"
-    )
-    bb = bb.localCheckpoint()  # feeds both tier joins
-    base_side = bb.join(
-        base.select(F.col("vec_id").alias("vec_b"), "band", "bucket"),
-        ["band", "bucket"],
-    ).select("vec_a", "vec_b")
-    delta_side = bb.join(
-        _broadcast_if_small(
-            spark,
-            deltas.select(
-                F.col("vec_id").alias("vec_b"), "band", "bucket"
-            ),
-            delta_dirs,
-        ),
-        ["band", "bucket"],
-    ).select("vec_a", "vec_b")
-    return base_side.unionByName(delta_side).distinct()
+    return _gram_cross_spans(spark, batch, index_dir)
 
 
 def dedup_incremental_substring(
@@ -5471,7 +4987,7 @@ def _nightly_substring_core(
     grams under ``batch=<bkey>``, return eager spans."""
     import os
 
-    spans = _gram_cross_spans(spark, batch, bkey, index_dir)
+    spans = _gram_cross_spans(spark, batch, index_dir, exclude=bkey)
     spans = spans.localCheckpoint()
     substring_gram_index_rows(batch).write.mode("overwrite").parquet(
         os.path.join(index_dir, f"batch={bkey}")

@@ -47,6 +47,19 @@ STATE_SUBDIRS = {
     "ann_lsh": "ann_lsh",
 }
 
+#: the stored indexes the weekly compaction folds, as (timing leg,
+#: index dir under state_dir, serving family of dedup._INDEX_FAMILIES);
+#: each leg's bucketed base lives under ``state_dir/serving/<leg>``
+COMPACTED_INDEXES = (
+    ("substring", STATE_SUBDIRS["grams"], "grams"),
+    ("minhash", STATE_SUBDIRS["minhash"], "mhband"),
+    (
+        "embedding",
+        os.path.join(STATE_SUBDIRS["embedding"], "bands"),
+        "embband",
+    ),
+)
+
 
 def nightly_curation_update(
     spark: SparkSession,
@@ -198,21 +211,22 @@ def weekly_curation_compaction(
     timings: dict[str, float] | None = None,
 ) -> dict[str, int]:
     """The composite's WEEKLY maintenance twin (VERDICT r10 item 1):
-    fold each heavy stored-index family — substring gram vocabulary,
-    MinHash band table, embedding bucket index — into its bucketed
-    co-located serving base + catalog fold ledger, so every subsequent
-    :func:`nightly_curation_update` probes two-tier (base co-located
-    and never re-shuffled, post-compaction partitions broadcast as
-    deltas) instead of flat. Scheduling contract: run this weekly (or
-    whenever the delta partition count grows past a handful); the
-    nightly composite NEVER requires it — each leg's probe degrades to
-    the flat shape whenever no valid compaction exists, per the
-    three-step crash ladder documented on
-    :func:`~mpi_mapreduce_spark.operators.dedup.weekly_gram_compaction`.
+    fold each heavy stored-index family of :data:`COMPACTED_INDEXES`
+    — substring gram vocabulary, MinHash band table, embedding bucket
+    index — into its bucketed co-located serving base + catalog fold
+    ledger, so every subsequent :func:`nightly_curation_update` probes
+    two-tier (base co-located and never re-shuffled, post-compaction
+    partitions broadcast as deltas) instead of flat. Scheduling
+    contract: run this weekly (or whenever the delta partition count
+    grows past a handful); the nightly composite NEVER requires it —
+    each leg's probe degrades to the flat shape whenever no valid
+    compaction exists, per the serving ladder documented on
+    :func:`~mpi_mapreduce_spark.operators.dedup._serving_tiers`.
 
-    Only LEDGER-COMMITTED partitions fold (ADVICE r10): a crashed
-    night's partial must never enter a base the replay will probe.
-    Serving table names are derived from each index path
+    Only LEDGER-COMMITTED partitions fold (ADVICE r10, see
+    :func:`~mpi_mapreduce_spark.operators.dedup.weekly_index_compaction`):
+    a crashed night's partial must never enter a base the replay will
+    probe. Serving table names are derived from each index path
     (dedup._serving_table) — the same derivation the nightly cores
     use — and the base files live under ``state_dir/serving/<leg>``,
     keeping the whole loop's state inside ``state_dir``.
@@ -223,47 +237,19 @@ def weekly_curation_compaction(
     seconds (the SCALING.md harness contract)."""
     import time as _time
 
-    from mpi_mapreduce_spark.operators.dedup import (
-        _serving_table,
-        weekly_embedding_compaction,
-        weekly_gram_compaction,
-        weekly_minhash_compaction,
-    )
+    from mpi_mapreduce_spark.operators.dedup import weekly_index_compaction
 
     ledger = os.path.join(state_dir, LEDGER_SUBDIR)
-    serving = os.path.join(state_dir, "serving")
-    grams_dir = os.path.join(state_dir, STATE_SUBDIRS["grams"])
-    sig_dir = os.path.join(state_dir, STATE_SUBDIRS["minhash"])
-    emb_bands_dir = os.path.join(
-        state_dir, STATE_SUBDIRS["embedding"], "bands"
-    )
-    jobs = {
-        "substring": lambda: weekly_gram_compaction(
-            spark,
-            grams_dir,
-            _serving_table(grams_dir, "grams"),
-            ledger,
-            path=os.path.join(serving, "grams"),
-        ),
-        "minhash": lambda: weekly_minhash_compaction(
-            spark,
-            sig_dir,
-            _serving_table(sig_dir, "mhband"),
-            ledger,
-            path=os.path.join(serving, "minhash"),
-        ),
-        "embedding": lambda: weekly_embedding_compaction(
-            spark,
-            emb_bands_dir,
-            _serving_table(emb_bands_dir, "embband"),
-            ledger,
-            path=os.path.join(serving, "embedding"),
-        ),
-    }
     out: dict[str, int] = {}
-    for leg, job in jobs.items():
+    for leg, sub, family in COMPACTED_INDEXES:
         t0 = _time.perf_counter()
-        out[leg] = job()
+        out[leg] = weekly_index_compaction(
+            spark,
+            os.path.join(state_dir, sub),
+            family,
+            ledger,
+            os.path.join(state_dir, "serving", leg),
+        )
         if timings is not None:
             timings[leg] = _time.perf_counter() - t0
     return out
@@ -280,37 +266,28 @@ def maybe_weekly_curation_compaction(
     ``max_deltas`` (default 7 — one week of nightly partitions, the
     point past which the broadcast-delta tier stops being 'a few
     small frames'). The count is a schedule trigger, not a safety
-    bound: the serving tiers themselves byte-gate their delta
-    broadcasts (dedup._broadcast_if_small, 256 MB on-disk cap) and
-    fall back to a plain shuffle join above it, so a week of unusually
-    fat nights degrades to correct-but-shuffled serving rather than
-    an oversized broadcast (ADVICE r12). A scheduler can simply call
-    this after every
+    bound: the serving ladder itself byte-gates its delta broadcast
+    (dedup.DELTA_BROADCAST_MAX_BYTES, 256 MB on-disk cap, see
+    dedup._serving_tiers) and falls back to a plain shuffle join
+    above it, so a week of unusually fat nights degrades to
+    correct-but-shuffled serving rather than an oversized broadcast
+    (ADVICE r12). A scheduler can simply call this after every
     :func:`nightly_curation_update` instead of maintaining its own
     calendar: no-op (returns None) while the delta tier is small, one
     fold when it isn't. Uncommitted partials never count as deltas
     (they are reconciliation's problem, not compaction's — and the
     fold itself only touches committed keys)."""
-    from mpi_mapreduce_spark.operators.dedup import (
-        _fold_state,
-        _serving_table,
-    )
+    from mpi_mapreduce_spark.operators.dedup import _fold_state
     from mpi_mapreduce_spark.sources.io import committed_batch_keys
 
     ledger = os.path.join(state_dir, LEDGER_SUBDIR)
     committed, legacy = committed_batch_keys(spark, ledger)
     if legacy:
         return None  # cannot prove anything committed: never compact
-    fams = (
-        (os.path.join(state_dir, STATE_SUBDIRS["grams"]), "grams"),
-        (os.path.join(state_dir, STATE_SUBDIRS["minhash"]), "mhband"),
-        (
-            os.path.join(state_dir, STATE_SUBDIRS["embedding"], "bands"),
-            "embband",
-        ),
-    )
-    for d, fam in fams:
-        folded, parts = _fold_state(spark, d, _serving_table(d, fam))
+    for _, sub, family in COMPACTED_INDEXES:
+        folded, parts = _fold_state(
+            spark, os.path.join(state_dir, sub), family
+        )
         deltas = [
             k for k in parts if k not in folded and k in committed
         ]

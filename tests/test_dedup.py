@@ -1664,509 +1664,275 @@ def test_substring_stored_gram_index_serving_matches_recomputed(
     assert via_stored == recomputed
 
 
-def test_substring_colocated_serving_shuffle_free_and_identical(
-    spark, sf_dir, tmp_path
-):
-    """The co-located serving layout (SCALING.md round-9 recipe, wired
-    in r10): compact the per-batch gram partitions into a table
-    bucketed on s, and (a) the probe semi join plans with NO Exchange
-    on the INDEX side — only the batch's grams shuffle to meet the
-    vocabulary, never the reverse — and (b) results are identical to
-    the plain stored path."""
-    from mpi_mapreduce_spark.operators.dedup import (
-        GRAM_INDEX_BUCKETS,
-        INCR_BATCH_MOD,
-        SPAN_N,
-        positional_ngram_rows,
-    )
-    from mpi_mapreduce_spark.sources.io import read_bucketed
+def _serving_case(spark, sf_dir, family, idx):
+    """Per-family pieces of the serving-ladder test: ``write(key, m)``
+    persists the corpus share ``id % 3 == m`` as index partition
+    ``batch=<key>``; ``probe()`` is the family's nightly probe over
+    ``idx`` (as the serving queries call it, no exclusion); ``flat()``
+    is an independent reference over every partition in ``idx``."""
+    if family == "embband":
+        emb = D._normalized_embeddings(spark, sf_dir)
+        batch = emb.where(F.col("vec_id") % D.INCR_BATCH_MOD == 0)
+        corpus = emb.where(F.col("vec_id") % D.INCR_BATCH_MOD != 0)
+        # the nightly core passes checkpointed band rows
+        bb = D.embedding_band_rows(batch, dim=64).localCheckpoint()
 
-    # nightly layout: two batch partitions of the corpus vocabulary
-    docs = D._docs(spark, sf_dir)
-    corpus = docs.where(F.col("doc_id") % INCR_BATCH_MOD != 0)
-    idx = str(tmp_path / "gram_index")
-    D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 2 == 0)
-    ).write.parquet(idx + "/batch=b1")
-    D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 2 == 1)
-    ).write.parquet(idx + "/batch=b2")
+        def write(key, m):
+            D.embedding_band_rows(
+                corpus.where(F.col("vec_id") % 3 == m), dim=64
+            ).write.parquet(f"{idx}/batch={key}")
 
-    try:
-        D.compact_gram_index_bucketed(
-            spark, idx, "b_gram_vocab", path=str(tmp_path / "b_vocab")
-        )
-        batch = docs.where(F.col("doc_id") % INCR_BATCH_MOD == 0)
-
-        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            # (a) the probe's plan: bucketed index scan, one Exchange
-            # total (the batch side), semi join merge
-            occ = positional_ngram_rows(batch, SPAN_N).where(
-                F.col("glen") == SPAN_N
-            )
-            seen = read_bucketed(spark, "b_gram_vocab").select("s")
-            probe = occ.join(seen, "s", "left_semi")
-            plan = probe._jdf.queryExecution().executedPlan().toString()
-            # occ is a Union of two gram branches, so the probe plans
-            # as one semi join PER branch; the co-location claim is
-            # per-join: exactly ONE Exchange on s per SortMergeJoin
-            # (the batch side) — the index side reads the bucketed
-            # scan directly
-            n_smj = plan.count("SortMergeJoin")
-            assert n_smj >= 1 and "LeftSemi" in plan, plan
-            assert plan.count("Exchange hashpartitioning(s#") == n_smj, plan
-            assert "Bucketed: true" in plan, plan
-            assert (
-                f"SelectedBucketsCount: {GRAM_INDEX_BUCKETS} out of "
-                f"{GRAM_INDEX_BUCKETS}"
-            ) in plan, plan
-            # differential: the plain (non-bucketed) stored path pays
-            # TWO s-Exchanges per join — one per side
-            flat = occ.join(
-                spark.read.parquet(idx).select("s"), "s", "left_semi"
-            )
-            fplan = flat._jdf.queryExecution().executedPlan().toString()
-            assert (
-                fplan.count("Exchange hashpartitioning(s#") == 2 * n_smj
-            ), fplan
-
-            # (b) identical results to the plain stored path
-            via_coloc = {
-                tuple(r)
-                for r in D.incremental_span_rows_colocated(
-                    spark, batch, "b_gram_vocab"
-                ).collect()
-            }
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        via_stored = {
-            tuple(r)
-            for r in D.incremental_span_rows(
-                batch, corpus_grams=spark.read.parquet(idx).select("s")
-            ).collect()
-        }
-        assert via_coloc == via_stored and via_coloc
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_gram_vocab")
-
-
-def test_substring_tiered_serving_matches_flat_union(
-    spark, sf_dir, tmp_path
-):
-    """Two-tier gram serving (bucketed weekly base + broadcast
-    post-compaction deltas) equals the flat probe over the union
-    vocabulary, and the plan keeps the base side bucket-co-located
-    while the delta side rides a broadcast."""
-    docs = D._docs(spark, sf_dir)
-    corpus = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD != 0)
-    batch = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD == 0)
-    # base = even corpus docs (compacted); delta = odd corpus docs
-    # (landed since the last compaction)
-    base_grams = D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 2 == 0)
-    )
-    delta_grams = D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 2 == 1)
-    )
-    try:
-        from mpi_mapreduce_spark.sources.io import write_bucketed
-
-        write_bucketed(
-            base_grams, "b_gram_base", D.GRAM_INDEX_BUCKETS, ["s"],
-            sort_cols=["s"], path=str(tmp_path / "b_base"),
-        )
-        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            tiered = D.incremental_span_rows_tiered(
-                spark, batch, "b_gram_base", deltas=delta_grams
-            )
-            plan = tiered._jdf.queryExecution().executedPlan().toString()
-            assert "Bucketed: true" in plan, plan
-            assert "BroadcastHashJoin" in plan, plan  # the delta tier
-            got = {tuple(r) for r in tiered.collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        flat = {
-            tuple(r)
-            for r in D.incremental_span_rows(
-                batch,
-                corpus_grams=base_grams.unionByName(delta_grams),
-            ).collect()
-        }
-        assert got == flat and got
-        # base-only (no deltas) degenerates to the co-located path
-        base_only = {
-            tuple(r)
-            for r in D.incremental_span_rows_tiered(
-                spark, batch, "b_gram_base"
-            ).collect()
-        }
-        coloc = {
-            tuple(r)
-            for r in D.incremental_span_rows_colocated(
-                spark, batch, "b_gram_base"
-            ).collect()
-        }
-        assert base_only == coloc
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_gram_base")
-
-
-def test_weekly_gram_compaction_production_serving(spark, sf_dir, tmp_path):
-    """The scheduled compaction + production serving loop: fold the
-    current partitions into the base + fold ledger; serving derives
-    the delta set automatically; a post-compaction partition rides the
-    broadcast tier; a compaction crash (empty fold ledger) degrades to
-    the flat probe — identical results at every stage."""
-    docs = D._docs(spark, sf_dir)
-    corpus = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD != 0)
-    batch = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD == 0)
-    idx = str(tmp_path / "gram_index")
-    ledger = str(tmp_path / "ledger")
-    D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 3 == 0)
-    ).write.parquet(idx + "/batch=b1")
-    D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 3 == 1)
-    ).write.parquet(idx + "/batch=b2")
-    _commit_keys(spark, tmp_path, ledger, "b1", "b2")
-
-    def spans(df):
-        return {tuple(r) for r in df.collect()}
-
-    try:
-        # before any compaction: flat over everything
-        flat_2 = spans(
-            D.incremental_span_rows(
-                batch, corpus_grams=spark.read.parquet(idx).select("s")
-            )
-        )
-        assert (
-            spans(
-                D.incremental_span_rows_production(
-                    spark, batch, idx, "b_prod_vocab"
-                )
-            )
-            == flat_2
-        )
-
-        n = D.weekly_gram_compaction(
-            spark, idx, "b_prod_vocab", ledger, path=str(tmp_path / "b_prod")
-        )
-        assert n == 2
-        folded = {
-            r.batch_key for r in spark.table("b_prod_vocab_folded").collect()
-        }
-        assert folded == {"b1", "b2"}
-        # all partitions folded → colocated-only serving
-        assert (
-            spans(
-                D.incremental_span_rows_production(
-                    spark, batch, idx, "b_prod_vocab"
-                )
-            )
-            == flat_2
-        )
-
-        # a new nightly partition lands (and commits) after the
-        # compaction
-        D.substring_gram_index_rows(
-            corpus.where(F.col("doc_id") % 3 == 2)
-        ).write.parquet(idx + "/batch=b3")
-        _commit_keys(spark, tmp_path, ledger, "b3")
-        flat_3 = spans(
-            D.incremental_span_rows(
-                batch, corpus_grams=spark.read.parquet(idx).select("s")
-            )
-        )
-        prod = D.incremental_span_rows_production(
-            spark, batch, idx, "b_prod_vocab"
-        )
-        plan = prod._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan, plan
-        assert "BroadcastHashJoin" in plan, plan  # b3 as delta
-        assert spans(prod) == flat_3
-
-        # compaction crash between ledger-invalidate and base write:
-        # empty fold ledger → flat fallback over ALL partitions
-        spark.createDataFrame([], "batch_key string").write.mode(
-            "overwrite"
-        ).saveAsTable("b_prod_vocab_folded")
-        crashed = D.incremental_span_rows_production(
-            spark, batch, idx, "b_prod_vocab"
-        )
-        assert spans(crashed) == flat_3
-        assert "Bucketed: true" not in (
-            crashed._jdf.queryExecution().executedPlan().toString()
-        )
-
-        # re-run the compaction: idempotent, folds all three
-        assert (
-            D.weekly_gram_compaction(
+        def probe():
+            return D._embedding_cross_candidates(
                 spark,
+                bb.select(F.col("vec_id").alias("vec_a"), "band", "bucket"),
                 idx,
-                "b_prod_vocab",
-                ledger,
-                path=str(tmp_path / "b_prod2"),
             )
-            == 3
-        )
-        assert (
-            spans(
-                D.incremental_span_rows_production(
-                    spark, batch, idx, "b_prod_vocab"
-                )
+
+        def flat():
+            return D.embedding_incremental_candidates(
+                batch,
+                corpus=None,
+                dim=64,
+                corpus_bands=spark.read.parquet(idx).select(
+                    "vec_id", "band", "bucket"
+                ),
             )
-            == flat_3
-        )
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_prod_vocab")
-        spark.sql("DROP TABLE IF EXISTS b_prod_vocab_folded")
 
+        return write, probe, flat
 
-def test_weekly_minhash_compaction_production_serving(
-    spark, sf_dir, tmp_path
-):
-    """The MinHash production loop: compact signature partitions into
-    the band table + fold ledger; serving matches the flat band join
-    at every rung (pre-compaction, post-compaction, post-delta,
-    crashed ledger)."""
     docs = D._docs(spark, sf_dir)
-    corpus = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD != 0)
     batch = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD == 0)
-    idx = str(tmp_path / "sig_index")
-    ledger = str(tmp_path / "ledger")
-    for k, m in (("b1", 0), ("b2", 1)):
-        D.minhash_signature_table(
-            D.shingle_rows(corpus.where(F.col("doc_id") % 3 == m))
-        ).write.parquet(f"{idx}/batch={k}")
-    _commit_keys(spark, tmp_path, ledger, "b1", "b2")
+    corpus = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD != 0)
+    if family == "grams":
+
+        def write(key, m):
+            D.substring_gram_index_rows(
+                corpus.where(F.col("doc_id") % 3 == m)
+            ).write.parquet(f"{idx}/batch={key}")
+
+        def probe():
+            return D._gram_cross_spans(spark, batch, idx)
+
+        def flat():
+            return D.incremental_span_rows(
+                batch, corpus_grams=spark.read.parquet(idx).select("s")
+            )
+
+        return write, probe, flat
 
     sig_cols = ["doc_id"] + [f"mh{i}" for i in range(D.MINHASH_HASHES)]
+    # the nightly core passes band keys of checkpointed signatures
+    bands_b = D.minhash_band_keys(
+        D.minhash_signature_table(D.shingle_rows(batch)).localCheckpoint()
+    ).select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
+
+    def write(key, m):
+        D.minhash_signature_table(
+            D.shingle_rows(corpus.where(F.col("doc_id") % 3 == m))
+        ).write.parquet(f"{idx}/batch={key}")
+
+    def probe():
+        return D._minhash_cross_candidates(spark, bands_b, idx)
 
     def flat():
-        bands_b = D.minhash_band_keys(
-            D.minhash_signature_table(D.shingle_rows(batch))
-        ).select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
         bands_c = D.minhash_band_keys(
             spark.read.parquet(idx).select(*sig_cols)
         ).select(F.col("doc_id").alias("doc_c"), "band_id", "band_hash")
-        return {
-            tuple(r)
-            for r in bands_b.join(bands_c, ["band_id", "band_hash"])
+        return (
+            bands_b.join(bands_c, ["band_id", "band_hash"])
             .select("doc_b", "doc_c")
             .distinct()
-            .collect()
-        }
-
-    def prod():
-        return {
-            tuple(r)
-            for r in D.minhash_incremental_candidates_production(
-                spark, batch, idx, "b_mh_prod"
-            ).collect()
-        }
-
-    try:
-        flat_2 = flat()
-        assert prod() == flat_2  # pre-compaction fallback
-        assert (
-            D.weekly_minhash_compaction(
-                spark,
-                idx,
-                "b_mh_prod",
-                ledger,
-                path=str(tmp_path / "b_mh_prod"),
-            )
-            == 2
         )
-        assert prod() == flat_2  # all folded → colocated only
-        D.minhash_signature_table(
-            D.shingle_rows(corpus.where(F.col("doc_id") % 3 == 2))
-        ).write.parquet(f"{idx}/batch=b3")
-        assert prod() == flat()  # b3 rides the delta tier
-        spark.createDataFrame([], "batch_key string").write.mode(
-            "overwrite"
-        ).saveAsTable("b_mh_prod_folded")
-        assert prod() == flat()  # crashed ledger → flat fallback
+
+    return write, probe, flat
+
+
+def _serving_ladder(spark, sf_dir, tmp_path, monkeypatch, family, rungs):
+    """Walk the serving ladder of one stored index family and pin the
+    named ``rungs``, with results equal to the flat reference on every
+    rung walked:
+
+    - ``flat``: before any compaction the probe is flat — both join
+      sides shuffle on the key;
+    - the weekly compaction folds every committed partition (always
+      run and checked);
+    - ``base``: the probe then reads the bucketed base with ONE key
+      Exchange per join (the batch side) — the index never moves;
+    - ``delta``: a partition committed since rides a broadcast delta
+      tier;
+    - ``gate``: a plain shuffle join once the deltas outgrow the byte
+      cap;
+    - ``crash``: a compaction crash (empty fold ledger) falls back to
+      the flat probe and never reads the base; re-running the
+      compaction is idempotent and folds everything."""
+    idx = str(tmp_path / "index")
+    base = str(tmp_path / "base")
+    ledger = str(tmp_path / "ledger")
+    table = D._serving_table(idx, family)
+    key = D._INDEX_FAMILIES[family].keys[0]
+    buckets = D.GRAM_INDEX_BUCKETS
+    write, probe, flat = _serving_case(spark, sf_dir, family, idx)
+    write("b1", 0)
+    write("b2", 1)
+    _commit_keys(spark, tmp_path, ledger, "b1", "b2")
+
+    def rows(df):
+        return {tuple(r) for r in df.collect()}
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def key_exchanges(p):
+        return p.count(f"Exchange hashpartitioning({key}#")
+
+    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        flat_2 = rows(flat())
+        assert flat_2
+        if "flat" in rungs:
+            got = probe()
+            p = plan(got)
+            n_smj = p.count("SortMergeJoin")
+            assert n_smj >= 1 and "Bucketed: true" not in p, p
+            assert key_exchanges(p) == 2 * n_smj, p
+            assert rows(got) == flat_2
+
+        assert D.weekly_index_compaction(spark, idx, family, ledger, base) == 2
+        assert {
+            r.batch_key for r in spark.table(f"{table}_folded").collect()
+        } == {"b1", "b2"}
+        got = probe()
+        if "base" in rungs:
+            p = plan(got)
+            n_smj = p.count("SortMergeJoin")
+            assert n_smj >= 1, p
+            assert key_exchanges(p) == n_smj, p
+            assert "Bucketed: true" in p, p
+            assert f"SelectedBucketsCount: {buckets} out of {buckets}" in p, p
+        assert rows(got) == flat_2
+        if not {"delta", "gate", "crash"} & set(rungs):
+            return
+
+        write("b3", 2)
+        _commit_keys(spark, tmp_path, ledger, "b3")
+        flat_3 = rows(flat())
+        if "delta" in rungs:
+            got = probe()
+            p = plan(got)
+            assert "Bucketed: true" in p, p
+            assert "BroadcastHashJoin" in p, p
+            assert rows(got) == flat_3
+
+        if "gate" in rungs:
+            delta_dir = f"{idx}/batch=b3"
+            assert D._delta_dirs_small(spark, [delta_dir])
+            with monkeypatch.context() as m:
+                m.setattr(D, "DELTA_BROADCAST_MAX_BYTES", 1)
+                assert not D._delta_dirs_small(spark, [delta_dir])
+                assert D._delta_dirs_small(spark, [])
+                got = probe()
+                p = plan(got)
+                assert "Bucketed: true" in p, p
+                assert "BroadcastHashJoin" not in p, p
+                assert rows(got) == flat_3
+
+        if "crash" in rungs:
+            # compaction crash between ledger-invalidate and base write
+            spark.createDataFrame([], "batch_key string").write.mode(
+                "overwrite"
+            ).option("path", f"{base}_folded").saveAsTable(f"{table}_folded")
+            got = probe()
+            assert "Bucketed: true" not in plan(got)
+            assert rows(got) == flat_3
+
+            assert (
+                D.weekly_index_compaction(spark, idx, family, ledger, base)
+                == 3
+            )
+            assert rows(probe()) == flat_3
     finally:
-        spark.sql("DROP TABLE IF EXISTS b_mh_prod")
-        spark.sql("DROP TABLE IF EXISTS b_mh_prod_folded")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        spark.sql(f"DROP TABLE IF EXISTS {table}_folded")
+
+
+def test_weekly_gram_compaction_production_serving(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The weekly gram compaction + production serving loop: flat
+    before, folded after, delta tier, crashed ledger, re-compaction."""
+    _serving_ladder(
+        spark, sf_dir, tmp_path, monkeypatch, "grams",
+        ("flat", "delta", "crash"),
+    )
+
+
+def test_weekly_minhash_compaction_production_serving(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The MinHash production loop, same ladder as the gram loop."""
+    _serving_ladder(
+        spark, sf_dir, tmp_path, monkeypatch, "mhband",
+        ("flat", "delta", "crash"),
+    )
 
 
 def test_weekly_embedding_compaction_production_serving(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The embedding production loop, same ladder as the MinHash and
-    gram loops."""
-    emb = D._normalized_embeddings(spark, sf_dir)
-    batch = emb.where(F.col("vec_id") % D.INCR_BATCH_MOD == 0)
-    corpus = emb.where(F.col("vec_id") % D.INCR_BATCH_MOD != 0)
-    idx = str(tmp_path / "band_index")
-    ledger = str(tmp_path / "ledger")
-    for k, m in (("b1", 0), ("b2", 1)):
-        D.embedding_band_rows(
-            corpus.where(F.col("vec_id") % 3 == m), dim=64
-        ).write.parquet(f"{idx}/batch={k}")
-    _commit_keys(spark, tmp_path, ledger, "b1", "b2")
+    """The embedding production loop, same ladder as the gram loop."""
+    _serving_ladder(
+        spark, sf_dir, tmp_path, monkeypatch, "embband",
+        ("flat", "delta", "crash"),
+    )
 
-    def flat():
-        return {
-            tuple(r)
-            for r in D.embedding_incremental_candidates(
-                batch,
-                corpus=None,
-                dim=64,
-                corpus_bands=spark.read.parquet(idx).select(
-                    "vec_id", "band", "bucket"
-                ),
-            ).collect()
-        }
 
-    def prod():
-        return {
-            tuple(r)
-            for r in D.embedding_incremental_candidates_production(
-                spark, batch, idx, "b_emb_prod", dim=64
-            ).collect()
-        }
-
-    try:
-        flat_2 = flat()
-        assert prod() == flat_2
-        assert (
-            D.weekly_embedding_compaction(
-                spark,
-                idx,
-                "b_emb_prod",
-                ledger,
-                path=str(tmp_path / "b_emb_prod"),
-            )
-            == 2
-        )
-        assert prod() == flat_2
-        D.embedding_band_rows(
-            corpus.where(F.col("vec_id") % 3 == 2), dim=64
-        ).write.parquet(f"{idx}/batch=b3")
-        assert prod() == flat()
-        spark.createDataFrame([], "batch_key string").write.mode(
-            "overwrite"
-        ).saveAsTable("b_emb_prod_folded")
-        assert prod() == flat()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_emb_prod")
-        spark.sql("DROP TABLE IF EXISTS b_emb_prod_folded")
+def test_substring_colocated_serving_shuffle_free_and_identical(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The compacted gram base is probed with no Exchange on the index
+    side, and its spans equal the flat probe's."""
+    _serving_ladder(spark, sf_dir, tmp_path, monkeypatch, "grams", ("base",))
 
 
 def test_minhash_colocated_candidates_shuffle_free_and_identical(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """MinHash sibling of the gram co-location pin: compact the
-    per-batch signature partitions into a band table bucketed on
-    (band_id, band_hash); the candidate equi-join then plans with the
-    batch side's Exchange only, and candidates equal the flat band
-    join's."""
-    docs = D._docs(spark, sf_dir)
-    corpus = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD != 0)
-    batch = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD == 0)
-    idx = str(tmp_path / "sig_index")
-    for k, half in (("b1", 0), ("b2", 1)):
-        D.minhash_signature_table(
-            D.shingle_rows(corpus.where(F.col("doc_id") % 2 == half))
-        ).write.parquet(f"{idx}/batch={k}")
-
-    try:
-        D.compact_minhash_band_index_bucketed(
-            spark, idx, "b_mh_bands", path=str(tmp_path / "b_mh")
-        )
-        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            cands = D.minhash_incremental_candidates_colocated(
-                spark, batch, "b_mh_bands"
-            )
-            plan = cands._jdf.queryExecution().executedPlan().toString()
-            n_smj = plan.count("SortMergeJoin")
-            assert n_smj >= 1, plan
-            assert (
-                plan.count("Exchange hashpartitioning(band_id#") == n_smj
-            ), plan
-            assert "Bucketed: true" in plan, plan
-            got = {tuple(r) for r in cands.collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        bands_b = D.minhash_band_keys(
-            D.minhash_signature_table(D.shingle_rows(batch))
-        ).select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
-        bands_c = D.minhash_band_keys(
-            spark.read.parquet(idx).select(
-                "doc_id", *[f"mh{i}" for i in range(D.MINHASH_HASHES)]
-            )
-        ).select(F.col("doc_id").alias("doc_c"), "band_id", "band_hash")
-        flat = {
-            tuple(r)
-            for r in bands_b.join(bands_c, ["band_id", "band_hash"])
-            .select("doc_b", "doc_c")
-            .distinct()
-            .collect()
-        }
-        assert got == flat and got
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_mh_bands")
+    """MinHash sibling of the gram co-location pin."""
+    _serving_ladder(
+        spark, sf_dir, tmp_path, monkeypatch, "mhband", ("base",)
+    )
 
 
 def test_embedding_colocated_candidates_shuffle_free_and_identical(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
-    """Embedding sibling: the bands artifact compacted into a table
-    bucketed on (band, bucket); candidate probe shuffle-free on the
-    index side and result-identical to the flat stored path."""
-    emb = D._normalized_embeddings(spark, sf_dir)
-    batch = emb.where(F.col("vec_id") % D.INCR_BATCH_MOD == 0)
-    corpus = emb.where(F.col("vec_id") % D.INCR_BATCH_MOD != 0)
-    idx = str(tmp_path / "band_index")
-    for k, half in (("b1", 0), ("b2", 1)):
-        D.embedding_band_rows(
-            corpus.where(F.col("vec_id") % 2 == half), dim=64
-        ).write.parquet(f"{idx}/batch={k}")
+    """Embedding sibling of the gram co-location pin."""
+    _serving_ladder(
+        spark, sf_dir, tmp_path, monkeypatch, "embband", ("base",)
+    )
 
-    try:
-        D.compact_embedding_band_index_bucketed(
-            spark, idx, "b_emb_bands", path=str(tmp_path / "b_emb")
+
+def test_substring_tiered_serving_matches_flat_union(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Two-tier gram serving (bucketed base + broadcast delta) equals
+    the flat probe over the union vocabulary."""
+    _serving_ladder(
+        spark, sf_dir, tmp_path, monkeypatch, "grams", ("delta",)
+    )
+
+
+def test_delta_broadcast_size_gate(spark, sf_dir, tmp_path, monkeypatch):
+    """The broadcast delta tier of every family is gated on the delta
+    partitions' on-disk bytes: above ``DELTA_BROADCAST_MAX_BYTES`` it
+    falls back to a plain shuffle join with the same results."""
+    for family in D._INDEX_FAMILIES:
+        _serving_ladder(
+            spark, sf_dir, tmp_path / family, monkeypatch, family, ("gate",)
         )
-        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            cands = D.embedding_incremental_candidates_colocated(
-                spark, batch, "b_emb_bands", dim=64
-            )
-            plan = cands._jdf.queryExecution().executedPlan().toString()
-            n_smj = plan.count("SortMergeJoin")
-            assert n_smj >= 1, plan
-            assert (
-                plan.count("Exchange hashpartitioning(band#") == n_smj
-            ), plan
-            assert "Bucketed: true" in plan, plan
-            got = {tuple(r) for r in cands.collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        flat = {
-            tuple(r)
-            for r in D.embedding_incremental_candidates(
-                batch,
-                corpus=None,
-                dim=64,
-                corpus_bands=spark.read.parquet(idx).select(
-                    "vec_id", "band", "bucket"
-                ),
-            ).collect()
-        }
-        assert got == flat and got
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_emb_bands")
 
 
 def test_incremental_span_rows_rejects_ambiguous_vocabulary(spark):
@@ -2494,60 +2260,6 @@ def test_serving_bench_state_halfwritten_and_lock(spark, sf_dir, tmp_path, monke
     t.join(5.0)
     assert not err, err
     assert D._serving_state_ok(spark, index_dir, tbl)
-
-
-def test_delta_broadcast_size_gate(spark, sf_dir, tmp_path, monkeypatch):
-    """ADVICE r12 (low): the broadcast-delta serving tier is gated on
-    the delta partitions' on-disk BYTES, not only the weekly policy's
-    delta COUNT — above the cap the tier falls back to a plain
-    shuffle join (same results, no 8 GB-broadcast / driver-heap
-    hazard at 100 TB)."""
-    docs = D._docs(spark, sf_dir)
-    corpus = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD != 0)
-    batch = docs.where(F.col("doc_id") % D.INCR_BATCH_MOD == 0)
-    delta_dir = str(tmp_path / "batch=bDELTA")
-    D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 2 == 1)
-    ).write.parquet(delta_dir)
-
-    # the gate itself: metadata-only, honest about the footprint
-    assert D._delta_dirs_small(spark, [delta_dir])
-    assert not D._delta_dirs_small(spark, [delta_dir], limit=1)
-    assert D._delta_dirs_small(spark, [])
-
-    base_grams = D.substring_gram_index_rows(
-        corpus.where(F.col("doc_id") % 2 == 0)
-    )
-    delta_grams = spark.read.parquet(delta_dir).select("s")
-    from mpi_mapreduce_spark.sources.io import write_bucketed
-
-    try:
-        write_bucketed(
-            base_grams, "b_gate_base", D.GRAM_INDEX_BUCKETS, ["s"],
-            sort_cols=["s"], path=str(tmp_path / "b_base"),
-        )
-        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            big = D.incremental_span_rows_tiered(
-                spark, batch, "b_gate_base", deltas=delta_grams,
-                broadcast_deltas=False,
-            )
-            plan = big._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastHashJoin" not in plan, plan
-            got = {tuple(r) for r in big.collect()}
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        flat = {
-            tuple(r)
-            for r in D.incremental_span_rows(
-                batch,
-                corpus_grams=base_grams.unionByName(delta_grams),
-            ).collect()
-        }
-        assert got == flat and got
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_gate_base")
 
 
 def test_serving_state_fingerprint_gate(spark, sf_dir, tmp_path, monkeypatch):

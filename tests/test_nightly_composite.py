@@ -442,16 +442,8 @@ def _drop_serving_tables(spark, state):
     """Drop the derived serving base + fold-ledger tables a test's
     weekly_curation_compaction created (names are path-hashed, so
     leaks would pile up in the shared warehouse)."""
-    pairs = (
-        (os.path.join(state, N.STATE_SUBDIRS["grams"]), "grams"),
-        (os.path.join(state, N.STATE_SUBDIRS["minhash"]), "mhband"),
-        (
-            os.path.join(state, N.STATE_SUBDIRS["embedding"], "bands"),
-            "embband",
-        ),
-    )
-    for d, fam in pairs:
-        t = D._serving_table(d, fam)
+    for _, sub, fam in N.COMPACTED_INDEXES:
+        t = D._serving_table(os.path.join(state, sub), fam)
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         spark.sql(f"DROP TABLE IF EXISTS {t}_folded")
 
@@ -514,7 +506,7 @@ def test_nightly_composite_two_tier_equals_flat_after_compaction(
             [(90, f"x-lead {SHARED} x-tail")], "doc_id long, text string"
         )
         plan = (
-            D._gram_cross_spans(spark, probe_docs, "bPROBE", grams_dir)
+            D._gram_cross_spans(spark, probe_docs, grams_dir, "bPROBE")
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -527,7 +519,7 @@ def test_nightly_composite_two_tier_equals_flat_after_compaction(
             D.minhash_signature_table(D.shingle_rows(probe_docs))
         ).select(F.col("doc_id").alias("doc_b"), "band_id", "band_hash")
         plan = (
-            D._minhash_cross_candidates(spark, bands_b, "bPROBE", sig_dir)
+            D._minhash_cross_candidates(spark, bands_b, sig_dir, "bPROBE")
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -545,13 +537,70 @@ def test_nightly_composite_two_tier_equals_flat_after_compaction(
             dim=PQ_M * PQ_SUBDIM,
         ).select(F.col("vec_id").alias("vec_a"), "band", "bucket")
         plan = (
-            D._embedding_cross_candidates(spark, bb, "bPROBE", emb_bands)
+            D._embedding_cross_candidates(spark, bb, emb_bands, "bPROBE")
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
         )
         assert "Bucketed: true" in plan, plan
         assert "BroadcastHashJoin" in plan, plan
+    finally:
+        _drop_serving_tables(spark, state)
+
+
+def test_nightly_composite_replay_on_two_tier_rung(spark, tmp_path):
+    """Crash replay on the two-tier serving rung: night 1, a weekly
+    compaction, then night 2 dies after every leg wrote its partitions
+    but before the ledger commit. The replay finds night 1 in the
+    bucketed base and tonight's own partitions on disk where a delta
+    would be — they must be excluded, or every replayed doc probes its
+    own rows and is flagged as a duplicate of itself. Decisions and
+    index state equal the crash-free night 2."""
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    ledger = os.path.join(state, N.LEDGER_SUBDIR)
+
+    _stage(
+        spark, tmp_path, batch, "n1.parquet",
+        docs=[(1, f"c-lead {SHARED} c-tail"), (2, "beta text two words")],
+        vecs=[(1, axis_vec(0)), (2, axis_vec(1))],
+    )
+    N.nightly_curation_update(spark, batch, state)
+    try:
+        folded = N.weekly_curation_compaction(spark, state)
+        assert folded == {"substring": 1, "minhash": 1, "embedding": 1}
+        ledger_night1 = str(tmp_path / "ledger_night1")
+        shutil.copytree(ledger, ledger_night1)
+
+        _stage(
+            spark, tmp_path, batch, "n2.parquet",
+            docs=[
+                (10, "beta text two words"),      # exact copy of doc 2
+                (11, f"b-pre {SHARED} b-post"),   # repeats night-1 passage
+                (12, "completely novel stuff here ok"),
+            ],
+            vecs=[(10, axis_vec(0, wiggle=0.04)), (11, axis_vec(2))],
+        )
+        ref, ref_files = N.nightly_curation_update(spark, batch, state)
+        ref_dec = _decisions(ref)
+        ref_rows = _state_rows(spark, state)
+
+        # roll back night 2's ledger commit: its partitions stay behind
+        shutil.rmtree(ledger)
+        shutil.copytree(ledger_night1, ledger)
+        got, files = N.nightly_curation_update(spark, batch, state)
+        assert sorted(files) == sorted(ref_files)
+        assert _decisions(got) == ref_dec
+        assert _state_rows(spark, state) == ref_rows
+        mh = {r.doc_id: r.is_near_dup for r in got["minhash"].collect()}
+        assert mh[10] is True and mh[12] is False
+        spans = {
+            r.doc_id: (r.span_start, r.span_end)
+            for r in got["substring"].collect()
+        }
+        assert spans.get(11) == (1, 10)
+        emb = {r.vec_id: r.keep for r in got["embedding"].collect()}
+        assert emb == {10: False, 11: True}
     finally:
         _drop_serving_tables(spark, state)
 
@@ -638,10 +687,9 @@ def test_weekly_compaction_legacy_ledger_folds_nothing(spark, tmp_path):
     spark.createDataFrame([("g1 g2 g3 g4 g5 g6 g7 g8",)], "s string").write.parquet(
         os.path.join(idx, "batch=bOLD")
     )
-    assert (
-        D.weekly_gram_compaction(spark, idx, "b_legacy_vocab", ledger) == 0
-    )
-    assert not spark.catalog.tableExists("b_legacy_vocab")
+    base = str(tmp_path / "base")
+    assert D.weekly_index_compaction(spark, idx, "grams", ledger, base) == 0
+    assert not spark.catalog.tableExists(D._serving_table(idx, "grams"))
 
 
 def test_maybe_weekly_compaction_policy(spark, tmp_path):

@@ -498,11 +498,13 @@ def time_substring_stored(scratch: str, mods: list[int]) -> None:
 
     from mpi_mapreduce_spark.operators import dedup as D
     from mpi_mapreduce_spark.session import get_spark
+    from mpi_mapreduce_spark.sources.io import record_ingested
 
     import tempfile
 
     spark = get_spark(app_name="mpi_mapreduce_spark-scale")
-    docs = spark.read.parquet(f"{scratch}/documents.parquet")
+    src = f"{scratch}/documents.parquet"
+    docs = spark.read.parquet(src)
     docs.count()  # session warm-up, outside every timing
     print(
         "| mod | index build+write (one-time) | compact-to-bucketed "
@@ -515,19 +517,21 @@ def time_substring_stored(scratch: str, mods: list[int]) -> None:
         idx_dir = tempfile.mkdtemp(prefix=f"gramidx_m{mod}_")
         t0 = time.perf_counter()
         D.substring_gram_index_rows(corpus).write.mode("overwrite").parquet(
-            idx_dir
+            os.path.join(idx_dir, "batch=b0")
         )
         build = time.perf_counter() - t0
         # co-located layout (round-10): pay the vocabulary shuffle
         # once in the weekly compactor, then the nightly probe's semi
-        # join moves only the batch's grams
-        tbl = f"b_gram_vocab_m{mod}"
+        # join moves only the batch's grams; the compactor folds only
+        # ledger-committed partitions, so commit the one partition
+        ledger = idx_dir + "_ledger"
+        record_ingested(spark, ledger, [src], batch_key="b0")
         bdir = tempfile.mkdtemp(prefix=f"gramidx_bkt_m{mod}_")
         t0 = time.perf_counter()
-        D.compact_gram_index_bucketed(spark, idx_dir, tbl, path=bdir)
+        D.weekly_index_compaction(spark, idx_dir, "grams", ledger, bdir)
         compact = time.perf_counter() - t0
         t0 = time.perf_counter()
-        nc = D.incremental_span_rows_colocated(spark, batch, tbl).count()
+        nc = D._gram_cross_spans(spark, batch, idx_dir).count()
         coloc = time.perf_counter() - t0
         stored = spark.read.parquet(idx_dir)
         t0 = time.perf_counter()
@@ -537,7 +541,9 @@ def time_substring_stored(scratch: str, mods: list[int]) -> None:
         n2 = D.incremental_span_rows(batch, corpus).count()
         inline = time.perf_counter() - t0
         assert n == n2 == nc, (n, n2, nc)
+        tbl = D._serving_table(idx_dir, "grams")
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}_folded")
         print(
             f"| {mod} | {build:.1f} s | {compact:.1f} s | {coloc:.1f} s "
             f"| {serve:.1f} s | {inline:.1f} s |  # {n} spans",
