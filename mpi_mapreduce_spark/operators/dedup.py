@@ -669,75 +669,26 @@ ORACLE_INCREMENTAL_MINHASH_VALIDATE = f"""
 EST_JACCARD_MIN_MATCHES = MINHASH_HASHES // 2
 
 
-def nightly_dedup_update(
-    spark: SparkSession, src_dir: str, ledger_dir: str, index_dir: str
-):
-    """The production nightly dedup job, composed end-to-end from the
-    pieces the registry tests separately: the ingest LEDGER picks up
-    only tonight's new document files, each new doc is flagged against
-    the persisted SIGNATURE INDEX (band-key candidates, then
-    signature-estimated Jaccard — the corpus is never re-read, only
-    its 32-longs/doc index) AND against the rest of tonight's batch
-    (a band self-join of the new signatures, keep-first: the lower
-    doc_id of an intra-batch near-dup pair keeps, the higher drops —
-    without this, two near-identical docs arriving the same night
-    would both persist forever, since the ledger never re-examines
-    their files).
-
-    Crash-replay safety: the index write is KEYED by a deterministic
-    batch id (``batch=b<sha256 of the sorted file list>``) and written
-    with overwrite, so a crash between the index write and the ledger
-    commit replays the night with an overwrite, never a duplicate
-    append; and the match side EXCLUDES tonight's own partition, so a
-    replayed batch can never match its own persisted signatures (which
-    would flip every replayed doc to 32/32-self-match = drop). The
-    ledger is still committed LAST (sources/io.py protocol).
-
-    Returns (decisions DataFrame — doc_id, is_near_dup, keep — or
-    None when nothing is new, list of ingested files). Decisions are
-    eagerly materialized BEFORE the index write; with the partition
-    exclusion this is belt-and-braces, not load-bearing."""
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    decisions = _nightly_minhash_core(spark, batch, bkey, index_dir)
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return decisions, files
-
-
-def _batch_key(files: list[str]) -> str:
-    """Deterministic batch id over the ingested file list ("b" prefix
-    keeps partition-value inference from ever parsing an all-digit
-    hash as a number) — shared by every nightly leg and by the
-    composed nightly_curation_update (which keys each modality's legs
-    by that modality's OWN file list, so a replay rewrites the same
-    partitions and a new file in one modality can't change the other
-    modality's key; changed-file-set replays are handled by ledger
-    reconciliation, sources/io.py reconcile_batch_partitions)."""
-    import hashlib
-
-    return (
-        "b"
-        + hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()[:16]
-    )
-
-
 def _nightly_minhash_core(
     spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
 ) -> DataFrame:
-    """The ledger-free body of :func:`nightly_dedup_update`: flag
-    ``batch`` against the stored signature index + itself, append
-    tonight's signatures under ``batch=<bkey>``, return eager
-    decisions. Factored out so nightly_curation_update runs every leg
-    against ONE ingested batch with ONE ledger commit."""
+    """The MinHash leg of :func:`~mpi_mapreduce_spark.operators.
+    nightly.nightly_curation_update` (ledger, batch key and crash
+    replay are the composite's): flag each doc of ``batch`` against
+    the stored SIGNATURE INDEX (band-key candidates, then
+    signature-estimated Jaccard — the corpus is never re-read, only
+    its 32-longs/doc index) AND against the rest of tonight's batch (a
+    band self-join of the new signatures, keep-first: the lower doc_id
+    of an intra-batch near-dup pair keeps, the higher drops — without
+    this, two near-identical docs arriving the same night would both
+    persist forever, since the ledger never re-examines their files);
+    append tonight's signatures under ``batch=<bkey>``.
+
+    The match side EXCLUDES tonight's own partition, so a replayed
+    batch can never match its own persisted signatures (which would
+    flip every replayed doc to 32/32-self-match = drop). Returns eager
+    decisions — doc_id, is_near_dup, keep — materialized BEFORE the
+    index write."""
     import os
 
     # one batch-sized materialization: signatures feed the index write,
@@ -1326,58 +1277,32 @@ def dedup_incremental_screened(
     return dedup_against_corpus(batch, corpus, exact_candidates=survivors)
 
 
-def nightly_bloom_update(
-    spark: SparkSession, src_dir: str, ledger_dir: str, index_dir: str
-):
-    """The MEMBERSHIP leg of the nightly family (one callable per
-    modality: text signatures, embedding buckets, IVF cells, and this
-    filter — a scheduler runs whichever the deployment needs): the
-    ingest LEDGER picks up only tonight's new ``(doc_id, text)``
-    files; each doc is screened against the stored corpus filter
-    (OR-merge of every prior batch partition — k probe-bit lookups,
-    never a corpus scan) and exact-checked against earlier docs in
-    tonight's own batch (keep-first on doc_id); tonight's per-batch
-    filter is appended under ``batch=<bkey>``; the ledger commits
-    LAST (sources/io.py protocol).
-
-    This leg's append is the cheapest of the four: a batch's filter
-    is ≤ m/32 rows regardless of batch size, and because bit_or is
-    idempotent/associative the serving merge over any set of batch
-    partitions equals the filter built over their docs in one pass
-    (pytest-pinned across nights). Crash-replay safety as in the
-    siblings: the partition write is keyed by the deterministic batch
-    id and overwritten, and the serving merge EXCLUDES tonight's own
-    partition — without that, every replayed doc would probe its own
-    persisted bits and flip bloom_seen to True.
-
-    Returns (decisions DataFrame — doc_id, bloom_seen (possibly-seen:
-    route to the exact verify), seen_in_batch (exact text already
-    arrived tonight under a lower doc_id), novel (neither — skip the
-    exact join entirely, the whole point of the screen) — or None
-    when nothing is new, list of ingested files)."""
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    decisions = _nightly_bloom_core(spark, batch, bkey, index_dir)
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return decisions, files
-
-
 def _nightly_bloom_core(
     spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
 ) -> DataFrame:
-    """The ledger-free body of :func:`nightly_bloom_update` (see the
-    wrapper for the full contract) — screen ``batch`` against the
-    stored filter, append tonight's per-batch filter under
-    ``batch=<bkey>``, return eager decisions."""
+    """The Bloom MEMBERSHIP leg of :func:`~mpi_mapreduce_spark.
+    operators.nightly.nightly_curation_update` (ledger, batch key and
+    crash replay are the composite's): screen each doc of ``batch``
+    against the stored corpus filter (OR-merge of every prior batch
+    partition — k probe-bit lookups, never a corpus scan) and
+    exact-check it against earlier docs in tonight's own batch
+    (keep-first on doc_id); append tonight's per-batch filter under
+    ``batch=<bkey>``.
+
+    The cheapest append of the family: a batch's filter is ≤ m/32 rows
+    regardless of batch size, and because bit_or is
+    idempotent/associative the serving merge over any set of batch
+    partitions equals the filter built over their docs in one pass
+    (pytest-pinned across nights). The serving merge EXCLUDES
+    tonight's own partition — without that, every replayed doc would
+    probe its own persisted bits and flip bloom_seen to True. A
+    valid-but-empty file is consumed with empty decisions and no
+    append.
+
+    Returns eager decisions — doc_id, bloom_seen (possibly-seen: route
+    to the exact verify), seen_in_batch (exact text already arrived
+    tonight under a lower doc_id), novel (neither — skip the exact
+    join entirely, the whole point of the screen)."""
     import os
 
     from mpi_mapreduce_spark.sources.io import has_committed_parquet
@@ -2460,8 +2385,8 @@ def embedding_incremental_candidates(
 
     ``corpus_bands`` is the STORED index path: a caller holding the
     persisted ``(vec_id, band, bucket)`` table (the
-    embedding_bucket_index artifact, maintained nightly by
-    nightly_embedding_dedup_update) passes it here and the corpus
+    embedding_bucket_index artifact, maintained by the nightly
+    composite's embedding leg) passes it here and the corpus
     vectors are never re-banded — the only corpus-sized work left is
     the parquet scan of three skinny columns. Equality of the stored
     and rebuilt paths is pinned in
@@ -2653,8 +2578,8 @@ def dedup_incremental_embedding_validate(
 def embedding_bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding LSH index ARTIFACT itself: ``(vec_id, band,
     bucket)`` over the whole vector store — the table a write-side job
-    persists nightly (nightly_embedding_dedup_update appends tonight's
-    batch partition) and the incremental dedup path joins against
+    persists nightly (the nightly composite's embedding leg appends
+    tonight's batch partition) and the incremental dedup path joins against
     (embedding_incremental_candidates ``corpus_bands``). Registered
     separately, same rationale as embedding_pq_codes: the STORED
     representation, not just the search results derived from it, is
@@ -2717,71 +2642,31 @@ def _embedding_bucket_index_oracle() -> str:
 ORACLE_EMBEDDING_BUCKET_INDEX = _embedding_bucket_index_oracle()
 
 
-def nightly_embedding_dedup_update(
-    spark: SparkSession,
-    src_dir: str,
-    ledger_dir: str,
-    index_dir: str,
-    threshold: float = EMBED_DUP_THRESHOLD,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-):
-    """The production nightly EMBEDDING dedup job — the vector leg of
-    :func:`nightly_dedup_update` (one callable per modality, so a
-    scheduler runs both): the ingest LEDGER picks up only tonight's
-    new ``(vec_id, embedding)`` files; each new vector is flagged
-    against the persisted BUCKET INDEX (band-key candidates against
-    the stored (vec_id, band, bucket) table — the
-    embedding_bucket_index artifact — then the exact cogrouped cosine
-    rescore over only the touched stored vectors) AND against the
-    rest of tonight's batch (a band self-join, keep-first: the lower
-    vec_id of an intra-batch near-dup pair keeps, the higher drops).
+def _nightly_embedding_core(
+    spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
+) -> DataFrame:
+    """The EMBEDDING dedup leg of :func:`~mpi_mapreduce_spark.
+    operators.nightly.nightly_curation_update` (ledger, batch key and
+    crash replay are the composite's): flag each vector of ``batch``
+    against the stored BUCKET INDEX (band-key candidates against the
+    stored (vec_id, band, bucket) table — the embedding_bucket_index
+    artifact — then the exact cogrouped cosine rescore over only the
+    touched stored vectors) AND against the rest of tonight's batch (a
+    band self-join, keep-first: the lower vec_id of an intra-batch
+    near-dup pair keeps, the higher drops).
 
     The index has TWO legs, appended per batch under
     ``{index}/bands/batch=<bkey>`` and ``{index}/vectors/batch=<bkey>``:
     the bands leg is the three-skinny-column table the candidate join
     scans (corpus vectors are never re-banded), the vectors leg is
-    read only to rescore touched candidates. Crash-replay safety as
-    in the text job: both writes are KEYED by the deterministic batch
-    id and overwritten, both reads EXCLUDE tonight's own partition
-    (a torn first-night write leaves bands without vectors — treated
-    as no-index, which the replay's overwrite then completes), and
-    the ledger commits LAST (sources/io.py protocol).
+    read only to rescore touched candidates. Both reads EXCLUDE
+    tonight's own partition (else every replayed vector self-matches
+    at cosine 1 and flips keep→drop), and a torn first-night write
+    leaves bands without vectors — treated as no-index, which the
+    replay's overwrite then completes. A valid-but-empty file is
+    consumed with empty decisions and no append.
 
-    Returns (decisions DataFrame — vec_id, is_near_dup, keep — or
-    None when nothing is new, list of ingested files)."""
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    decisions = _nightly_embedding_core(
-        spark, batch, bkey, index_dir,
-        threshold=threshold, band_bits=band_bits, n_bands=n_bands,
-    )
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return decisions, files
-
-
-def _nightly_embedding_core(
-    spark: SparkSession,
-    batch: DataFrame,
-    bkey: str,
-    index_dir: str,
-    threshold: float = EMBED_DUP_THRESHOLD,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> DataFrame:
-    """The ledger-free body of :func:`nightly_embedding_dedup_update`
-    (see the wrapper for the full contract) — flag ``batch`` against
-    the stored bands+vectors index and itself, append both legs under
-    ``batch=<bkey>``, return eager decisions."""
+    Returns eager decisions — vec_id, is_near_dup, keep."""
     import os
 
     first_row = batch.select("embedding").first()
@@ -2804,9 +2689,7 @@ def _nightly_embedding_core(
         "vec_id",
         VEC.normalize_arrow(VEC.as_double(F.col("embedding"))).alias("v"),
     ).localCheckpoint()
-    bands_new = embedding_band_rows(
-        vnew, dim, band_bits, n_bands
-    ).localCheckpoint()
+    bands_new = embedding_band_rows(vnew, dim).localCheckpoint()
 
     intra_cands = (
         bands_new.select(F.col("vec_id").alias("vec_a"), "band", "bucket")
@@ -2820,9 +2703,7 @@ def _nightly_embedding_core(
         .select("vec_a", "vec_b")
         .distinct()
     )
-    intra_hits = embedding_neardup_lsh(
-        vnew, dim, threshold, band_bits, n_bands, cands=intra_cands
-    )
+    intra_hits = embedding_neardup_lsh(vnew, dim, cands=intra_cands)
     # keep-first: the higher id of an intra-batch near-dup pair drops
     near = intra_hits.select(F.col("vec_b").alias("vec_id"))
 
@@ -2865,9 +2746,7 @@ def _nightly_embedding_core(
         touched = vnew.unionByName(stored_vecs).join(
             touched_ids, "vec_id", "left_semi"
         )
-        cross_hits = embedding_neardup_lsh(
-            touched, dim, threshold, band_bits, n_bands, cands=cross_cands
-        )
+        cross_hits = embedding_neardup_lsh(touched, dim, cands=cross_cands)
         near = near.unionByName(
             cross_hits.select(F.col("vec_a").alias("vec_id"))
         )
@@ -2899,7 +2778,7 @@ def embedding_index_integrity(
     n_bands: int = EMBED_LSH_BANDS,
 ) -> DataFrame:
     """DQ audit over a persisted embedding dedup index (the
-    bands + vectors legs nightly_embedding_dedup_update maintains) —
+    bands + vectors legs the nightly embedding leg maintains) —
     the stored-index analog of dq.py's table audits, because at 100 TB
     the index IS a production table that rots like any other
     (partial restores, manual surgery, a writer bug):
@@ -4932,18 +4811,17 @@ def dedup_incremental_strip(
     )
 
 
-def nightly_substring_update(
-    spark: SparkSession, src_dir: str, ledger_dir: str, index_dir: str
-):
-    """The SUBSTRING-SPAN leg of the nightly family (sixth sibling of
-    the text-signature / embedding-bucket / IVF-cell / Bloom / CMS
-    legs): the ingest LEDGER picks up only tonight's new ``(doc_id,
-    text)`` files; each doc's maximal corpus-covered spans are
-    computed against the stored gram vocabulary (a union of every
-    prior batch partition probed by ONE semi join — never a corpus
-    re-gram); tonight's per-batch distinct grams are appended under
-    ``batch=<bkey>``; the ledger commits LAST (sources/io.py
-    protocol).
+def _nightly_substring_core(
+    spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
+) -> DataFrame:
+    """The SUBSTRING-SPAN leg of :func:`~mpi_mapreduce_spark.
+    operators.nightly.nightly_curation_update` (ledger, batch key and
+    crash replay are the composite's): compute each doc's maximal
+    corpus-covered spans against the stored gram vocabulary
+    (:func:`_gram_cross_spans`: two-tier through the weekly fold
+    ledger when a valid compaction exists, flat otherwise — VERDICT
+    r10 item 1; never a corpus re-gram); append tonight's distinct
+    grams under ``batch=<bkey>``.
 
     The per-batch partitions are each distinct WITHIN the batch but
     may repeat grams ACROSS batches — the serving probe is a semi
@@ -4951,40 +4829,12 @@ def nightly_substring_update(
     construction, pinned by the two-night pytest scenario), and the
     append stays batch-proportional: no read-merge-rewrite of the
     accumulated vocabulary, the exact property that makes this leg
-    viable nightly at 100 TB. Crash-replay safety as in the siblings:
-    the partition write is keyed by the deterministic batch id and
-    overwritten, and the serving union EXCLUDES tonight's own
+    viable nightly at 100 TB. The serving union EXCLUDES tonight's own
     partition — without that, every replayed doc would probe its own
     persisted grams and flag itself end-to-end as one giant span.
 
-    Returns (spans DataFrame — doc_id, span_start, span_end,
-    span_tokens, empty when nothing in the batch is corpus-covered —
-    or None when nothing is new, list of ingested files)."""
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    spans = _nightly_substring_core(spark, batch, bkey, index_dir)
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return spans, files
-
-
-def _nightly_substring_core(
-    spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
-) -> DataFrame:
-    """The ledger-free body of :func:`nightly_substring_update` (see
-    the wrapper for the full contract) — span-flag ``batch`` against
-    the stored gram vocabulary (:func:`_gram_cross_spans`: two-tier
-    through the weekly fold ledger when a valid compaction exists,
-    flat otherwise — VERDICT r10 item 1), append tonight's distinct
-    grams under ``batch=<bkey>``, return eager spans."""
+    Returns eager spans — doc_id, span_start, span_end, span_tokens;
+    empty when nothing in the batch is corpus-covered."""
     import os
 
     spans = _gram_cross_spans(spark, batch, index_dir, exclude=bkey)
@@ -4999,7 +4849,7 @@ def gram_index_integrity(
     spark: SparkSession, index_dir: str, n: int = SPAN_N
 ) -> DataFrame:
     """DQ audit over a persisted substring gram index (the per-batch
-    partitions nightly_substring_update appends) — the stored-index
+    partitions the nightly substring leg appends) — the stored-index
     analog of :func:`embedding_index_integrity`, because at 100 TB
     the vocabulary IS a production table that rots like any other:
 
@@ -5067,7 +4917,7 @@ def bloom_filter_integrity(
     m_bits: int = BLOOM_BITS,
 ) -> DataFrame:
     """DQ audit over a persisted Bloom filter table (the per-batch
-    partitions nightly_bloom_update appends): one row of violation
+    partitions the nightly Bloom leg appends): one row of violation
     counters —
     - ``n_word_rows``: total packed-word rows;
     - ``n_out_of_range``: word ids outside [0, m/32) — an index

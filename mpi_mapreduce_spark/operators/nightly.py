@@ -1,18 +1,17 @@
 """The ONE-callable nightly curation composite.
 
-The per-modality nightly jobs (text MinHash signatures, Bloom filter,
-substring gram vocabulary, CMS frequency table, embedding bucket
-index, IVF inverted file, PQ code table) each carry their own
-ingest + ledger so a
-deployment can schedule any subset — but production runs them as ONE
-nightly unit against ONE batch. :func:`nightly_curation_update`
-composes every leg's ledger-free core over a single ingest with a
-single ledger commit at the END, so the whole night is one atomic
-unit under the crash-replay protocol (sources/io.py): a crash between
-ANY two legs replays the entire night, every leg's batch-keyed
-overwrite rewrites its own partition, and the state after the replay
-is byte-identical to a crash-free run (pytest-pinned in
-tests/test_nightly_composite.py).
+Eight nightly maintenance legs (text MinHash signatures, Bloom
+filter, substring gram vocabulary, CMS frequency table, embedding
+bucket index, IVF inverted file, PQ code table, ANN-LSH bucket table)
+each keep one stored index under a shared state directory.
+:func:`nightly_curation_update` runs any subset of them (``legs=``,
+default all) against ONE batch as ONE nightly unit: one ingest per
+modality, every selected leg's ledger-free core, then a single ledger
+commit at the END, so the whole night is one atomic unit under the
+crash-replay protocol (sources/io.py): a crash between ANY two legs
+replays the entire night, every leg's batch-keyed overwrite rewrites
+its own partition, and the state after the replay is byte-identical
+to a crash-free run (pytest-pinned in tests/test_nightly_composite.py).
 
 Generalizes the reference's single-shot job lifecycle (reference
 main.cpp:129-308: read → map → shuffle → reduce → write, once) to the
@@ -23,9 +22,23 @@ set of stored indexes so the corpus never is.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import time
+from collections.abc import Callable, Iterable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from mpi_mapreduce_spark.operators import dedup, similarity, sketches
+from mpi_mapreduce_spark.sources.io import (
+    committed_batch_keys,
+    has_committed_parquet,
+    ingest_incremental,
+    reconcile_batch_partitions,
+    record_ingested,
+)
 
 #: batch_dir subdirectories by modality — text legs read
 #: ``docs/*.parquet`` (doc_id, text), vector legs read
@@ -34,24 +47,43 @@ from pyspark.sql import DataFrame, SparkSession
 DOCS_SUBDIR = "docs"
 VECS_SUBDIR = "vecs"
 
-#: state_dir layout: one shared ledger + one index dir per leg.
+#: state_dir layout: one shared ledger, one index dir per leg, and
+#: the weekly compaction's bucketed bases under ``serving/<leg>``
+#: (each with its fold ledger at ``serving/<leg>_folded``).
 LEDGER_SUBDIR = "ledger"
-STATE_SUBDIRS = {
-    "minhash": "minhash",
-    "bloom": "bloom",
-    "grams": "grams",
-    "cms": "cms",
-    "embedding": "embedding",
-    "ivf": "ivf",
-    "pq": "pq",
-    "ann_lsh": "ann_lsh",
-}
+SERVING_SUBDIR = "serving"
+
+
+class _Leg(NamedTuple):
+    key: str  # output and timings key
+    modality: str  # the batch_dir subdirectory the leg reads
+    core: Callable[[SparkSession, DataFrame, str, str], DataFrame]
+    subdir: str  # the leg's index dir under state_dir
+
+
+#: the legs in run order: the cheap screen first, then the index legs
+#: (perfbench's per-leg clock expects this order; each leg is
+#: independent and replays idempotently on its own). The substring
+#: leg's index keeps its historical ``grams`` directory so existing
+#: state dirs still serve.
+LEGS = (
+    _Leg("bloom", DOCS_SUBDIR, dedup._nightly_bloom_core, "bloom"),
+    _Leg("minhash", DOCS_SUBDIR, dedup._nightly_minhash_core, "minhash"),
+    _Leg("substring", DOCS_SUBDIR, dedup._nightly_substring_core, "grams"),
+    _Leg("cms", DOCS_SUBDIR, sketches._nightly_cms_core, "cms"),
+    _Leg("embedding", VECS_SUBDIR, dedup._nightly_embedding_core, "embedding"),
+    _Leg("ivf", VECS_SUBDIR, similarity._nightly_ivf_core, "ivf"),
+    _Leg("pq", VECS_SUBDIR, similarity._nightly_pq_core, "pq"),
+    _Leg("ann_lsh", VECS_SUBDIR, similarity._nightly_ann_lsh_core, "ann_lsh"),
+)
+#: index dir under state_dir, by leg key
+STATE_SUBDIRS = {leg.key: leg.subdir for leg in LEGS}
 
 #: the stored indexes the weekly compaction folds, as (timing leg,
 #: index dir under state_dir, serving family of dedup._INDEX_FAMILIES);
 #: each leg's bucketed base lives under ``state_dir/serving/<leg>``
 COMPACTED_INDEXES = (
-    ("substring", STATE_SUBDIRS["grams"], "grams"),
+    ("substring", STATE_SUBDIRS["substring"], "grams"),
     ("minhash", STATE_SUBDIRS["minhash"], "mhband"),
     (
         "embedding",
@@ -61,14 +93,30 @@ COMPACTED_INDEXES = (
 )
 
 
+def _batch_key(files: list[str]) -> str:
+    """Deterministic batch id over one modality's ingested file list
+    ("b" prefix keeps partition-value inference from ever parsing an
+    all-digit hash as a number): a replay over an unchanged file set
+    recomputes the same key, so every leg overwrites its own
+    partitions, and a new file in one modality can't change the other
+    modality's key; changed-file-set replays are handled by ledger
+    reconciliation (sources/io.py reconcile_batch_partitions)."""
+    return (
+        "b"
+        + hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()[:16]
+    )
+
+
 def nightly_curation_update(
     spark: SparkSession,
     batch_dir: str,
     state_dir: str,
     timings: dict[str, float] | None = None,
+    legs: Iterable[str] = tuple(STATE_SUBDIRS),
 ) -> tuple[dict[str, DataFrame] | None, list[str]]:
-    """Run every nightly maintenance leg against tonight's batch as
-    ONE unit with ONE ledger commit.
+    """Run the selected nightly maintenance legs (default: all of
+    :data:`LEGS`) against tonight's batch as ONE unit with ONE ledger
+    commit.
 
     - ``batch_dir/docs/*.parquet`` (doc_id, text) feeds the four text
       legs: Bloom membership screen, MinHash signature index,
@@ -80,25 +128,39 @@ def nightly_curation_update(
       bucket table (seeded hyperplanes, the trainless leg).
     - ``state_dir`` holds ONE ledger (shared across both modalities —
       ledger rows are absolute file paths, so the union is
-      unambiguous) and one index directory per leg.
+      unambiguous) and one index directory per leg
+      (:data:`STATE_SUBDIRS`).
 
-    Atomicity: every leg's core writes its artifact under
-    ``batch=<bkey>`` where bkey hashes that MODALITY's file list (text
-    legs key on the doc files, vector legs on the vec files — ADVICE
-    r9: a union key let a new vec file landing after a crash change
-    the text legs' replay key), and every core's serving read EXCLUDES
-    that partition — so a crash after ANY prefix of the legs replays
-    the whole night with keyed overwrites and reproduces
-    byte-identical state and decisions. If the file set itself changed
-    between crash and replay, the old-key partials are provable
-    orphans (their key is in no ledger commit) and
+    ``legs`` picks the legs to run, by output key; an unknown key or
+    an empty selection raises ValueError before anything is listed or
+    written. Only a modality with at least one selected leg is listed,
+    keyed, reconciled and committed, so a vector-only selection leaves
+    tonight's doc files for a later run. Drive one ``state_dir`` with
+    ONE selection for its whole life: its ledger commits each file on
+    behalf of the legs selected that night only, and a leg added later
+    never sees the files committed before it.
+
+    Atomicity and crash replay: the ingest ledger picks up only the
+    files no ledger commit records. Every leg's core writes its
+    artifact with overwrite under ``batch=<bkey>``, where bkey hashes
+    that MODALITY's file list (text legs key on the doc files, vector
+    legs on the vec files — ADVICE r9: a union key let a new vec file
+    landing after a crash change the text legs' replay key), and
+    every core's serving read EXCLUDES that partition. A crash after
+    ANY prefix of the legs therefore replays the whole night with
+    keyed overwrites — never a duplicate append, and never a batch
+    matching its own persisted index — and reproduces byte-identical
+    state and decisions. If the file set itself changed between crash
+    and replay, the old-key partials are provable orphans (their key
+    is in no ledger commit) and
     :func:`~mpi_mapreduce_spark.sources.io.reconcile_batch_partitions`
-    drops them up front, so the replayed night equals a crash-free run
-    over the grown file set. The ledger commits LAST, keyed per
-    modality: either a modality's night is recorded or none of it is.
-    Each leg's decisions are eagerly materialized (localCheckpoint
-    inside the cores) BEFORE its artifact write, preserving the
-    per-leg discipline.
+    drops them up front from the selected legs' index dirs, so the
+    replayed night equals a crash-free run over the grown file set.
+    The ledger commits LAST, keyed per modality, docs before vecs: a
+    crash between the two commits replays only the vec legs (same
+    key, keyed overwrite), never the text legs twice. Each leg's
+    decisions are eagerly materialized (localCheckpoint inside the
+    cores) BEFORE its artifact write.
 
     Pass ``timings`` (an empty dict) to receive each leg's wall
     seconds under its output key — meaningful because every core
@@ -106,58 +168,35 @@ def nightly_curation_update(
     returning; the scale-rehearsal harness uses this for the per-leg
     splits in SCALING.md.
 
-    Returns (dict of per-leg decision frames — keys ``bloom``
-    (doc_id, bloom_seen, seen_in_batch, novel), ``minhash`` (doc_id,
-    is_near_dup, keep), ``substring`` (doc_id, span_start, span_end,
-    span_tokens), ``cms`` (tonight's partial sketch), ``embedding``
-    (vec_id, is_near_dup, keep), ``ivf`` (vec_id, cell, cosine),
-    ``pq`` (vec_id, m, code), ``ann_lsh`` (vec_id, bucket) — only
-    the legs whose modality had new files; or None when nothing is new — and the list of ingested
-    files)."""
-    from mpi_mapreduce_spark.operators.dedup import (
-        _batch_key,
-        _nightly_bloom_core,
-        _nightly_embedding_core,
-        _nightly_minhash_core,
-        _nightly_substring_core,
-    )
-    from mpi_mapreduce_spark.operators.similarity import (
-        _nightly_ann_lsh_core,
-        _nightly_ivf_core,
-        _nightly_pq_core,
-    )
-    from mpi_mapreduce_spark.operators.sketches import _nightly_cms_core
-    from mpi_mapreduce_spark.sources.io import (
-        list_new_files,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
+    Returns (dict of per-leg decision frames, keyed by leg — the
+    columns are on each core: ``bloom`` (doc_id, bloom_seen,
+    seen_in_batch, novel), ``minhash`` (doc_id, is_near_dup, keep),
+    ``substring`` (doc_id, span_start, span_end, span_tokens),
+    ``cms`` (tonight's partial sketch), ``embedding`` (vec_id,
+    is_near_dup, keep), ``ivf`` (vec_id, cell, cosine), ``pq``
+    (vec_id, m, code), ``ann_lsh`` (vec_id, bucket) — only the
+    selected legs whose modality had new files; or None when nothing
+    is new — and the list of ingested files)."""
+    legs = set(legs)
+    if not legs or legs - set(STATE_SUBDIRS):
+        raise ValueError(
+            f"legs must be a non-empty subset of {tuple(STATE_SUBDIRS)}; "
+            f"got {sorted(legs)}"
+        )
+    selected = [leg for leg in LEGS if leg.key in legs]
+    modalities = {leg.modality for leg in selected}
 
     ledger = os.path.join(state_dir, LEDGER_SUBDIR)
-    docs_src = os.path.join(batch_dir, DOCS_SUBDIR)
-    vecs_src = os.path.join(batch_dir, VECS_SUBDIR)
-    doc_files = (
-        list_new_files(spark, docs_src, ledger, ".parquet")
-        if os.path.isdir(docs_src)
-        else []
-    )
-    vec_files = (
-        list_new_files(spark, vecs_src, ledger, ".parquet")
-        if os.path.isdir(vecs_src)
-        else []
-    )
-    files = doc_files + vec_files
-    if not files:
+    # one ingest and one batch id PER MODALITY, docs before vecs
+    batches: dict[str, tuple[DataFrame, list[str], str]] = {}
+    for modality in (DOCS_SUBDIR, VECS_SUBDIR):
+        src = os.path.join(batch_dir, modality)
+        if modality in modalities and os.path.isdir(src):
+            frame, files = ingest_incremental(spark, src, ledger)
+            if files:
+                batches[modality] = (frame, files, _batch_key(files))
+    if not batches:
         return None, []
-    # one batch id PER MODALITY: a composite replay over an unchanged
-    # file set recomputes the same keys so every leg overwrites its
-    # own partitions, and a new file in one modality can't perturb the
-    # other modality's replay key (ADVICE r9)
-    dkey = _batch_key(doc_files) if doc_files else None
-    vkey = _batch_key(vec_files) if vec_files else None
-
-    def _idx(leg: str) -> str:
-        return os.path.join(state_dir, STATE_SUBDIRS[leg])
 
     # drop crashed partials whose key no ledger commit (and no
     # tonight's key) can account for — they'd otherwise escape the
@@ -165,44 +204,25 @@ def nightly_curation_update(
     reconcile_batch_partitions(
         spark,
         ledger,
-        [_idx(leg) for leg in STATE_SUBDIRS],
-        {k for k in (dkey, vkey) if k is not None},
+        [os.path.join(state_dir, leg.subdir) for leg in selected],
+        {bkey for _, _, bkey in batches.values()},
     )
 
-    import time as _time
-
     out: dict[str, DataFrame] = {}
-
-    def _run(key: str, core, frame, bkey: str, leg: str) -> None:
-        t0 = _time.perf_counter()
-        out[key] = core(spark, frame, bkey, _idx(leg))
+    for leg in selected:
+        if leg.modality not in batches:
+            continue
+        frame, _, bkey = batches[leg.modality]
+        t0 = time.perf_counter()
+        out[leg.key] = leg.core(
+            spark, frame, bkey, os.path.join(state_dir, leg.subdir)
+        )
         if timings is not None:
-            timings[key] = _time.perf_counter() - t0
+            timings[leg.key] = time.perf_counter() - t0
 
-    if doc_files:
-        docs = spark.read.parquet(*doc_files)
-        # screen first (the cheap pre-pass), then the index legs — the
-        # order is documentation; each leg is independent and replays
-        # idempotently on its own
-        _run("bloom", _nightly_bloom_core, docs, dkey, "bloom")
-        _run("minhash", _nightly_minhash_core, docs, dkey, "minhash")
-        _run("substring", _nightly_substring_core, docs, dkey, "grams")
-        _run("cms", _nightly_cms_core, docs, dkey, "cms")
-    if vec_files:
-        vecs = spark.read.parquet(*vec_files)
-        _run("embedding", _nightly_embedding_core, vecs, vkey, "embedding")
-        _run("ivf", _nightly_ivf_core, vecs, vkey, "ivf")
-        _run("pq", _nightly_pq_core, vecs, vkey, "pq")
-        _run("ann_lsh", _nightly_ann_lsh_core, vecs, vkey, "ann_lsh")
-
-    # keyed commits, LAST; doc commit before vec commit — a crash
-    # between the two replays only the vec modality (same vkey, keyed
-    # overwrite), never double-runs the text legs
-    if doc_files:
-        record_ingested(spark, ledger, doc_files, batch_key=dkey)
-    if vec_files:
-        record_ingested(spark, ledger, vec_files, batch_key=vkey)
-    return out, files
+    for _, files, bkey in batches.values():
+        record_ingested(spark, ledger, files, batch_key=bkey)
+    return out, [f for _, files, _ in batches.values() for f in files]
 
 
 def weekly_curation_compaction(
@@ -235,23 +255,19 @@ def weekly_curation_compaction(
     partitions (or not yet created) reports 0 and its existing base,
     if any, stays valid. Pass ``timings`` to receive per-leg wall
     seconds (the SCALING.md harness contract)."""
-    import time as _time
-
-    from mpi_mapreduce_spark.operators.dedup import weekly_index_compaction
-
     ledger = os.path.join(state_dir, LEDGER_SUBDIR)
     out: dict[str, int] = {}
     for leg, sub, family in COMPACTED_INDEXES:
-        t0 = _time.perf_counter()
-        out[leg] = weekly_index_compaction(
+        t0 = time.perf_counter()
+        out[leg] = dedup.weekly_index_compaction(
             spark,
             os.path.join(state_dir, sub),
             family,
             ledger,
-            os.path.join(state_dir, "serving", leg),
+            os.path.join(state_dir, SERVING_SUBDIR, leg),
         )
         if timings is not None:
-            timings[leg] = _time.perf_counter() - t0
+            timings[leg] = time.perf_counter() - t0
     return out
 
 
@@ -277,15 +293,12 @@ def maybe_weekly_curation_compaction(
     fold when it isn't. Uncommitted partials never count as deltas
     (they are reconciliation's problem, not compaction's — and the
     fold itself only touches committed keys)."""
-    from mpi_mapreduce_spark.operators.dedup import _fold_state
-    from mpi_mapreduce_spark.sources.io import committed_batch_keys
-
     ledger = os.path.join(state_dir, LEDGER_SUBDIR)
     committed, legacy = committed_batch_keys(spark, ledger)
     if legacy:
         return None  # cannot prove anything committed: never compact
     for _, sub, family in COMPACTED_INDEXES:
-        folded, parts = _fold_state(
+        folded, parts = dedup._fold_state(
             spark, os.path.join(state_dir, sub), family
         )
         deltas = [
@@ -310,21 +323,11 @@ def curation_state_audit(
     Runs every per-family integrity audit that applies (gram index,
     Bloom table, embedding bands+vectors) plus structural counters
     for the remaining legs (MinHash signature rows, CMS cells, IVF
-    centroids/cells, ledger entries) and returns ONE long-format
-    frame ``(leg, counter, value)`` — greppable, diffable against
-    yesterday's run, and empty-state-safe (absent legs simply
+    centroids/cells, ledger entries, serving dirs that are neither a
+    compacted leg's base nor its fold ledger) and returns ONE
+    long-format frame ``(leg, counter, value)`` — greppable, diffable
+    against yesterday's run, and empty-state-safe (absent legs simply
     contribute no rows)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mpi_mapreduce_spark.operators.dedup import (
-        MINHASH_HASHES,
-        bloom_filter_integrity,
-        embedding_index_integrity,
-        gram_index_integrity,
-    )
-    from mpi_mapreduce_spark.sources.io import has_committed_parquet
 
     def _long(leg: str, row_df: DataFrame) -> DataFrame:
         # v can be NULL when a counter is an unguarded F.sum over an
@@ -341,18 +344,18 @@ def curation_state_audit(
 
     parts: list[DataFrame] = []
 
-    grams = os.path.join(state_dir, STATE_SUBDIRS["grams"])
+    grams = os.path.join(state_dir, STATE_SUBDIRS["substring"])
     if has_committed_parquet(grams):
-        parts.append(_long("grams", gram_index_integrity(spark, grams)))
+        parts.append(_long("grams", dedup.gram_index_integrity(spark, grams)))
     bloom = os.path.join(state_dir, STATE_SUBDIRS["bloom"])
     if has_committed_parquet(bloom):
-        parts.append(_long("bloom", bloom_filter_integrity(spark, bloom)))
+        parts.append(_long("bloom", dedup.bloom_filter_integrity(spark, bloom)))
     emb = os.path.join(state_dir, STATE_SUBDIRS["embedding"])
     if has_committed_parquet(os.path.join(emb, "bands")) and (
         has_committed_parquet(os.path.join(emb, "vectors"))
     ):
         parts.append(
-            _long("embedding", embedding_index_integrity(spark, emb))
+            _long("embedding", dedup.embedding_index_integrity(spark, emb))
         )
 
     mh = os.path.join(state_dir, STATE_SUBDIRS["minhash"])
@@ -370,7 +373,7 @@ def curation_state_audit(
                                     F.when(
                                         F.col(f"mh{i}").isNull(), 1
                                     ).otherwise(0)
-                                    for i in range(MINHASH_HASHES)
+                                    for i in range(dedup.MINHASH_HASHES)
                                 )
                                 > 0,
                                 1,
@@ -398,8 +401,6 @@ def curation_state_audit(
         )
     lsh = os.path.join(state_dir, STATE_SUBDIRS["ann_lsh"])
     if has_committed_parquet(os.path.join(lsh, "buckets")):
-        from mpi_mapreduce_spark.operators.similarity import LSH_BITS
-
         b = spark.read.parquet(os.path.join(lsh, "buckets"))
         parts.append(
             spark.createDataFrame(
@@ -410,7 +411,7 @@ def curation_state_audit(
                         "n_out_of_range_buckets",
                         b.where(
                             (F.col("bucket") < 0)
-                            | (F.col("bucket") >= (1 << LSH_BITS))
+                            | (F.col("bucket") >= (1 << similarity.LSH_BITS))
                         ).count(),
                     ),
                     (
@@ -428,8 +429,6 @@ def curation_state_audit(
 
     pq = os.path.join(state_dir, STATE_SUBDIRS["pq"])
     if has_committed_parquet(os.path.join(pq, "codebooks")):
-        from mpi_mapreduce_spark.operators.similarity import PQ_K, PQ_M
-
         books = spark.read.parquet(os.path.join(pq, "codebooks"))
         rows = [("pq", "n_codebook_rows", books.count())]
         if has_committed_parquet(os.path.join(pq, "codes")):
@@ -440,7 +439,7 @@ def curation_state_audit(
                     "pq",
                     "n_out_of_range_codes",
                     codes.where(
-                        (F.col("code") < 0) | (F.col("code") >= PQ_K)
+                        (F.col("code") < 0) | (F.col("code") >= similarity.PQ_K)
                     ).count(),
                 )
             )
@@ -450,7 +449,7 @@ def curation_state_audit(
                     "n_incomplete_vectors",
                     codes.groupBy("vec_id", "batch")
                     .count()
-                    .where(F.col("count") != PQ_M)
+                    .where(F.col("count") != similarity.PQ_M)
                     .count(),
                 )
             )
@@ -495,6 +494,27 @@ def curation_state_audit(
                         F.count("*") - F.countDistinct("file_path")
                     ).alias("n_duplicate_entries"),
                 ),
+            )
+        )
+    serving = os.path.join(state_dir, SERVING_SUBDIR)
+    if os.path.isdir(serving):
+        # a dir that is neither a compacted leg's base nor the base's
+        # fold ledger beside it is dead bytes (e.g. the pre-rename
+        # serving/grams): nothing serves or re-folds it
+        live = {
+            d
+            for leg, _, _ in COMPACTED_INDEXES
+            for d in (leg, f"{leg}_folded")
+        }
+        orphans = [
+            d
+            for d in os.listdir(serving)
+            if d not in live and os.path.isdir(os.path.join(serving, d))
+        ]
+        parts.append(
+            spark.createDataFrame(
+                [("serving", "n_orphan_dirs", len(orphans))],
+                "leg string, counter string, value long",
             )
         )
 

@@ -807,67 +807,28 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def nightly_ivf_update(
-    spark: SparkSession,
-    src_dir: str,
-    ledger_dir: str,
-    index_dir: str,
-    n_cells: int = IVF_CELLS,
-):
-    """The production nightly IVF maintenance job — the third leg of
-    the nightly composite family (text signatures:
-    dedup.nightly_dedup_update; embedding buckets:
-    dedup.nightly_embedding_dedup_update; IVF cells: this), so one
-    scheduler entry exists per index family:
+def _nightly_ivf_core(
+    spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
+) -> DataFrame:
+    """The IVF leg of :func:`~mpi_mapreduce_spark.operators.nightly.
+    nightly_curation_update` (ledger, batch key and crash replay are
+    the composite's):
 
-    - the ingest LEDGER picks up only tonight's new ``(vec_id,
-      embedding)`` files (sources/io.py protocol, commit LAST);
     - the QUANTIZER is trained ONCE — the first night's batch is the
       initial corpus — and persisted under ``{index}/centroids``;
       every later night LOADS it and only assigns (production
       retraining is a separate offline decision, not a nightly side
       effect; parquet round-trips the float64 components exactly, so
-      loaded-vs-just-trained assignment is bit-identical);
+      loaded-vs-just-trained assignment is bit-identical, and a
+      first-night replay re-loads the already-persisted centroids);
     - tonight's batch is assigned to its nearest stored centroid
       (the ann_ivf_assign_batch math — _assign_struct's quantized-dot
       argmax) and APPENDED to the inverted file under
-      ``{index}/cells/batch=<bkey>`` — batch-keyed overwrite, so a
-      crash between the cells write and the ledger commit replays
-      idempotently (first-night replay re-loads the already-persisted
-      centroids and overwrites the same partitions).
+      ``{index}/cells/batch=<bkey>``;
+    - a valid-but-empty file trains nothing and appends nothing, so
+      the first REAL night still trains as night one.
 
-    Returns (assignments DataFrame — vec_id, cell, cosine — or None
-    when nothing is new, list of ingested files)."""
-    from mpi_mapreduce_spark.operators.dedup import _batch_key
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    assigned = _nightly_ivf_core(
-        spark, batch, bkey, index_dir, n_cells=n_cells
-    )
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return assigned, files
-
-
-def _nightly_ivf_core(
-    spark: SparkSession,
-    batch: DataFrame,
-    bkey: str,
-    index_dir: str,
-    n_cells: int = IVF_CELLS,
-) -> DataFrame:
-    """The ledger-free body of :func:`nightly_ivf_update` (see the
-    wrapper for the full contract) — train-once/load the quantizer,
-    assign ``batch`` to cells, append the inverted file under
-    ``batch=<bkey>``, return eager assignments."""
+    Returns eager assignments — vec_id, cell, cosine."""
     import os
 
     vnew = normalized_corpus(batch).localCheckpoint()
@@ -889,7 +850,7 @@ def _nightly_ivf_core(
         rows = spark.read.parquet(cent_dir).orderBy("cell").collect()
         cents = [list(r.c) for r in rows]
     else:
-        cents = ivf_centroids(vnew, n_cells)
+        cents = ivf_centroids(vnew)
         spark.createDataFrame(
             list(enumerate(cents)), "cell int, c array<double>"
         ).write.mode("overwrite").parquet(cent_dir)
@@ -908,46 +869,20 @@ def _nightly_ivf_core(
     return assigned
 
 
-def nightly_ann_lsh_update(
-    spark: SparkSession, src_dir: str, ledger_dir: str, index_dir: str
-):
-    """The ANN-LSH leg of the nightly maintenance family — closes the
-    capstone table's parenthetical ("bucketing is the index; nightly =
-    append bucketed batch") into a real ledger-protocol job: the
-    ingest LEDGER picks up tonight's new ``(vec_id, embedding)``
-    files; the batch is sign-hyperplane bucketed (the hyperplanes are
-    SEEDED constants, so no train-once step exists at all — the
-    simplest leg of the family) and appended under
-    ``{index}/buckets/batch=<bkey>``; ledger commits LAST. The union
-    of batch partitions IS the ann_lsh_bucket_table artifact
-    (pytest-pinned across nights), directly servable as ann_lsh's
-    ``corpus_buckets`` input.
-
-    Returns (buckets DataFrame — vec_id, bucket — or None when
-    nothing is new, list of ingested files)."""
-    from mpi_mapreduce_spark.operators.dedup import _batch_key
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    buckets = _nightly_ann_lsh_core(spark, batch, bkey, index_dir)
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return buckets, files
-
-
 def _nightly_ann_lsh_core(
     spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
 ) -> DataFrame:
-    """The ledger-free body of :func:`nightly_ann_lsh_update` —
-    bucket ``batch`` with the seeded hyperplanes, append under
-    ``batch=<bkey>``, return eager bucket rows."""
+    """The ANN-LSH leg of :func:`~mpi_mapreduce_spark.operators.
+    nightly.nightly_curation_update` (ledger, batch key and crash
+    replay are the composite's): sign-hyperplane bucket ``batch`` (the
+    hyperplanes are SEEDED constants, so no train-once step exists at
+    all — the simplest leg of the family) and append under
+    ``{index}/buckets/batch=<bkey>``. The union of batch partitions IS
+    the ann_lsh_bucket_table artifact (pytest-pinned across nights),
+    directly servable as ann_lsh's ``corpus_buckets`` input. A
+    valid-but-empty file appends nothing.
+
+    Returns eager bucket rows — vec_id, bucket."""
     import os
 
     vnew = normalized_corpus(batch).localCheckpoint()
@@ -968,48 +903,23 @@ def _nightly_ann_lsh_core(
     return buckets
 
 
-def nightly_pq_update(
-    spark: SparkSession, src_dir: str, ledger_dir: str, index_dir: str
-):
-    """The PQ leg of the nightly maintenance family — closes the
-    capstone table's parenthetical ("codes appended per batch like
-    cells") into a real ledger-protocol job: the ingest LEDGER picks
-    up tonight's new ``(vec_id, embedding)`` files; the PQ_M×PQ_K
-    CODEBOOKS are trained ONCE (the first night's batch is the
-    initial corpus — same train-once discipline as the IVF quantizer;
-    parquet round-trips the float64 components exactly, so
-    loaded-vs-just-trained encoding is bit-identical, pytest-pinned)
-    and persisted under ``{index}/codebooks``; every later night
-    LOADS them and only encodes; tonight's 4-bytes-per-vector codes
-    are appended under ``{index}/codes/batch=<bkey>`` — batch-keyed
-    overwrite, crash-replay idempotent, ledger commits LAST.
-
-    Returns (codes DataFrame — vec_id, m, code — or None when nothing
-    is new, list of ingested files)."""
-    from mpi_mapreduce_spark.operators.dedup import _batch_key
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [index_dir], {bkey})
-    codes = _nightly_pq_core(spark, batch, bkey, index_dir)
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return codes, files
-
-
 def _nightly_pq_core(
     spark: SparkSession, batch: DataFrame, bkey: str, index_dir: str
 ) -> DataFrame:
-    """The ledger-free body of :func:`nightly_pq_update` (see the
-    wrapper for the full contract) — train-once/load the codebooks,
-    encode ``batch``, append the code table under ``batch=<bkey>``,
-    return eager codes."""
+    """The PQ leg of :func:`~mpi_mapreduce_spark.operators.nightly.
+    nightly_curation_update` (ledger, batch key and crash replay are
+    the composite's): the PQ_M×PQ_K CODEBOOKS are trained ONCE (the
+    first night's batch is the initial corpus — same train-once
+    discipline as the IVF quantizer; parquet round-trips the float64
+    components exactly, so loaded-vs-just-trained encoding is
+    bit-identical, pytest-pinned) and persisted under
+    ``{index}/codebooks``; every later night LOADS them (validated on
+    read) and only encodes; tonight's 4-bytes-per-vector codes are
+    appended under ``{index}/codes/batch=<bkey>``. A valid-but-empty
+    file trains nothing and appends nothing; a batch of the wrong
+    dimension raises ValueError.
+
+    Returns eager codes — vec_id, m, code."""
     import os
 
     from mpi_mapreduce_spark.sources.io import has_committed_parquet

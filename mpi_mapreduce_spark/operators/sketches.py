@@ -386,39 +386,14 @@ ORACLE_CMS_HEAVY_HITTERS = _CMS_CTE + f"""
 """
 
 
-def nightly_cms_update(
-    spark: SparkSession, src_dir: str, ledger_dir: str, table_dir: str
-):
-    """The CMS leg of the nightly maintenance family (text signatures,
-    embedding buckets, IVF cells, Bloom filter, and this frequency
-    table — one callable per maintained index): the ingest LEDGER
-    picks up tonight's new document files, the batch's partial d×w
-    cell counts are appended under ``batch=<bkey>``, and the ledger
-    commits LAST (sources/io.py protocol). Crash-replay safety is the
-    keyed overwrite: a replayed night rewrites its own partition
-    rather than double-appending, so the summed read (cms_merge over
-    all partitions) stays exact. Returns (tonight's partial sketch —
-    or None when nothing is new, list of ingested files)."""
-    from mpi_mapreduce_spark.operators.dedup import _batch_key
-    from mpi_mapreduce_spark.sources.io import (
-        ingest_incremental,
-        reconcile_batch_partitions,
-        record_ingested,
-    )
-
-    batch, files = ingest_incremental(spark, src_dir, ledger_dir)
-    if batch is None:
-        return None, []
-    bkey = _batch_key(files)
-    reconcile_batch_partitions(spark, ledger_dir, [table_dir], {bkey})
-    partial = _nightly_cms_core(spark, batch, bkey, table_dir)
-    record_ingested(spark, ledger_dir, files, batch_key=bkey)
-    return partial, files
-
-
 def _nightly_cms_core(spark, batch, bkey: str, table_dir: str):
-    """The ledger-free body of :func:`nightly_cms_update` — append
-    tonight's partial d×w cell counts under ``batch=<bkey>``."""
+    """The CMS leg of :func:`~mpi_mapreduce_spark.operators.nightly.
+    nightly_curation_update` (ledger, batch key and crash replay are
+    the composite's): append tonight's partial d×w cell counts under
+    ``batch=<bkey>``. The keyed overwrite is what keeps the summed
+    read (:func:`read_nightly_cms`, cms_merge over all partitions)
+    exact: a replayed night rewrites its own partition rather than
+    double-counting it. Returns tonight's partial sketch."""
     import os
 
     from pyspark.sql import functions as F

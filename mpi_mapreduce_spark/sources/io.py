@@ -388,15 +388,11 @@ def list_new_files(
 
 
 def ingest_incremental(
-    spark: SparkSession,
-    src_dir: str,
-    ledger_dir: str,
-    schema: str | None = None,
-    fmt: str = "parquet",
+    spark: SparkSession, src_dir: str, ledger_dir: str
 ) -> tuple[DataFrame | None, list[str]]:
     """File-level incremental batch ingest: return (frame over ONLY
-    the not-yet-ingested files, their paths), or (None, []) when
-    nothing is new.
+    the not-yet-ingested parquet files, their paths), or (None, [])
+    when nothing is new.
 
     Protocol (the batch twin of streaming/sinks.py's exactly-once
     discipline): read → write downstream → THEN record_ingested().
@@ -404,13 +400,10 @@ def ingest_incremental(
     (at-least-once); an idempotent downstream sink turns that into
     exactly-once. Recording before the write would silently drop data
     on failure — strictly worse."""
-    new_files = list_new_files(spark, src_dir, ledger_dir, "." + fmt)
+    new_files = list_new_files(spark, src_dir, ledger_dir, ".parquet")
     if not new_files:
         return None, []
-    r = spark.read.format(fmt)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(new_files), new_files
+    return spark.read.parquet(*new_files), new_files
 
 
 def record_ingested(
@@ -434,7 +427,8 @@ def record_ingested(
     missing-column semantics) and disable reconciliation rather than
     risk dropping committed state — but no NEW NULL rows can be
     minted. A caller with no partitioned artifact passes an explicit
-    sentinel (its batch id is still well-defined via _batch_key)."""
+    sentinel (its batch id is still well-defined via
+    operators/nightly.py's _batch_key)."""
     import os
 
     rows = [(p, os.path.getsize(p), batch_key) for p in files]

@@ -54,3 +54,12 @@ def axis_vec(i, dim=8, wiggle=0.0):
     if wiggle:
         v[(i + 1) % dim] = wiggle
     return v
+
+
+def nightly_leg(spark, batch, state, leg):
+    """Run ONE nightly leg through the composite — (``out[leg]``, or
+    None when nothing is new; the ingested files)."""
+    from mpi_mapreduce_spark.operators.nightly import nightly_curation_update
+
+    out, files = nightly_curation_update(spark, batch, state, legs=(leg,))
+    return (None if out is None else out[leg]), files

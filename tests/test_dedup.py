@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mpi_mapreduce_spark.operators import dedup as D
+from tests.conftest import nightly_leg
 
 
 def _commit_keys(spark, tmp_path, ledger: str, *keys: str) -> None:
@@ -382,11 +383,10 @@ def test_nightly_dedup_update_two_nights(spark, tmp_path):
     ledger makes a third run a no-op."""
     import os
 
-    from mpi_mapreduce_spark.operators.dedup import nightly_dedup_update
-
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    index = str(tmp_path / "state" / "minhash")
     os.makedirs(src)
 
     base = "the quick brown fox jumps over the lazy dog again and again "
@@ -398,7 +398,7 @@ def test_nightly_dedup_update_two_nights(spark, tmp_path):
         "n1.parquet",
         [(1, base * 4), (2, "completely different material " * 6)],
     )
-    d1, f1 = nightly_dedup_update(spark, src, ledger, index)
+    d1, f1 = nightly_leg(spark, batch, state, "minhash")
     assert len(f1) == 1
     assert {r.doc_id: r.keep for r in d1.collect()} == {1: True, 2: True}
 
@@ -406,12 +406,12 @@ def test_nightly_dedup_update_two_nights(spark, tmp_path):
         "n2.parquet",
         [(3, base * 4 + "tail tweak"), (4, "novel text nobody saw before " * 5)],
     )
-    d2, f2 = nightly_dedup_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "minhash")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
     got = {r.doc_id: r.keep for r in d2.collect()}
     assert got == {3: False, 4: True}
 
-    d3, f3 = nightly_dedup_update(spark, src, ledger, index)
+    d3, f3 = nightly_leg(spark, batch, state, "minhash")
     assert d3 is None and f3 == []
     # index now holds all four signatures
     assert spark.read.parquet(index).count() == 4
@@ -424,11 +424,9 @@ def test_nightly_intra_batch_near_dups_keep_first(spark, tmp_path):
     and the ledger never re-examines a file)."""
     import os
 
-    from mpi_mapreduce_spark.operators.dedup import nightly_dedup_update
-
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
     os.makedirs(src)
 
     base = "the quick brown fox jumps over the lazy dog again and again "
@@ -443,7 +441,7 @@ def test_nightly_intra_batch_near_dups_keep_first(spark, tmp_path):
             (3, "completely different material " * 6),
         ],
     )
-    d1, _ = nightly_dedup_update(spark, src, ledger, index)
+    d1, _ = nightly_leg(spark, batch, state, "minhash")
     assert {r.doc_id: r.keep for r in d1.collect()} == {
         1: True,
         2: False,
@@ -461,11 +459,11 @@ def test_nightly_crash_replay_is_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    from mpi_mapreduce_spark.operators.dedup import nightly_dedup_update
-
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    ledger = str(tmp_path / "state" / "ledger")
+    index = str(tmp_path / "state" / "minhash")
     os.makedirs(src)
 
     base = "the quick brown fox jumps over the lazy dog again and again "
@@ -480,13 +478,13 @@ def test_nightly_crash_replay_is_idempotent(spark, tmp_path):
             (3, "completely different material " * 6),
         ],
     )
-    d1, _ = nightly_dedup_update(spark, src, ledger, index)
+    d1, _ = nightly_leg(spark, batch, state, "minhash")
     first = {r.doc_id: (r.is_near_dup, r.keep) for r in d1.collect()}
     n_index = spark.read.parquet(index).count()
 
     # simulate the crash: index written, ledger commit lost
     shutil.rmtree(ledger)
-    d2, f2 = nightly_dedup_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "minhash")
     assert [os.path.basename(f) for f in f2] == ["n1.parquet"]
     assert {r.doc_id: (r.is_near_dup, r.keep) for r in d2.collect()} == first
     assert spark.read.parquet(index).count() == n_index  # overwrite, not append
@@ -1136,26 +1134,27 @@ def test_nightly_embedding_two_nights(spark, tmp_path):
     no-op. Index legs hold all four vectors afterwards."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    index = str(tmp_path / "state" / "embedding")
     os.makedirs(src)
 
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet", [(1, _axis(0)), (2, _axis(1))]
     )
-    d1, f1 = D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    d1, f1 = nightly_leg(spark, batch, state, "embedding")
     assert len(f1) == 1
     assert {r.vec_id: r.keep for r in d1.collect()} == {1: True, 2: True}
 
     _drop_vec_file(
         spark, tmp_path, src, "n2.parquet", [(3, _near(0)), (4, _axis(2))]
     )
-    d2, f2 = D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "embedding")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
     assert {r.vec_id: r.keep for r in d2.collect()} == {3: False, 4: True}
 
-    d3, f3 = D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    d3, f3 = nightly_leg(spark, batch, state, "embedding")
     assert d3 is None and f3 == []
     assert spark.read.parquet(os.path.join(index, "vectors")).count() == 4
     assert (
@@ -1171,7 +1170,9 @@ def test_nightly_embedding_intra_batch_keep_first(spark, tmp_path):
     their file)."""
     import os
 
-    src = str(tmp_path / "src")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
     os.makedirs(src)
     _drop_vec_file(
         spark,
@@ -1180,9 +1181,7 @@ def test_nightly_embedding_intra_batch_keep_first(spark, tmp_path):
         "n1.parquet",
         [(1, _axis(0)), (2, _near(0)), (3, _axis(1))],
     )
-    d1, _ = D.nightly_embedding_dedup_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d1, _ = nightly_leg(spark, batch, state, "embedding")
     assert {r.vec_id: r.keep for r in d1.collect()} == {
         1: True,
         2: False,
@@ -1200,9 +1199,11 @@ def test_nightly_embedding_crash_replay_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    ledger = str(tmp_path / "state" / "ledger")
+    index = str(tmp_path / "state" / "embedding")
     os.makedirs(src)
     _drop_vec_file(
         spark,
@@ -1211,13 +1212,13 @@ def test_nightly_embedding_crash_replay_idempotent(spark, tmp_path):
         "n1.parquet",
         [(1, _axis(0)), (2, _near(0)), (3, _axis(1))],
     )
-    d1, _ = D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    d1, _ = nightly_leg(spark, batch, state, "embedding")
     first = {r.vec_id: (r.is_near_dup, r.keep) for r in d1.collect()}
     n_bands = spark.read.parquet(os.path.join(index, "bands")).count()
     n_vecs = spark.read.parquet(os.path.join(index, "vectors")).count()
 
     shutil.rmtree(ledger)  # simulate: index written, ledger commit lost
-    d2, f2 = D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "embedding")
     assert [os.path.basename(f) for f in f2] == ["n1.parquet"]
     assert {r.vec_id: (r.is_near_dup, r.keep) for r in d2.collect()} == first
     assert spark.read.parquet(os.path.join(index, "bands")).count() == n_bands
@@ -1230,23 +1231,19 @@ def test_nightly_embedding_empty_file_is_consumed(spark, tmp_path):
     on the dim probe and poisoning every later run."""
     import os
 
-    src = str(tmp_path / "src")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
     os.makedirs(src)
     _drop_vec_file(spark, tmp_path, src, "empty.parquet", [])
-    d1, f1 = D.nightly_embedding_dedup_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d1, f1 = nightly_leg(spark, batch, state, "embedding")
     assert [os.path.basename(f) for f in f1] == ["empty.parquet"]
     assert d1.count() == 0
-    d2, f2 = D.nightly_embedding_dedup_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d2, f2 = nightly_leg(spark, batch, state, "embedding")
     assert d2 is None and f2 == []
     # a later real night still works (no index legs were written)
     _drop_vec_file(spark, tmp_path, src, "n1.parquet", [(1, _axis(0))])
-    d3, _ = D.nightly_embedding_dedup_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d3, _ = nightly_leg(spark, batch, state, "embedding")
     assert {r.vec_id: r.keep for r in d3.collect()} == {1: True}
 
 
@@ -1257,18 +1254,19 @@ def test_embedding_index_integrity_clean_and_corrupted(spark, tmp_path):
     incomplete and stale counters."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    index = str(tmp_path / "state" / "embedding")
     os.makedirs(src)
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet", [(1, _axis(0)), (2, _axis(1))]
     )
-    D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "embedding")
     _drop_vec_file(
         spark, tmp_path, src, "n2.parquet", [(3, _near(0)), (4, _axis(2))]
     )
-    D.nightly_embedding_dedup_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "embedding")
 
     L = D.EMBED_LSH_BANDS
     clean = D.embedding_index_integrity(spark, index).collect()[0]
@@ -1424,16 +1422,17 @@ def test_nightly_bloom_two_nights(spark, tmp_path):
     pass (the across-nights merge identity)."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    index = str(tmp_path / "state" / "bloom")
     os.makedirs(src)
 
     _drop_doc_file(
         spark, tmp_path, src, "n1.parquet",
         [(1, "alpha text one"), (2, "beta text two")],
     )
-    d1, f1 = D.nightly_bloom_update(spark, src, ledger, index)
+    d1, f1 = nightly_leg(spark, batch, state, "bloom")
     assert len(f1) == 1
     assert {r.doc_id: r.novel for r in d1.collect()} == {1: True, 2: True}
 
@@ -1441,14 +1440,14 @@ def test_nightly_bloom_two_nights(spark, tmp_path):
         spark, tmp_path, src, "n2.parquet",
         [(3, "alpha text one"), (4, "gamma text three")],
     )
-    d2, f2 = D.nightly_bloom_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "bloom")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
     got = {r.doc_id: (r.bloom_seen, r.novel) for r in d2.collect()}
     assert got[3] == (True, False)  # no false negative on the copy
     assert got[4][1] or got[4][0]  # novel unless an honest FP fired
     assert not got[4][0] or not got[4][1]
 
-    d3, f3 = D.nightly_bloom_update(spark, src, ledger, index)
+    d3, f3 = nightly_leg(spark, batch, state, "bloom")
     assert d3 is None and f3 == []
 
     merged = {
@@ -1473,15 +1472,15 @@ def test_nightly_bloom_intra_batch_keep_first(spark, tmp_path):
     their file)."""
     import os
 
-    src = str(tmp_path / "src")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
     os.makedirs(src)
     _drop_doc_file(
         spark, tmp_path, src, "n1.parquet",
         [(1, "same text"), (2, "same text"), (3, "other text")],
     )
-    d1, _ = D.nightly_bloom_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d1, _ = nightly_leg(spark, batch, state, "bloom")
     got = {r.doc_id: (r.seen_in_batch, r.novel) for r in d1.collect()}
     assert got == {
         1: (False, True),
@@ -1499,21 +1498,23 @@ def test_nightly_bloom_crash_replay_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    ledger = str(tmp_path / "state" / "ledger")
+    index = str(tmp_path / "state" / "bloom")
     os.makedirs(src)
 
     _drop_doc_file(
         spark, tmp_path, src, "n1.parquet",
         [(1, "first doc text"), (2, "second doc text")],
     )
-    d1, _ = D.nightly_bloom_update(spark, src, ledger, index)
+    d1, _ = nightly_leg(spark, batch, state, "bloom")
     first = {tuple(r) for r in d1.collect()}
     n_rows = spark.read.parquet(index).count()
 
     shutil.rmtree(ledger)
-    d2, f2 = D.nightly_bloom_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "bloom")
     assert [os.path.basename(f) for f in f2] == ["n1.parquet"]
     assert {tuple(r) for r in d2.collect()} == first
     assert spark.read.parquet(index).count() == n_rows
@@ -1524,16 +1525,14 @@ def test_nightly_bloom_empty_file_is_consumed(spark, tmp_path):
     re-ingested forever) and appends nothing."""
     import os
 
-    src = str(tmp_path / "src")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
     os.makedirs(src)
     _drop_doc_file(spark, tmp_path, src, "n1.parquet", [])
-    d1, f1 = D.nightly_bloom_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d1, f1 = nightly_leg(spark, batch, state, "bloom")
     assert d1.count() == 0 and len(f1) == 1
-    d2, f2 = D.nightly_bloom_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    d2, f2 = nightly_leg(spark, batch, state, "bloom")
     assert d2 is None and f2 == []
 
 
@@ -1975,9 +1974,9 @@ def test_nightly_substring_two_nights(spark, tmp_path):
     no-op."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
     os.makedirs(src)
 
     shared = "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10"  # 10 tokens ≥ SPAN_N=8
@@ -1986,7 +1985,7 @@ def test_nightly_substring_two_nights(spark, tmp_path):
         spark, tmp_path, src, "n1.parquet",
         [(1, f"c-lead {shared} c-tail"), (2, "nothing shared here at all ok")],
     )
-    d1, f1 = D.nightly_substring_update(spark, src, ledger, index)
+    d1, f1 = nightly_leg(spark, batch, state, "substring")
     assert len(f1) == 1 and d1.count() == 0
 
     _drop_doc_file(
@@ -1998,13 +1997,13 @@ def test_nightly_substring_two_nights(spark, tmp_path):
             (30, "completely novel material with no repeats anywhere ok2"),
         ],
     )
-    d2, f2 = D.nightly_substring_update(spark, src, ledger, index)
+    d2, f2 = nightly_leg(spark, batch, state, "substring")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
     got = {r.doc_id: (r.span_start, r.span_end, r.span_tokens)
            for r in d2.collect()}
     assert got == {10: (2, 11, 10)}
 
-    d3, f3 = D.nightly_substring_update(spark, src, ledger, index)
+    d3, f3 = nightly_leg(spark, batch, state, "substring")
     assert d3 is None and f3 == []
 
     # night 3: the intra-batch passage from night 2 is NOW corpus
@@ -2013,7 +2012,7 @@ def test_nightly_substring_two_nights(spark, tmp_path):
         spark, tmp_path, src, "n3.parquet",
         [(40, f"z-a {intra} z-b")],
     )
-    d4, _ = D.nightly_substring_update(spark, src, ledger, index)
+    d4, _ = nightly_leg(spark, batch, state, "substring")
     got4 = {r.doc_id: (r.span_start, r.span_end, r.span_tokens)
             for r in d4.collect()}
     assert got4 == {40: (1, 9, 9)}
@@ -2063,19 +2062,20 @@ def test_gram_index_integrity_clean_and_corrupted(spark, tmp_path):
     and an intra-batch duplicate trips exactly those counters."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    index = str(tmp_path / "state" / "grams")
     os.makedirs(src)
     shared = "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10"
     _drop_doc_file(
         spark, tmp_path, src, "n1.parquet", [(1, f"a-lead {shared} a-tail")]
     )
-    D.nightly_substring_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "substring")
     _drop_doc_file(
         spark, tmp_path, src, "n2.parquet", [(2, f"b-lead {shared} b-tail")]
     )
-    D.nightly_substring_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "substring")
 
     clean = D.gram_index_integrity(spark, index).collect()[0]
     n = clean.n_rows
@@ -2107,19 +2107,20 @@ def test_bloom_filter_integrity_clean_and_corrupted(spark, tmp_path):
     word and a zero-bits row trips exactly those counters."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    index = str(tmp_path / "state" / "bloom")
     os.makedirs(src)
     _drop_doc_file(
         spark, tmp_path, src, "n1.parquet",
         [(1, "alpha text one"), (2, "beta text two")],
     )
-    D.nightly_bloom_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "bloom")
     _drop_doc_file(
         spark, tmp_path, src, "n2.parquet", [(3, "gamma text three")]
     )
-    D.nightly_bloom_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "bloom")
 
     clean = D.bloom_filter_integrity(spark, index).collect()[0]
     n = clean.n_word_rows
@@ -2155,16 +2156,18 @@ def test_nightly_substring_crash_replay_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    ledger = str(tmp_path / "state" / "ledger")
+    index = str(tmp_path / "state" / "grams")
     os.makedirs(src)
 
     shared = "s1 s2 s3 s4 s5 s6 s7 s8 s9 s10"
     _drop_doc_file(
         spark, tmp_path, src, "n1.parquet", [(1, f"c-lead {shared} c-tail")]
     )
-    D.nightly_substring_update(spark, src, ledger, index)
+    nightly_leg(spark, batch, state, "substring")
     # snapshot the post-night-1 ledger: restoring it simulates a crash
     # AFTER night 2's gram append but BEFORE its ledger commit
     shutil.copytree(ledger, str(tmp_path / "ledger_n1"))
@@ -2172,14 +2175,14 @@ def test_nightly_substring_crash_replay_idempotent(spark, tmp_path):
     _drop_doc_file(
         spark, tmp_path, src, "n2.parquet", [(10, f"b-pre {shared} b-post")]
     )
-    d2, _ = D.nightly_substring_update(spark, src, ledger, index)
+    d2, _ = nightly_leg(spark, batch, state, "substring")
     first = {tuple(r) for r in d2.collect()}
     assert first == {(10, 1, 10, 10)}
     n_rows = spark.read.parquet(index).count()
 
     shutil.rmtree(ledger)
     shutil.copytree(str(tmp_path / "ledger_n1"), ledger)
-    d3, f3 = D.nightly_substring_update(spark, src, ledger, index)
+    d3, f3 = nightly_leg(spark, batch, state, "substring")
     assert [os.path.basename(f) for f in f3] == ["n2.parquet"]
     assert {tuple(r) for r in d3.collect()} == first
     assert spark.read.parquet(index).count() == n_rows

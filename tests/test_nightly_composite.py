@@ -181,7 +181,7 @@ def test_nightly_composite_crash_between_legs_replays_identically(
     )
     # text legs key on the DOC file list (per-modality keys since
     # ADVICE r9); the replay recomputes the same key and overwrites
-    bkey = D._batch_key(doc_files)
+    bkey = N._batch_key(doc_files)
     docs = spark.read.parquet(*doc_files)
     D._nightly_bloom_core(
         spark, docs, bkey, os.path.join(state, N.STATE_SUBDIRS["bloom"])
@@ -233,12 +233,12 @@ def test_nightly_composite_replay_after_new_file_lands(spark, tmp_path):
     doc_files_1 = list_new_files(
         spark, os.path.join(batch, N.DOCS_SUBDIR), ledger, ".parquet"
     )
-    crashed_key = D._batch_key(doc_files_1)
+    crashed_key = N._batch_key(doc_files_1)
     docs1 = spark.read.parquet(*doc_files_1)
     for leg, core in (
         ("bloom", D._nightly_bloom_core),
         ("minhash", D._nightly_minhash_core),
-        ("grams", D._nightly_substring_core),
+        ("substring", D._nightly_substring_core),
     ):
         core(spark, docs1, crashed_key, os.path.join(
             state, N.STATE_SUBDIRS[leg]
@@ -261,7 +261,7 @@ def test_nightly_composite_replay_after_new_file_lands(spark, tmp_path):
     # (clone taken AFTER night 1, i.e. without the crashed partials)
     ref_state = str(tmp_path / "ref_state")
     shutil.copytree(state, ref_state)
-    for leg in ("bloom", "minhash", "grams", "cms"):
+    for leg in ("bloom", "minhash", "substring", "cms"):
         d = os.path.join(ref_state, N.STATE_SUBDIRS[leg])
         p = os.path.join(d, f"batch={crashed_key}")
         if os.path.isdir(p):
@@ -276,7 +276,7 @@ def test_nightly_composite_replay_after_new_file_lands(spark, tmp_path):
     assert sorted(os.path.basename(f) for f in files) == [
         "n2.parquet", "n2b.parquet", "n2b.parquet"
     ]
-    for leg in ("bloom", "minhash", "grams", "cms"):
+    for leg in ("bloom", "minhash", "substring", "cms"):
         assert not os.path.isdir(os.path.join(
             state, N.STATE_SUBDIRS[leg], f"batch={crashed_key}"
         )), leg
@@ -371,6 +371,57 @@ def test_nightly_composite_single_modality_nights(spark, tmp_path):
     assert set(r2) == {"embedding", "ivf", "pq", "ann_lsh"}
 
 
+def test_nightly_composite_legs_selection(spark, tmp_path, monkeypatch):
+    """``legs=`` runs only the named legs and lists, keys, reconciles
+    and commits only their modalities: an unselected modality's files
+    stay uncommitted for a later run. A bad selection fails before
+    anything is listed or written."""
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    _stage(
+        spark, tmp_path, batch, "n1.parquet",
+        docs=[(1, f"c-lead {SHARED} c-tail"), (2, "beta text two words")],
+        vecs=[(1, axis_vec(0)), (2, axis_vec(1))],
+    )
+    doc_file = os.path.join(batch, N.DOCS_SUBDIR, "n1.parquet")
+    vec_file = os.path.join(batch, N.VECS_SUBDIR, "n1.parquet")
+
+    def committed(state_dir):
+        ledger = os.path.join(state_dir, N.LEDGER_SUBDIR)
+        return {r.file_path for r in spark.read.parquet(ledger).collect()}
+
+    def no_listing(*_a, **_k):
+        raise AssertionError("listed before the selection was checked")
+
+    with monkeypatch.context() as m:
+        m.setattr(N, "ingest_incremental", no_listing)
+        for bad in (("nope",), ()):
+            with pytest.raises(ValueError):
+                N.nightly_curation_update(spark, batch, state, legs=bad)
+    assert not os.path.exists(state)
+
+    r1, f1 = N.nightly_curation_update(
+        spark, batch, state, legs=("bloom", "ivf")
+    )
+    assert set(r1) == {"bloom", "ivf"}
+    assert sorted(f1) == [doc_file, vec_file]
+    assert committed(state) == {doc_file, vec_file}
+    assert sorted(os.listdir(state)) == sorted(
+        [N.LEDGER_SUBDIR, N.STATE_SUBDIRS["bloom"], N.STATE_SUBDIRS["ivf"]]
+    )
+
+    # a vector-only selection on a fresh state leaves the doc file
+    # unreturned and uncommitted; a later full run ingests it
+    fresh = str(tmp_path / "fresh")
+    r2, f2 = N.nightly_curation_update(spark, batch, fresh, legs=("ivf",))
+    assert set(r2) == {"ivf"} and f2 == [vec_file]
+    assert committed(fresh) == {vec_file}
+    r3, f3 = N.nightly_curation_update(spark, batch, fresh)
+    assert set(r3) == {"bloom", "minhash", "substring", "cms"}
+    assert f3 == [doc_file]
+    assert committed(fresh) == {doc_file, vec_file}
+
+
 def test_curation_state_audit_clean_and_corrupted(spark, tmp_path):
     """The composite state audit: after a two-modality night every
     present leg reports zero violations; planting one corruption per
@@ -424,18 +475,23 @@ def test_curation_state_audit_clean_and_corrupted(spark, tmp_path):
 
     spark.createDataFrame([("short gram",)], "s string").write.mode(
         "overwrite"
-    ).parquet(os.path.join(state, N.STATE_SUBDIRS["grams"], "batch=bx"))
+    ).parquet(os.path.join(state, N.STATE_SUBDIRS["substring"], "batch=bx"))
     spark.createDataFrame(
         [(999, 10**6, 0.5)], "vec_id long, cell int, cosine double"
     ).write.mode("overwrite").parquet(
         os.path.join(state, N.STATE_SUBDIRS["ivf"], "cells", "batch=bx")
     )
+    # and a serving base left under a name no compacted leg uses (the
+    # pre-rename gram base) beside a live base and its fold ledger
+    for d in ("grams", "substring", "substring_folded"):
+        os.makedirs(os.path.join(state, N.SERVING_SUBDIR, d))
     bad = {
         (r.leg, r.counter): r.value
         for r in N.curation_state_audit(spark, state).collect()
     }
     assert bad[("grams", "n_wrong_arity")] == 1
     assert bad[("ivf", "n_orphan_cell_rows")] == 1
+    assert bad[("serving", "n_orphan_dirs")] == 1
 
 
 def _drop_serving_tables(spark, state):
@@ -501,7 +557,7 @@ def test_nightly_composite_two_tier_equals_flat_after_compaction(
         # plan-assert the probes the cores run, against this exact
         # state: night-1 folded (base), night-2 committed since
         # (delta), probe key is a fresh night's
-        grams_dir = os.path.join(state, N.STATE_SUBDIRS["grams"])
+        grams_dir = os.path.join(state, N.STATE_SUBDIRS["substring"])
         probe_docs = spark.createDataFrame(
             [(90, f"x-lead {SHARED} x-tail")], "doc_id long, text string"
         )
@@ -644,10 +700,10 @@ def test_weekly_compaction_never_folds_uncommitted_partials(
     doc_files = list_new_files(
         spark, os.path.join(batch, N.DOCS_SUBDIR), ledger, ".parquet"
     )
-    bkey = D._batch_key(doc_files)
+    bkey = N._batch_key(doc_files)
     docs = spark.read.parquet(*doc_files)
     D._nightly_substring_core(
-        spark, docs, bkey, os.path.join(state, N.STATE_SUBDIRS["grams"])
+        spark, docs, bkey, os.path.join(state, N.STATE_SUBDIRS["substring"])
     )
     D._nightly_minhash_core(
         spark, docs, bkey, os.path.join(state, N.STATE_SUBDIRS["minhash"])
@@ -657,7 +713,7 @@ def test_weekly_compaction_never_folds_uncommitted_partials(
         folded = N.weekly_curation_compaction(spark, state)
         # only night 1 is committed — the crashed partial is NOT folded
         assert folded["substring"] == 1 and folded["minhash"] == 1
-        grams_dir = os.path.join(state, N.STATE_SUBDIRS["grams"])
+        grams_dir = os.path.join(state, N.STATE_SUBDIRS["substring"])
         tbl = D._serving_table(grams_dir, "grams")
         assert {
             r.batch_key for r in spark.table(f"{tbl}_folded").collect()
@@ -722,7 +778,7 @@ def test_maybe_weekly_compaction_policy(spark, tmp_path):
         # partials are reconciliation's problem, not compaction's
         import pyspark.sql.functions as F  # noqa: N812
 
-        grams = os.path.join(state, N.STATE_SUBDIRS["grams"])
+        grams = os.path.join(state, N.STATE_SUBDIRS["substring"])
         D.substring_gram_index_rows(
             spark.createDataFrame(
                 [(99, f"z-pre {SHARED} z-post")], "doc_id long, text string"

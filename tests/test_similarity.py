@@ -574,6 +574,7 @@ def test_ivf_cells_total_and_deterministic(spark, sf_dir):
 
 from tests.conftest import axis_vec as _vec
 from tests.conftest import drop_vec_file as _drop_vec_file
+from tests.conftest import nightly_leg
 
 
 def test_nightly_ivf_two_nights_trains_once(spark, tmp_path):
@@ -584,16 +585,17 @@ def test_nightly_ivf_two_nights_trains_once(spark, tmp_path):
     batches; a third run is a no-op."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    index = str(tmp_path / "state" / "ivf")
     os.makedirs(src)
 
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet",
         [(i, _vec(i)) for i in range(4)],
     )
-    a1, f1 = S.nightly_ivf_update(spark, src, ledger, index)
+    a1, f1 = nightly_leg(spark, batch, state, "ivf")
     assert len(f1) == 1 and a1.count() == 4
     cents1 = sorted(
         (r.cell, tuple(r.c))
@@ -604,7 +606,7 @@ def test_nightly_ivf_two_nights_trains_once(spark, tmp_path):
         spark, tmp_path, src, "n2.parquet",
         [(10 + i, _vec(i, wiggle=0.05)) for i in range(4)],
     )
-    a2, f2 = S.nightly_ivf_update(spark, src, ledger, index)
+    a2, f2 = nightly_leg(spark, batch, state, "ivf")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
     got = {r.vec_id: r.cell for r in a2.collect()}
     assert set(got) == {10, 11, 12, 13}
@@ -619,7 +621,7 @@ def test_nightly_ivf_two_nights_trains_once(spark, tmp_path):
     for i in range(4):
         assert got[10 + i] == n1[i]
 
-    a3, f3 = S.nightly_ivf_update(spark, src, ledger, index)
+    a3, f3 = nightly_leg(spark, batch, state, "ivf")
     assert a3 is None and f3 == []
     assert spark.read.parquet(os.path.join(index, "cells")).count() == 8
 
@@ -633,20 +635,22 @@ def test_nightly_ivf_crash_replay_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    ledger = str(tmp_path / "state" / "ledger")
+    index = str(tmp_path / "state" / "ivf")
     os.makedirs(src)
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet",
         [(i, _vec(i)) for i in range(5)],
     )
-    a1, _ = S.nightly_ivf_update(spark, src, ledger, index)
+    a1, _ = nightly_leg(spark, batch, state, "ivf")
     first = {r.vec_id: (r.cell, r.cosine) for r in a1.collect()}
     n_cells_rows = spark.read.parquet(os.path.join(index, "cells")).count()
 
     shutil.rmtree(ledger)  # simulate: index written, ledger commit lost
-    a2, f2 = S.nightly_ivf_update(spark, src, ledger, index)
+    a2, f2 = nightly_leg(spark, batch, state, "ivf")
     assert [os.path.basename(f) for f in f2] == ["n1.parquet"]
     assert {r.vec_id: (r.cell, r.cosine) for r in a2.collect()} == first
     assert (
@@ -661,21 +665,19 @@ def test_nightly_ivf_empty_file_is_consumed(spark, tmp_path):
     then trains as if it were night one."""
     import os
 
-    src = str(tmp_path / "src")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
     os.makedirs(src)
     _drop_vec_file(spark, tmp_path, src, "empty.parquet", [])
-    a1, f1 = S.nightly_ivf_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    a1, f1 = nightly_leg(spark, batch, state, "ivf")
     assert [os.path.basename(f) for f in f1] == ["empty.parquet"]
     assert a1.count() == 0
-    assert not os.path.isdir(os.path.join(str(tmp_path / "index"), "centroids"))
+    assert not os.path.isdir(str(tmp_path / "state" / "ivf" / "centroids"))
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet", [(i, _vec(i)) for i in range(3)]
     )
-    a2, _ = S.nightly_ivf_update(
-        spark, src, str(tmp_path / "ledger"), str(tmp_path / "index")
-    )
+    a2, _ = nightly_leg(spark, batch, state, "ivf")
     assert a2.count() == 3
 
 
@@ -833,16 +835,17 @@ def test_nightly_pq_two_nights_trains_once(spark, tmp_path):
     both batches, and a third run is a no-op."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    index = str(tmp_path / "state" / "pq")
     os.makedirs(src)
 
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet",
         [(i, _vec64(i)) for i in range(20)],
     )
-    c1, f1 = S.nightly_pq_update(spark, src, ledger, index)
+    c1, f1 = nightly_leg(spark, batch, state, "pq")
     assert len(f1) == 1 and c1.count() == 20 * S.PQ_M
     books1 = sorted(
         (r.m, r.k, tuple(r.c))
@@ -856,7 +859,7 @@ def test_nightly_pq_two_nights_trains_once(spark, tmp_path):
         spark, tmp_path, src, "n2.parquet",
         [(100 + i, _vec64(i, wiggle=0.05)) for i in range(4)],
     )
-    c2, f2 = S.nightly_pq_update(spark, src, ledger, index)
+    c2, f2 = nightly_leg(spark, batch, state, "pq")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
     assert {r.vec_id for r in c2.collect()} == {100, 101, 102, 103}
     books2 = sorted(
@@ -887,7 +890,7 @@ def test_nightly_pq_two_nights_trains_once(spark, tmp_path):
     }
     assert {(r.vec_id, r.m, r.code) for r in c2.collect()} == direct
 
-    c3, f3 = S.nightly_pq_update(spark, src, ledger, index)
+    c3, f3 = nightly_leg(spark, batch, state, "pq")
     assert c3 is None and f3 == []
     assert (
         spark.read.parquet(os.path.join(index, "codes")).count()
@@ -903,20 +906,22 @@ def test_nightly_pq_crash_replay_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    ledger = str(tmp_path / "state" / "ledger")
+    index = str(tmp_path / "state" / "pq")
     os.makedirs(src)
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet",
         [(i, _vec64(i)) for i in range(20)],
     )
-    c1, _ = S.nightly_pq_update(spark, src, ledger, index)
+    c1, _ = nightly_leg(spark, batch, state, "pq")
     first = {(r.vec_id, r.m, r.code) for r in c1.collect()}
     n_rows = spark.read.parquet(os.path.join(index, "codes")).count()
 
     shutil.rmtree(ledger)
-    c2, f2 = S.nightly_pq_update(spark, src, ledger, index)
+    c2, f2 = nightly_leg(spark, batch, state, "pq")
     assert [os.path.basename(f) for f in f2] == ["n1.parquet"]
     assert {(r.vec_id, r.m, r.code) for r in c2.collect()} == first
     assert spark.read.parquet(os.path.join(index, "codes")).count() == n_rows
@@ -927,12 +932,13 @@ def test_nightly_pq_empty_file_is_consumed(spark, tmp_path):
     the first REAL night still trains."""
     import os
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    index = str(tmp_path / "state" / "pq")
     os.makedirs(src)
     _drop_vec_file(spark, tmp_path, src, "n0.parquet", [])
-    c0, f0 = S.nightly_pq_update(spark, src, ledger, index)
+    c0, f0 = nightly_leg(spark, batch, state, "pq")
     assert c0.count() == 0 and len(f0) == 1
     assert not os.path.isdir(os.path.join(index, "codebooks"))
 
@@ -940,7 +946,7 @@ def test_nightly_pq_empty_file_is_consumed(spark, tmp_path):
         spark, tmp_path, src, "n1.parquet",
         [(i, _vec64(i)) for i in range(20)],
     )
-    c1, _ = S.nightly_pq_update(spark, src, ledger, index)
+    c1, _ = nightly_leg(spark, batch, state, "pq")
     assert c1.count() == 20 * S.PQ_M
 
 
@@ -954,24 +960,25 @@ def test_nightly_ann_lsh_two_nights_and_serving_parity(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    index = str(tmp_path / "index")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "vecs")
+    index = str(tmp_path / "state" / "ann_lsh")
     os.makedirs(src)
 
     _drop_vec_file(
         spark, tmp_path, src, "n1.parquet",
         [(i, _vec(i)) for i in range(6)],
     )
-    b1, f1 = S.nightly_ann_lsh_update(spark, src, ledger, index)
+    b1, f1 = nightly_leg(spark, batch, state, "ann_lsh")
     assert len(f1) == 1 and b1.count() == 6
     _drop_vec_file(
         spark, tmp_path, src, "n2.parquet",
         [(10 + i, _vec(i, wiggle=0.05)) for i in range(6)],
     )
-    b2, _ = S.nightly_ann_lsh_update(spark, src, ledger, index)
+    b2, _ = nightly_leg(spark, batch, state, "ann_lsh")
     assert b2.count() == 6
-    b3, f3 = S.nightly_ann_lsh_update(spark, src, ledger, index)
+    b3, f3 = nightly_leg(spark, batch, state, "ann_lsh")
     assert b3 is None and f3 == []
 
     all_vecs = spark.createDataFrame(

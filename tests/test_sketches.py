@@ -12,6 +12,7 @@ from mpi_mapreduce_spark.operators.sketches import (
     events_hll_user_rollup,
     hll_user_rollup_estimates,
 )
+from tests.conftest import nightly_leg
 
 
 def test_hll_rollup_within_error_bound(spark, sf_dir):
@@ -315,14 +316,12 @@ def test_nightly_cms_two_nights_and_crash_replay(spark, sf_dir, tmp_path):
     import shutil
 
     from mpi_mapreduce_spark.functions.text import tokens
-    from mpi_mapreduce_spark.operators.sketches import (
-        nightly_cms_update,
-        read_nightly_cms,
-    )
+    from mpi_mapreduce_spark.operators.sketches import read_nightly_cms
 
-    src = str(tmp_path / "src")
-    ledger = str(tmp_path / "ledger")
-    table = str(tmp_path / "cms")
+    batch = str(tmp_path / "batch")
+    state = str(tmp_path / "state")
+    src = str(tmp_path / "batch" / "docs")
+    table = str(tmp_path / "state" / "cms")
     os.makedirs(src)
 
     def drop(name, rows):
@@ -337,11 +336,11 @@ def test_nightly_cms_two_nights_and_crash_replay(spark, sf_dir, tmp_path):
         os.replace(str(tmp_path / "stage" / part), os.path.join(src, name))
 
     drop("n1.parquet", [(1, "aa bb aa"), (2, "cc dd")])
-    p1, f1 = nightly_cms_update(spark, src, ledger, table)
+    p1, f1 = nightly_leg(spark, batch, state, "cms")
     assert p1 is not None and len(f1) == 1
 
     drop("n2.parquet", [(3, "aa ee"), (4, "ff")])
-    p2, f2 = nightly_cms_update(spark, src, ledger, table)
+    p2, f2 = nightly_leg(spark, batch, state, "cms")
     assert [os.path.basename(f) for f in f2] == ["n2.parquet"]
 
     merged = {
@@ -360,7 +359,7 @@ def test_nightly_cms_two_nights_and_crash_replay(spark, sf_dir, tmp_path):
     assert merged == direct
 
     # a third clean run is a no-op
-    p3, f3 = nightly_cms_update(spark, src, ledger, table)
+    p3, f3 = nightly_leg(spark, batch, state, "cms")
     assert p3 is None and f3 == []
 
     # crash replay, sibling-test shape: ONE night ingested, the
@@ -368,9 +367,11 @@ def test_nightly_cms_two_nights_and_crash_replay(spark, sf_dir, tmp_path):
     # the SAME file set, hence the same batch key, hence a keyed
     # overwrite: the summed view is unchanged and the table does not
     # grow
-    src2 = str(tmp_path / "src2")
-    ledger2 = str(tmp_path / "ledger2")
-    table2 = str(tmp_path / "cms2")
+    batch2 = str(tmp_path / "batch2")
+    state2 = str(tmp_path / "state2")
+    src2 = str(tmp_path / "batch2" / "docs")
+    ledger2 = str(tmp_path / "state2" / "ledger")
+    table2 = str(tmp_path / "state2" / "cms")
     os.makedirs(src2)
     spark.createDataFrame(
         [(1, "xx yy xx")], "doc_id long, text string"
@@ -381,13 +382,13 @@ def test_nightly_cms_two_nights_and_crash_replay(spark, sf_dir, tmp_path):
         if f.endswith(".parquet")
     )
     os.replace(str(tmp_path / "stage2" / part), os.path.join(src2, "n1.parquet"))
-    q1, _ = nightly_cms_update(spark, src2, ledger2, table2)
+    q1, _ = nightly_leg(spark, batch2, state2, "cms")
     first = {
         (r.j, r.c): r.cnt for r in read_nightly_cms(spark, table2).collect()
     }
     n_rows = spark.read.parquet(table2).count()
     shutil.rmtree(ledger2)
-    q2, g2 = nightly_cms_update(spark, src2, ledger2, table2)
+    q2, g2 = nightly_leg(spark, batch2, state2, "cms")
     assert [os.path.basename(f) for f in g2] == ["n1.parquet"]
     assert {
         (r.j, r.c): r.cnt for r in read_nightly_cms(spark, table2).collect()

@@ -434,12 +434,12 @@ def time_incr_stored(scratch: str, mods: list[int]) -> None:
     """Stored-index serving shape (round-8 brief item 6): persist the
     corpus-side bucket index once per split (the nightly
     embedding_bucket_index artifact — in production it already exists,
-    maintained by nightly_embedding_dedup_update), then time ONLY the
-    serving query: batch banding + (band, bucket) join against the
-    STORED index + touched-vector exact rescore. The difference vs the
-    `embsep_dedup_incremental:<mod>` rows (which re-band the corpus in
-    the timed region) is the index-build term the nightly deployment
-    never pays."""
+    maintained by nightly_curation_update's embedding leg), then time
+    ONLY the serving query: batch banding + (band, bucket) join
+    against the STORED index + touched-vector exact rescore. The
+    difference vs the `embsep_dedup_incremental:<mod>` rows (which
+    re-band the corpus in the timed region) is the index-build term
+    the nightly deployment never pays."""
     from pyspark.sql import functions as F
 
     from mpi_mapreduce_spark.datamodel import load_table
@@ -488,8 +488,8 @@ def time_substring_stored(scratch: str, mods: list[int]) -> None:
     """Stored gram-index serving shape (round-9 brief item 2): persist
     the corpus side's distinct-gram vocabulary once per split (the
     substring_gram_index artifact — in production it already exists,
-    maintained by nightly_substring_update), then time ONLY the
-    serving query: batch positional grams + ONE semi-join probe +
+    maintained by nightly_curation_update's substring leg), then time
+    ONLY the serving query: batch positional grams + ONE semi-join probe +
     per-doc island merge. The difference vs the inline path (which
     re-grams the corpus in the timed region) is the index-build term
     the nightly deployment never pays — isolating the true
@@ -555,10 +555,11 @@ def time_substring_stored(scratch: str, mods: list[int]) -> None:
 def time_ivf_assign(scratch: str, mods: list[int]) -> None:
     """IVF incremental-ingest serving shape (round 8): per split, time
     the ONE-TIME quantizer training (bounded md5-ordered sample +
-    driver-side quantized Lloyd — nightly_ivf_update pays this on the
-    FIRST night only) separately from the nightly marginal cost: one
-    Arrow argmax pass assigning the batch to its nearest stored
-    centroid (the ann_ivf_assign_batch / inverted-file append path)."""
+    driver-side quantized Lloyd — nightly_curation_update's ivf leg
+    pays this on the FIRST night only) separately from the nightly
+    marginal cost: one Arrow argmax pass assigning the batch to its
+    nearest stored centroid (the ann_ivf_assign_batch / inverted-file
+    append path)."""
     from pyspark.sql import functions as F
 
     from mpi_mapreduce_spark.datamodel import load_table
