@@ -2,7 +2,7 @@
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "cpus": N, "master": "local[N]"}.
 """
 
 from __future__ import annotations
@@ -101,7 +101,7 @@ HEADLINE = [
 
 def main() -> None:
     from mpi_mapreduce_spark.plans.registry import QUERIES
-    from mpi_mapreduce_spark.session import get_spark
+    from mpi_mapreduce_spark.session import DEFAULT_CPUS, get_spark
 
     spark = get_spark(app_name="mpi_mapreduce_spark-bench")
     names = [n for n in HEADLINE if n in QUERIES]
@@ -213,6 +213,8 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf else SF_DIR,
+                "cpus": DEFAULT_CPUS,
+                "master": spark.sparkContext.master,
             }
         )
     )

@@ -215,6 +215,76 @@ def test_connected_components_chain_and_islands(spark):
                    10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
+def _cc_labels(edges) -> dict:
+    return {r.doc_id: r.comp for r in D.connected_components(edges).collect()}
+
+
+def test_connected_components_long_path_converges(spark, monkeypatch):
+    """The distributed loop runs until no label changes: a 40-vertex
+    path needs about 40 rounds of min-label propagation, and every
+    vertex must end on the path's minimum id (ids shuffled along the
+    path, so the minimum sits in the middle)."""
+    import random
+
+    ids = list(range(100, 140))
+    random.Random(7).shuffle(ids)
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", 0)
+    assert _cc_labels(edges) == dict.fromkeys(ids, 100)
+
+
+def test_connected_components_driver_matches_distributed(
+    spark, sf_dir, monkeypatch
+):
+    """The driver union-find and the distributed loop give the same
+    labels, on the fixture's pair graph and on the chain/islands
+    graph (and on no edges at all). The driver path's labels come back
+    as a local relation: no Python worker runs for them."""
+    empty = spark.createDataFrame([], "doc_a long, doc_b long")
+    chain = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (21, 22)],
+        "doc_a long, doc_b long",
+    )
+    fixture = D.dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+    for edges in (empty, chain, fixture):
+        driver = _cc_labels(edges)
+        plan = D.connected_components(
+            edges
+        )._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        with monkeypatch.context() as m:
+            m.setattr(D, "CC_DRIVER_MAX_EDGES", 0)
+            distributed = _cc_labels(edges)
+        assert driver == distributed
+    assert len(driver) > 2  # the fixture graph is not trivial
+
+
+def test_connected_components_gate_at_budget(spark, monkeypatch):
+    """The gate is the observed edge count: a graph of exactly the
+    budget resolves in the driver, one edge more runs the distributed
+    loop, and both give the same labels."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (21, 22)],
+        "doc_a long, doc_b long",
+    )
+    calls = []
+    union_find = D._union_find_min_labels
+    monkeypatch.setattr(
+        D,
+        "_union_find_min_labels",
+        lambda pairs: calls.append(len(pairs)) or union_find(pairs),
+    )
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", 7)
+    at_budget = _cc_labels(edges)
+    assert calls == [7]
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", 6)
+    over_budget = _cc_labels(edges)
+    assert calls == [7]  # the driver path was not taken
+    assert at_budget == over_budget
+
+
 def test_hot_shingle_cap_kills_quadratic_bucket_keeps_neardups(spark):
     """The max_shingle_df guard: docs related ONLY through a corpus-wide
     hot shingle must stop pairing, while true near-dups (sharing many

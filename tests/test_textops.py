@@ -230,6 +230,70 @@ def test_bpe_train_merges_hand_model(spark):
     ]
 
 
+#: word types with argmax ties, non-ASCII symbols, \x01 (below the
+#: space, so pair-string and tuple tie orders differ once 'a\x01' is a
+#: symbol) and a leading \x1c (whitespace to Python's bare
+#: strip()/split(), not to Spark's trim/split(" "))
+_BPE_EDGE_WORDS = (
+    ["a\x01b"] * 4 + ["a\x01"] + ["ab"] * 4 + ["\x1cz"] * 3
+    + ["éé"] * 2 + ["😀😀"] * 2
+)
+
+
+def _bpe_docs(spark, words):
+    return spark.createDataFrame(
+        [(i, " ".join(words[i::3])) for i in range(3)],
+        "doc_id long, text string",
+    )
+
+
+def test_bpe_driver_merges_match_distributed(spark, sf_dir, monkeypatch):
+    """The driver-side merge loop and the distributed loop train the
+    same merge table: on the fixture corpus, and on a hand corpus
+    whose merges pin the pair-string tie order, code-point symbols and
+    space-only stripping."""
+    from mpi_mapreduce_spark.operators import textops as TX
+    from mpi_mapreduce_spark.operators.textops import _docs
+
+    edge = _bpe_docs(spark, _BPE_EDGE_WORDS)
+    for docs, rounds in ((_docs(spark, sf_dir), 12), (edge, 8)):
+        driver = TX.bpe_merge_list(docs, rounds)
+        with monkeypatch.context() as m:
+            m.setattr(TX, "BPE_DRIVER_MAX_WORDS", 0)
+            assert TX.bpe_merge_list(docs, rounds) == driver
+    assert driver == [
+        (1, "a", "\x01", "a\x01", 5),
+        (2, "a\x01", "b", "a\x01b", 4),  # 'a\x01 b' < 'a b'
+        (3, "a", "b", "ab", 4),
+        (4, "\x1c", "z", "\x1cz", 3),
+        (5, "é", "é", "éé", 2),
+        (6, "😀", "😀", "😀😀", 2),
+    ]
+
+
+def test_bpe_gate_at_budget(spark, monkeypatch):
+    """The gate is the observed vocabulary size: exactly the budget
+    trains in the driver, one word type more runs the distributed
+    loop, and both give the same merges."""
+    from mpi_mapreduce_spark.operators import textops as TX
+
+    docs = _bpe_docs(spark, _BPE_EDGE_WORDS)  # 6 word types
+    calls = []
+    local = TX._bpe_merges_local
+    monkeypatch.setattr(
+        TX,
+        "_bpe_merges_local",
+        lambda vocab, rounds: calls.append(len(vocab)) or local(vocab, rounds),
+    )
+    monkeypatch.setattr(TX, "BPE_DRIVER_MAX_WORDS", 6)
+    at_budget = TX.bpe_merge_list(docs, 3)
+    assert calls == [6]
+    monkeypatch.setattr(TX, "BPE_DRIVER_MAX_WORDS", 5)
+    over_budget = TX.bpe_merge_list(docs, 3)
+    assert calls == [6]  # the driver path was not taken
+    assert at_budget == over_budget
+
+
 def test_bpe_encode_counts_match_hand_tokenization(spark):
     from mpi_mapreduce_spark.operators.textops import (
         bpe_train_merges,
