@@ -63,14 +63,14 @@ LEN_BAND = 50
 
 #: MinHash: 32 hash functions in 16 bands x 2 rows — P(candidate) =
 #: 1-(1-j²)^16 ≈ 99% at j=0.5. CONFIRMED by the r7 measured sweep
-#: (SCALING.md band-shape table; knobs are per-call n_hashes/n_bands
-#: since r7): on a 100k planted corpus whose truth set hugs the 0.5
+#: (SCALING.md band-shape table; the sweep sets these two constants):
+#: on a 100k planted corpus whose truth set hugs the 0.5
 #: threshold this shape finds 1047/1049 (theorem-predicted 0.9987),
 #: while 8 bands x 4 rows loses 17 pts of recall, 32x1 full-recall
 #: banding explodes candidate mass 129x on a realistic j-distribution
 #: (r=1's S-curve midpoint is j≈0.02), and 64 hashes double the
 #: signature wire for +0.2 pt. The 16-hash half-wire tier (-1.7 pt)
-#: is the serving knob when signature shuffle payload dominates.
+#: is the alternative when signature shuffle payload dominates.
 MINHASH_HASHES = 32
 MINHASH_BANDS = 16
 
@@ -804,25 +804,20 @@ BLOOM_WORD_BITS = 32
 BLOOM_HASHES = 4
 
 
-def _bloom_positions(
-    key: F.Column,
-    m_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> list[F.Column]:
+def _bloom_positions(key: F.Column, m_bits: int) -> list[F.Column]:
     """The k bit positions of ``key`` — pure md5 arithmetic, computed
     IDENTICALLY by Spark and DuckDB (the repo's cross-engine hash
     convention, similarity.py's md5-ordered IVF sample precedent):
     h1/h2 are the two 60-bit halves of md5(key); position i is
     (h1 + i·h2) mod m. 60-bit halves + i small stay far below 2^63,
-    so the arithmetic never overflows in either engine. ``m_bits``/
-    ``n_hashes`` are per-call knobs (the r7 MinHash convention) — the
-    registered queries pin the module defaults; the SCALING.md sweep
-    varies m."""
+    so the arithmetic never overflows in either engine. ``m_bits`` is
+    BLOOM_BITS for the doc-level filter and NOVELTY_BLOOM_BITS for the
+    shingle-level one; k is BLOOM_HASHES."""
     h1 = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(F.md5(key), 17, 15), 16, 10).cast("long")
     return [
         (h1 + F.lit(i) * h2) % F.lit(m_bits)
-        for i in range(n_hashes)
+        for i in range(BLOOM_HASHES)
     ]
 
 
@@ -830,7 +825,6 @@ def bloom_build(
     keys: DataFrame,
     key_col: str = "text",
     m_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
 ) -> DataFrame:
     """Build the packed Bloom filter table ``(word, bits)`` over a key
     column — the stored ARTIFACT of this family.
@@ -846,7 +840,7 @@ def bloom_build(
     a 100 TB filter with no global pass."""
     pos = keys.select(
         F.explode(
-            F.array(*_bloom_positions(F.col(key_col), m_bits, n_hashes))
+            F.array(*_bloom_positions(F.col(key_col), m_bits))
         ).alias("pos")
     )
     return pos.groupBy(
@@ -870,13 +864,7 @@ def bloom_merge(filters: DataFrame) -> DataFrame:
     return filters.groupBy("word").agg(F.bit_or("bits").alias("bits"))
 
 
-def bloom_screen(
-    batch: DataFrame,
-    bloom: DataFrame,
-    key_col: str = "text",
-    m_bits: int = BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
+def bloom_screen(batch: DataFrame, bloom: DataFrame) -> DataFrame:
     """Membership screen: per batch row, ``bloom_seen`` = all k probed
     bits set. One equi-join on word id — the batch side carries
     k rows per key, the filter side is the stored table; no text
@@ -888,7 +876,7 @@ def bloom_screen(
     probes = batch.select(
         "doc_id",
         F.explode(
-            F.array(*_bloom_positions(F.col(key_col), m_bits, n_hashes))
+            F.array(*_bloom_positions(F.col("text"), BLOOM_BITS))
         ).alias("pos"),
     ).select(
         "doc_id",
@@ -1102,7 +1090,7 @@ ORACLE_NOVELTY_SCORE = f"""
 """
 
 
-#: shingle-level filter size — a SEPARATE knob from the doc-level
+#: shingle-level filter size — a SEPARATE constant from the doc-level
 #: BLOOM_BITS because the key population is ~50× larger (every
 #: distinct word-3-gram, not every distinct text). 2^22 bits keeps
 #: the fixture corpora (15k-27k shingles) at ≲0.03 load → FP ≈ 0,
@@ -1114,12 +1102,7 @@ ORACLE_NOVELTY_SCORE = f"""
 NOVELTY_BLOOM_BITS = 1 << 22
 
 
-def novelty_scores_bloom(
-    batch: DataFrame,
-    corpus: DataFrame,
-    m_bits: int = NOVELTY_BLOOM_BITS,
-    n_hashes: int = BLOOM_HASHES,
-) -> DataFrame:
+def novelty_scores_bloom(batch: DataFrame, corpus: DataFrame) -> DataFrame:
     """Novelty estimated against a Bloom filter of the CORPUS SHINGLE
     SET instead of the shingle set itself — the membership sketch
     generalized from doc-level to feature-level screening. At 100 TB
@@ -1133,8 +1116,7 @@ def novelty_scores_bloom(
     filt = bloom_build(
         corpus.transform(shingle_rows).select("s"),
         key_col="s",
-        m_bits=m_bits,
-        n_hashes=n_hashes,
+        m_bits=NOVELTY_BLOOM_BITS,
     )
     probes = (
         shingle_rows(batch)
@@ -1142,7 +1124,7 @@ def novelty_scores_bloom(
             "doc_id",
             "s",
             F.explode(
-                F.array(*_bloom_positions(F.col("s"), m_bits, n_hashes))
+                F.array(*_bloom_positions(F.col("s"), NOVELTY_BLOOM_BITS))
             ).alias("pos"),
         )
         .select(
@@ -1411,11 +1393,9 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
     return _minhash_candidates(shingle_rows(docs))
 
 
-def minhash_signature_table(
-    srows: DataFrame, n_hashes: int = MINHASH_HASHES
-) -> DataFrame:
+def minhash_signature_table(srows: DataFrame) -> DataFrame:
     """(doc_id, mh0..mh{n-1}) — the persistable signature INDEX:
-    ``n_hashes`` longs per doc regardless of document size, mergeable
+    MINHASH_HASHES longs per doc regardless of document size, mergeable
     nightly like any sketch table.
 
     Signature via native min-aggregates over shingle rows, NOT
@@ -1426,25 +1406,24 @@ def minhash_signature_table(
     length-64 one (that prefix property is what makes recall monotone
     in signature length at fixed rows-per-band, pinned in
     tests/test_dedup.py). The groupBy gets map-side combine — the
-    shuffle carries ``n_hashes`` longs per doc, which is why signature
-    length is a wire-cost knob at 100 TB (SCALING.md's r7 sweep)."""
+    shuffle carries MINHASH_HASHES longs per doc, which is why signature
+    length sets the wire cost at 100 TB (SCALING.md's r7 sweep)."""
     shingle_hash = srows.select("doc_id", F.xxhash64("s").alias("h"))
     return shingle_hash.groupBy("doc_id").agg(
         *[
             F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"mh{i}")
-            for i in range(n_hashes)
+            for i in range(MINHASH_HASHES)
         ]
     )
 
 
-def minhash_band_keys(
-    sig: DataFrame,
-    n_hashes: int = MINHASH_HASHES,
-    n_bands: int = MINHASH_BANDS,
-) -> DataFrame:
+def minhash_band_keys(sig: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_hash) — the LSH join keys derived from a
-    signature table: ``n_bands`` bands of ``n_hashes/n_bands`` rows,
-    hashed to one long each (default 16×2)."""
+    signature table: MINHASH_BANDS bands of MINHASH_HASHES/MINHASH_BANDS
+    rows, hashed to one long each (16×2). The shape check runs here,
+    not at import, because the band-shape sweeps set the two constants
+    at run time."""
+    n_hashes, n_bands = MINHASH_HASHES, MINHASH_BANDS
     if n_hashes % n_bands:
         raise ValueError(
             f"n_bands {n_bands} must divide n_hashes {n_hashes}"
@@ -1471,14 +1450,8 @@ def minhash_band_keys(
     ).select("doc_id", "bk.band_id", "bk.band_hash")
 
 
-def _minhash_candidates(
-    srows: DataFrame,
-    n_hashes: int = MINHASH_HASHES,
-    n_bands: int = MINHASH_BANDS,
-) -> DataFrame:
-    bands = minhash_band_keys(
-        minhash_signature_table(srows, n_hashes), n_hashes, n_bands
-    )
+def _minhash_candidates(srows: DataFrame) -> DataFrame:
+    bands = minhash_band_keys(minhash_signature_table(srows))
     buckets = (
         bands.groupBy("band_id", "band_hash")
         .agg(F.collect_list("doc_id").alias("ids"))
@@ -1519,17 +1492,14 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @contextmanager
-def shingle_index(
-    docs: DataFrame, storage_level: StorageLevel | None = None
-):
+def shingle_index(docs: DataFrame):
     """Context-managed shingle INDEX — the composition API for
     long-lived sessions (ADVICE/VERDICT r6: the default ``srows=None``
     paths persist an unowned copy per distinct input plan, which a
     session composing many dedup calls accumulates).
 
-    Builds :func:`shingle_rows`, persists it (MEMORY_AND_DISK unless
-    ``storage_level`` overrides), yields it for any number of
-    ``srows=``-threaded stages (:func:`minhash_jaccard_pairs`,
+    Builds :func:`shingle_rows`, persists it (MEMORY_AND_DISK), yields
+    it for any number of ``srows=``-threaded stages (:func:`minhash_jaccard_pairs`,
     :func:`ngram_jaccard_pairs`, :func:`containment_pairs`,
     :func:`_minhash_candidates`), and UNPERSISTS on exit — run the
     actions (or eagerly ``localCheckpoint`` the small stage outputs,
@@ -1539,11 +1509,7 @@ def shingle_index(
     tests/test_dedup.py::test_shingle_index_no_cache_growth pins the
     lifecycle: two invocations over two different doc frames leave the
     session's persisted-RDD census exactly where it started."""
-    srows = (
-        shingle_rows(docs).persist(storage_level)
-        if storage_level is not None
-        else shingle_rows(docs).persist()
-    )
+    srows = shingle_rows(docs).persist()
     try:
         yield srows
     finally:
@@ -1551,10 +1517,7 @@ def shingle_index(
 
 
 def minhash_jaccard_pairs(
-    docs: DataFrame,
-    srows: DataFrame | None = None,
-    n_hashes: int = MINHASH_HASHES,
-    n_bands: int = MINHASH_BANDS,
+    docs: DataFrame, srows: DataFrame | None = None
 ) -> DataFrame:
     """Core of :func:`dedup_minhash_lsh` over any (doc_id, text) frame
     — separated so the composed production ordering (exact dedup →
@@ -1578,13 +1541,13 @@ def minhash_jaccard_pairs(
     DIFFERENT frames should use the context-managed
     :func:`shingle_index` and run its actions inside the block.
 
-    ``n_hashes``/``n_bands``: signature length and band count (the r7
-    sweep knobs — SCALING.md's MinHash band-shape table); the defaults
-    are the production shape, and the exact-Jaccard verify step makes
-    every shape PRECISION-exact (band shape moves recall only)."""
+    Signature length and band count are MINHASH_HASHES/MINHASH_BANDS
+    (SCALING.md's MinHash band-shape table); the exact-Jaccard verify
+    step makes every shape PRECISION-exact (band shape moves recall
+    only)."""
     if srows is None:
         srows = shingle_rows(docs).persist()
-    cands = _minhash_candidates(srows, n_hashes, n_bands)
+    cands = _minhash_candidates(srows)
     # r14 exact-verify via the cogrouped BLOCK-GATHER shape (VERDICT
     # r13 item 5; the pattern proven on the embedding rescore): each
     # doc's distinct shingle set is gathered into ONE array row —
@@ -1951,11 +1914,10 @@ def _block_cells(emb: DataFrame) -> DataFrame:
     return emb.join(F.broadcast(mdf), "blk")
 
 
-def embedding_neardup_exact(
-    emb: DataFrame, threshold: float = EMBED_DUP_THRESHOLD
-) -> DataFrame:
-    """Vector near-dup pairs: cosine ≥ threshold over a pre-normalized
-    ``(vec_id, v)`` frame, so the pair test is a plain dot product.
+def embedding_neardup_exact(emb: DataFrame) -> DataFrame:
+    """Vector near-dup pairs: cosine ≥ EMBED_DUP_THRESHOLD over a
+    pre-normalized ``(vec_id, v)`` frame, so the pair test is a plain
+    dot product.
 
     EXACT all-pairs — by contract the exactness baseline (the pair
     threshold 0.4 sits inside a continuous cosine distribution, so no
@@ -1979,6 +1941,7 @@ def embedding_neardup_exact(
     )
     cells = _block_cells(emb)
 
+    threshold = EMBED_DUP_THRESHOLD
     raw_cut = threshold - 5e-7  # quantize(6) half-step guard
 
     def _score(key, pdf):
@@ -2085,12 +2048,7 @@ def _band_hyperplanes(dim: int, bits: int, bands: int) -> "list":
     return rng.randn(bands * bits, dim)
 
 
-def embedding_band_rows(
-    emb: DataFrame,
-    dim: int,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> DataFrame:
+def embedding_band_rows(emb: DataFrame, dim: int) -> DataFrame:
     """Hyperplane sign-bucket rows ``(vec_id, band, bucket)`` over a
     normalized ``(vec_id, v)`` frame — the shared banding stage of the
     LSH candidate join AND the cheap collision-density probe
@@ -2098,6 +2056,7 @@ def embedding_band_rows(
     counts WITHOUT the pair expansion)."""
     from pyspark.sql.functions import pandas_udf
 
+    band_bits, n_bands = EMBED_LSH_BAND_BITS, EMBED_LSH_BANDS
     hps = _band_hyperplanes(dim, band_bits, n_bands)
 
     @pandas_udf("array<int>")
@@ -2156,17 +2115,12 @@ def embedding_band_rows(
     )
 
 
-def embedding_lsh_candidates(
-    emb: DataFrame,
-    dim: int,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> DataFrame:
+def embedding_lsh_candidates(emb: DataFrame, dim: int) -> DataFrame:
     """Co-bucketed candidate ID pairs ``(vec_a < vec_b)`` — a pair
     appears iff ALL sign bits agree in at least one band. Shared by
     the rescoring search and the banded validation query (which must
     recompute exactly this set to check found-iff-cobucketed)."""
-    banded = embedding_band_rows(emb, dim, band_bits, n_bands)
+    banded = embedding_band_rows(emb, dim)
     left = banded.select(
         F.col("vec_id").alias("vec_a"), "band", "bucket"
     )
@@ -2187,12 +2141,7 @@ def embedding_lsh_candidates(
 
 
 def embedding_neardup_lsh(
-    emb: DataFrame,
-    dim: int,
-    threshold: float = EMBED_DUP_THRESHOLD,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-    cands: DataFrame | None = None,
+    emb: DataFrame, dim: int, cands: DataFrame | None = None
 ) -> DataFrame:
     """Banded-LSH candidate generation + exact cosine rescore over a
     normalized ``(vec_id, v)`` frame. Every stage is a shuffle
@@ -2221,7 +2170,7 @@ def embedding_neardup_lsh(
         # multiplicity rows through Arrow for an in-task np.unique
         # (5.2-6.1 s vs 4.0-4.1 s at sf0.1 — the partial hash
         # aggregate prunes map-side before anything crosses to Python)
-        cands = embedding_lsh_candidates(emb, dim, band_bits, n_bands)
+        cands = embedding_lsh_candidates(emb, dim)
     blk_a = F.pmod(F.col("vec_a"), F.lit(EMBED_BLOCKS)).cast("int")
     blk_b = F.pmod(F.col("vec_b"), F.lit(EMBED_BLOCKS)).cast("int")
     keyed = cands.select(
@@ -2235,6 +2184,7 @@ def embedding_neardup_lsh(
             "blk", F.pmod(F.col("vec_id"), F.lit(EMBED_BLOCKS)).cast("int")
         )
     )
+    threshold = EMBED_DUP_THRESHOLD
     raw_cut = threshold - 5e-7  # quantize(6) half-step guard
 
     def _rescore(pairs_pdf, cells_pdf):
@@ -2370,8 +2320,6 @@ def embedding_incremental_candidates(
     batch: DataFrame,
     corpus: DataFrame,
     dim: int,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Batch-against-index candidate pairs ``(vec_a = batch id,
@@ -2393,11 +2341,11 @@ def embedding_incremental_candidates(
     the parquet scan of three skinny columns. Equality of the stored
     and rebuilt paths is pinned in
     tests/test_dedup.py::test_bucket_index_feeds_incremental."""
-    bb = embedding_band_rows(batch, dim, band_bits, n_bands).select(
+    bb = embedding_band_rows(batch, dim).select(
         F.col("vec_id").alias("vec_a"), "band", "bucket"
     )
     if corpus_bands is None:
-        corpus_bands = embedding_band_rows(corpus, dim, band_bits, n_bands)
+        corpus_bands = embedding_band_rows(corpus, dim)
     bc = corpus_bands.select(
         F.col("vec_id").alias("vec_b"), "band", "bucket"
     )
@@ -2410,13 +2358,10 @@ def embedding_incremental_hits(
     batch: DataFrame,
     corpus: DataFrame,
     dim: int,
-    threshold: float = EMBED_DUP_THRESHOLD,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """The incremental pipeline's scored batch×corpus hit pairs
-    ``(vec_a = batch id, vec_b = corpus id, cosine ≥ threshold)`` —
+    ``(vec_a = batch id, vec_b = corpus id, cosine ≥ EMBED_DUP_THRESHOLD)`` —
     the heavy stage, exposed for the validate twin and the scale
     rehearsal (the decision wrapper's per-batch-vector left join is
     eliminable under a count, so measuring THIS frame is what times
@@ -2424,9 +2369,7 @@ def embedding_incremental_hits(
     rescore fed only the vectors candidates reference (one left-semi
     join) so the O(n·B) cell fan-out is O(|touched|·B), not
     corpus-sized."""
-    cands = embedding_incremental_candidates(
-        batch, corpus, dim, band_bits, n_bands, corpus_bands
-    )
+    cands = embedding_incremental_candidates(batch, corpus, dim, corpus_bands)
     touched_ids = (
         cands.select(F.col("vec_a").alias("vec_id"))
         .unionByName(cands.select(F.col("vec_b").alias("vec_id")))
@@ -2434,18 +2377,13 @@ def embedding_incremental_hits(
     )
     emb = batch.unionByName(corpus)
     touched = emb.join(touched_ids, "vec_id", "left_semi")
-    return embedding_neardup_lsh(
-        touched, dim, threshold, band_bits, n_bands, cands=cands
-    )
+    return embedding_neardup_lsh(touched, dim, cands=cands)
 
 
 def embedding_dedup_against_corpus(
     batch: DataFrame,
     corpus: DataFrame,
     dim: int,
-    threshold: float = EMBED_DUP_THRESHOLD,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
     corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Per-batch-vector keep/drop against an EXISTING embedding corpus
@@ -2467,7 +2405,7 @@ def embedding_dedup_against_corpus(
        reference (one left-semi join) so the O(n·B) cell fan-out is
        O(|touched|·B), not corpus-sized;
     3. per-batch-vector flags: ``is_near_dup`` iff some corpus
-       candidate rescored ≥ ``threshold``, ``keep`` its negation —
+       candidate rescored ≥ EMBED_DUP_THRESHOLD, ``keep`` its negation —
        same decision shape as :func:`dedup_incremental`.
 
     Approximate exactly like :func:`dedup_embedding_lsh` (recall < 1
@@ -2475,9 +2413,7 @@ def embedding_dedup_against_corpus(
     exact rescore, banding-theorem recall at the registered b=2/L=12
     shape); rows-only with the driver, invariant driver-attested via
     :func:`dedup_incremental_embedding_validate`."""
-    scored = embedding_incremental_hits(
-        batch, corpus, dim, threshold, band_bits, n_bands, corpus_bands
-    )
+    scored = embedding_incremental_hits(batch, corpus, dim, corpus_bands)
     near = (
         scored.select(F.col("vec_a").alias("vec_id"))
         .distinct()
@@ -2773,12 +2709,7 @@ def _nightly_embedding_core(
     return decisions
 
 
-def embedding_index_integrity(
-    spark: SparkSession,
-    index_dir: str,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> DataFrame:
+def embedding_index_integrity(spark: SparkSession, index_dir: str) -> DataFrame:
     """DQ audit over a persisted embedding dedup index (the
     bands + vectors legs the nightly embedding leg maintains) —
     the stored-index analog of dq.py's table audits, because at 100 TB
@@ -2790,7 +2721,7 @@ def embedding_index_integrity(
     - ``n_orphan_band_rows``: band rows whose vec_id has no stored
       vector (broken referential integrity — candidates would join
       against vectors the rescore can't fetch);
-    - ``n_incomplete_vectors``: stored vectors with != n_bands band
+    - ``n_incomplete_vectors``: stored vectors with != EMBED_LSH_BANDS band
       rows (partial banding — silent recall loss for those vectors);
     - ``n_stale_band_rows``: band rows that DISAGREE with the bucket
       recomputed from the stored vector (e.g. the index predates a
@@ -2827,7 +2758,7 @@ def embedding_index_integrity(
             F.lit(0).cast("long").alias("n_stale_band_rows"),
         )
     dim = len(first[0])
-    recomputed = embedding_band_rows(vecs, dim, band_bits, n_bands).select(
+    recomputed = embedding_band_rows(vecs, dim).select(
         "vec_id",
         F.col("band").alias("r_band"),
         F.col("bucket").alias("r_bucket"),
@@ -2836,7 +2767,7 @@ def embedding_index_integrity(
     incomplete = (
         vecs.select("vec_id")
         .join(bands.groupBy("vec_id").count(), "vec_id", "left")
-        .where(F.coalesce(F.col("count"), F.lit(0)) != F.lit(n_bands))
+        .where(F.coalesce(F.col("count"), F.lit(0)) != F.lit(EMBED_LSH_BANDS))
     )
     stale = bands.join(
         recomputed,
@@ -2879,13 +2810,7 @@ def embedding_index_integrity(
 EMBED_AUTO_CAND_FRACTION = 0.5
 
 
-def embedding_neardup_auto(
-    emb: DataFrame,
-    dim: int,
-    threshold: float = EMBED_DUP_THRESHOLD,
-    band_bits: int = EMBED_LSH_BAND_BITS,
-    n_bands: int = EMBED_LSH_BANDS,
-) -> tuple[DataFrame, str]:
+def embedding_neardup_auto(emb: DataFrame, dim: int) -> tuple[DataFrame, str]:
     """Choose the embedding near-dup plan by MEASURED candidate
     density, then run it — SCALING.md's round-3 finding made explicit:
     banded LSH wins when its buckets prune, and a threshold-hugging
@@ -2911,9 +2836,9 @@ def embedding_neardup_auto(
     n = emb.count()
     total_pairs = n * (n - 1) / 2.0
     if total_pairs <= 0:
-        return embedding_neardup_exact(emb, threshold), "exact"
+        return embedding_neardup_exact(emb), "exact"
     est = (
-        embedding_band_rows(emb, dim, band_bits, n_bands)
+        embedding_band_rows(emb, dim)
         .groupBy("band", "bucket")
         .agg(F.count("*").alias("k"))
         .agg(F.sum(F.col("k") * (F.col("k") - 1) / 2).alias("cp"))
@@ -2921,11 +2846,8 @@ def embedding_neardup_auto(
         or 0.0
     )
     if est < EMBED_AUTO_CAND_FRACTION * total_pairs:
-        return (
-            embedding_neardup_lsh(emb, dim, threshold, band_bits, n_bands),
-            "lsh",
-        )
-    return embedding_neardup_exact(emb, threshold), "exact"
+        return embedding_neardup_lsh(emb, dim), "lsh"
+    return embedding_neardup_exact(emb), "exact"
 
 
 def dedup_embedding_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2947,15 +2869,13 @@ def dedup_embedding_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 # clusters only
 # ---------------------------------------------------------------------------
 
-def semantic_dedup_flags(
-    emb: DataFrame, threshold: float = EMBED_DUP_THRESHOLD
-) -> DataFrame:
+def semantic_dedup_flags(emb: DataFrame) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al. 2023,
     arXiv:2303.09540): k-means the embedding space (the distributed
     spherical Lloyd in operators/similarity.py), then compare vectors
     ONLY within their cluster — keep-first: a vector is a semantic dup
     iff some LOWER vec_id in the same cluster has quantized cosine ≥
-    threshold.
+    EMBED_DUP_THRESHOLD.
 
     This is the scale contract that makes embedding dedup tractable at
     100 TB: the quadratic pair space shrinks from n² to Σ_c |c|² — with
@@ -2979,7 +2899,7 @@ def semantic_dedup_flags(
     data = kmeans_assignments(emb, keep_vec=True).select(
         "vec_id", "v", "cluster"
     )
-    raw_cut = threshold  # comparisons use the quantized dots directly
+    raw_cut = EMBED_DUP_THRESHOLD  # comparisons use the quantized dots directly
 
     def _prune(key, pdf):
         import numpy as np
@@ -3386,7 +3306,10 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_CANONICAL_CORPUS = f"""
+#: the recursive closure of the ngram-Jaccard pair graph, shared by
+#: every connected-component oracle: ``comp`` holds (doc_id, component
+#: = the least reachable doc_id) for each doc that has a pair
+CC_SQL_CTE = f"""
     WITH RECURSIVE pairs AS (
       SELECT doc_a, doc_b FROM ({ORACLE_NGRAM_JACCARD})
     ), sym AS (
@@ -3400,7 +3323,9 @@ ORACLE_CANONICAL_CORPUS = f"""
     ), comp AS (
       SELECT src AS doc_id, least(src, MIN(dst)) AS component
       FROM reach GROUP BY src
-    ), labeled AS (
+    )"""
+
+ORACLE_CANONICAL_CORPUS = CC_SQL_CTE + """, labeled AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
       FROM documents d LEFT JOIN comp c USING (doc_id)
     )
@@ -3484,21 +3409,7 @@ def pipeline_canonical_containment(
     return containment_pairs(canon0, srows=canon_srows)
 
 
-ORACLE_PIPELINE_CANONICAL_CONTAINMENT = f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({ORACLE_NGRAM_JACCARD})
-    ), sym AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM sym
-      UNION
-      SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src
-    ), comp AS (
-      SELECT src AS doc_id, least(src, MIN(dst)) AS component
-      FROM reach GROUP BY src
-    ), canon AS (
+ORACLE_PIPELINE_CANONICAL_CONTAINMENT = CC_SQL_CTE + f""", canon AS (
       SELECT d.doc_id FROM documents d LEFT JOIN comp c USING (doc_id)
       WHERE COALESCE(c.component, d.doc_id) = d.doc_id
     ), ctoks AS (
@@ -3532,20 +3443,8 @@ ORACLE_PIPELINE_CANONICAL_CONTAINMENT = f"""
 """
 
 
-ORACLE_CONNECTED_COMPONENTS = f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({ORACLE_NGRAM_JACCARD})
-    ), sym AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM sym
-      UNION
-      SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src
-    )
-    SELECT src AS doc_id, least(src, MIN(dst)) AS component
-    FROM reach GROUP BY src
+ORACLE_CONNECTED_COMPONENTS = CC_SQL_CTE + """
+    SELECT doc_id, component FROM comp
 """
 
 
@@ -3842,12 +3741,14 @@ def dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repeated_ngram_stats(_docs(spark, sf_dir))
 
 
-def repeated_ngram_stats(
-    docs: DataFrame, n: int = REPEAT_NGRAM_N
-) -> DataFrame:
+def repeated_ngram_stats(docs: DataFrame) -> DataFrame:
     """Core of :func:`dedup_repeated_ngrams` over any (doc_id, text)
     frame — separated so tests can plant shared passages."""
-    grams = positional_ngram_rows(docs, n).select("doc_id", "s").distinct()
+    grams = (
+        positional_ngram_rows(docs, REPEAT_NGRAM_N)
+        .select("doc_id", "s")
+        .distinct()
+    )
     dfreq = grams.groupBy("s").agg(F.count("*").alias("df"))
     per = (
         grams.join(dfreq, "s")
@@ -3917,12 +3818,12 @@ ORACLE_REPEATED_NGRAMS = f"""
 SPAN_N = 8
 
 
-def duplicated_span_rows(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
+def duplicated_span_rows(docs: DataFrame) -> DataFrame:
     """Maximal cross-document duplicated token spans — the
     EXACT-SUBSTRING complement to document-level dedup: one row
     ``(doc_id, span_start, span_end, span_tokens)`` per maximal run of
-    tokens that is covered by at least one ``n``-gram occurring in ≥ 2
-    distinct documents. This is the span-level operator behind
+    tokens that is covered by at least one ``n``-gram (n = SPAN_N)
+    occurring in ≥ 2 distinct documents. This is the span-level operator behind
     "remove every ≥k-token substring that repeats across the corpus"
     (the suffix-array dedup of Lee et al. 2021) re-expressed on
     Spark's relational primitives: the k-gram seed match replaces the
@@ -3954,6 +3855,7 @@ def duplicated_span_rows(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     Docs shorter than ``n`` tokens cannot contain an ``n``-token span
     and are excluded by construction (``glen == n`` filters the
     whole-doc short gram positional_ngram_rows emits)."""
+    n = SPAN_N
     occ = positional_ngram_rows(docs, n).where(F.col("glen") == n)
     ws = W.partitionBy("s")
     starts = (
@@ -3969,15 +3871,15 @@ def duplicated_span_rows(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     return _spans_from_starts(starts, n)
 
 
-def substring_dup_stats(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
+def substring_dup_stats(docs: DataFrame) -> DataFrame:
     """Per-document duplicated-token exposure derived from
     :func:`duplicated_span_rows`: how many of a doc's tokens sit
-    inside some cross-document repeated ≥n-token span — the corpus
+    inside some cross-document repeated ≥SPAN_N-token span — the corpus
     report that decides span-removal thresholds before training.
     Docs with no duplicated span come back with zeros (left join),
     not silently dropped; token-less docs contribute nothing (same
     contract as token_rows)."""
-    spans = duplicated_span_rows(docs, n)
+    spans = duplicated_span_rows(docs)
     per = spans.groupBy("doc_id").agg(
         F.sum("span_tokens").alias("dup_tokens"),
         F.count("*").alias("n_spans"),
@@ -3997,10 +3899,10 @@ def substring_dup_stats(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     )
 
 
-def strip_duplicated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
+def strip_duplicated_spans(docs: DataFrame) -> DataFrame:
     """The actionable form of :func:`duplicated_span_rows` — Lee et
     al. 2021 applied: every token inside a cross-document repeated
-    ≥n-token span is REMOVED and the document rebuilt token-exactly
+    ≥SPAN_N-token span is REMOVED and the document rebuilt token-exactly
     from what's left. Returns (doc_id, n_tokens, n_removed,
     clean_text); docs that are entirely duplicated span come back with
     empty clean_text (left join), not silently dropped.
@@ -4012,7 +3914,7 @@ def strip_duplicated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     construction (maximal merged islands), so the covered frame needs
     no distinct. All stages shuffle on doc_id — one partitioning,
     reused."""
-    spans = duplicated_span_rows(docs, n)
+    spans = duplicated_span_rows(docs)
     covered = spans.select(
         "doc_id",
         F.explode(F.sequence("span_start", "span_end")).alias("p"),
@@ -4040,9 +3942,9 @@ def strip_duplicated_spans(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     )
 
 
-def substring_gram_index_rows(corpus: DataFrame, n: int = SPAN_N) -> DataFrame:
+def substring_gram_index_rows(corpus: DataFrame) -> DataFrame:
     """The stored ARTIFACT of the substring modality: the corpus's
-    distinct full-``n``-gram vocabulary, one ``(s)`` row per gram —
+    distinct full-SPAN_N-gram vocabulary, one ``(s)`` row per gram —
     what :func:`incremental_span_rows` probes instead of re-gramming
     the corpus per night (the round-8 caveat SCALING.md documented:
     every other incremental modality served from a registered index;
@@ -4054,8 +3956,8 @@ def substring_gram_index_rows(corpus: DataFrame, n: int = SPAN_N) -> DataFrame:
     collapses repeats map-side, so the shuffle carries ≈ the
     vocabulary, not the corpus."""
     return (
-        positional_ngram_rows(corpus, n)
-        .where(F.col("glen") == n)
+        positional_ngram_rows(corpus, SPAN_N)
+        .where(F.col("glen") == SPAN_N)
         .select("s")
         .distinct()
     )
@@ -4064,13 +3966,12 @@ def substring_gram_index_rows(corpus: DataFrame, n: int = SPAN_N) -> DataFrame:
 def incremental_span_rows(
     batch: DataFrame,
     corpus: DataFrame | None = None,
-    n: int = SPAN_N,
     corpus_grams: DataFrame | None = None,
 ) -> DataFrame:
     """The INCREMENTAL form of :func:`duplicated_span_rows` — the
     fifth modality of the batch-vs-corpus family (exact text, MinHash,
     embedding, Bloom membership, and now substring spans): maximal
-    runs of tonight's batch tokens covered by an ``n``-gram that
+    runs of tonight's batch tokens covered by a SPAN_N-gram that
     ALREADY APPEARS in the historical corpus. This is Lee et al. 2021
     span removal as a nightly job: the corpus is touched only through
     its distinct gram vocabulary — pass ``corpus_grams`` (the STORED
@@ -4086,11 +3987,12 @@ def incremental_span_rows(
     reuse across the two window passes."""
     if (corpus is None) == (corpus_grams is None):
         raise ValueError("pass exactly one of corpus / corpus_grams")
+    n = SPAN_N
     occ = positional_ngram_rows(batch, n).where(F.col("glen") == n)
     seen = (
         corpus_grams.select("s")
         if corpus_grams is not None
-        else substring_gram_index_rows(corpus, n)
+        else substring_gram_index_rows(corpus)
     )
     # LEFT SEMI, not inner: "does this gram exist in the vocabulary" —
     # duplicate-tolerant, so a serving-side UNION of per-batch index
@@ -4453,7 +4355,6 @@ def _gram_cross_spans(
     batch: DataFrame,
     index_dir: str,
     exclude: str | None = None,
-    n: int = SPAN_N,
 ) -> DataFrame:
     """The substring probe: :func:`incremental_span_rows` of ``batch``
     against the stored gram vocabulary at ``index_dir``, one left
@@ -4463,6 +4364,7 @@ def _gram_cross_spans(
     posexplode/window chain per tier (measured at 1M: 17.3 s vs
     31.6 s) and the covered starts are distinct'd (a start can hit
     both tiers)."""
+    n = SPAN_N
     occ = positional_ngram_rows(batch, n).where(F.col("glen") == n)
     # first night: an empty vocabulary, nothing to flag
     tiers = _serving_tiers(spark, index_dir, "grams", exclude) or [
@@ -4826,7 +4728,6 @@ def dedup_incremental_substring(
 def strip_incremental_spans(
     batch: DataFrame,
     corpus: DataFrame | None = None,
-    n: int = SPAN_N,
     corpus_grams: DataFrame | None = None,
 ) -> DataFrame:
     """The production tail of the incremental substring modality:
@@ -4841,7 +4742,7 @@ def strip_incremental_spans(
     all stages shuffle on the batch's doc_id, no pairwise term; the
     corpus enters only through the gram vocabulary (pass
     ``corpus_grams`` to serve from the stored artifact)."""
-    spans = incremental_span_rows(batch, corpus, n, corpus_grams)
+    spans = incremental_span_rows(batch, corpus, corpus_grams)
     covered = spans.select(
         "doc_id",
         F.explode(F.sequence("span_start", "span_end")).alias("p"),
@@ -4919,9 +4820,7 @@ def _nightly_substring_core(
     return spans
 
 
-def gram_index_integrity(
-    spark: SparkSession, index_dir: str, n: int = SPAN_N
-) -> DataFrame:
+def gram_index_integrity(spark: SparkSession, index_dir: str) -> DataFrame:
     """DQ audit over a persisted substring gram index (the per-batch
     partitions the nightly substring leg appends) — the stored-index
     analog of :func:`embedding_index_integrity`, because at 100 TB
@@ -4931,8 +4830,8 @@ def gram_index_integrity(
     - ``n_rows``: total gram rows across all batch partitions;
     - ``n_null_or_empty``: NULL or empty gram strings (a writer bug —
       the builder derives grams from non-empty tokens only);
-    - ``n_wrong_arity``: grams whose whitespace token count != n (the
-      index stores FULL n-grams only; a short gram means a filter
+    - ``n_wrong_arity``: grams whose whitespace token count != SPAN_N
+      (the index stores FULL n-grams only; a short gram means a filter
       regression upstream and silently over-matches short batch
       docs);
     - ``n_dup_within_batch``: repeated grams INSIDE one batch
@@ -4964,7 +4863,7 @@ def gram_index_integrity(
                 F.when(
                     F.col("s").isNotNull()
                     & (F.col("s") != "")
-                    & (arity != n),
+                    & (arity != SPAN_N),
                     1,
                 ).otherwise(0)
             ),
@@ -4985,11 +4884,7 @@ def gram_index_integrity(
     return per.crossJoin(F.broadcast(dups))
 
 
-def bloom_filter_integrity(
-    spark: SparkSession,
-    index_dir: str,
-    m_bits: int = BLOOM_BITS,
-) -> DataFrame:
+def bloom_filter_integrity(spark: SparkSession, index_dir: str) -> DataFrame:
     """DQ audit over a persisted Bloom filter table (the per-batch
     partitions the nightly Bloom leg appends): one row of violation
     counters —
@@ -5007,7 +4902,7 @@ def bloom_filter_integrity(
 
     A clean index reads (n, 0, 0, 0). One grouped pass, linear."""
     rows = spark.read.parquet(index_dir).select("word", "bits")
-    n_words = m_bits // BLOOM_WORD_BITS
+    n_words = BLOOM_BITS // BLOOM_WORD_BITS
     # coalesce: F.sum over an EMPTY table is NULL; a zero-row Bloom
     # partition (empty docs file night) must audit as 0s (ADVICE r9)
     return rows.select(

@@ -34,9 +34,9 @@ from mpi_mapreduce_spark.functions import vectors as VEC
 TOP_K = 10
 N_QUERIES = 5  # vec_id < 5 serve as the query set in registry queries
 LSH_BITS = 8
-#: multiprobe width of the REGISTERED ann_lsh query; ann_lsh's
-#: signature default and ann_lsh_topk's validation-twin probe set both
-#: derive from this one constant (ADVICE r6: one definition).
+#: multiprobe width of ann_lsh; ann_lsh's probe set and ann_lsh_topk's
+#: validation-twin probe set both derive from this one constant
+#: (ADVICE r6: one definition).
 LSH_PROBE_BITS_DEFAULT = 1
 LSH_SEED = 42
 
@@ -144,16 +144,14 @@ def ann_lsh(
     corpus: DataFrame,
     queries: DataFrame,
     dim: int,
-    k: int = TOP_K,
-    probe_bits: int = LSH_PROBE_BITS_DEFAULT,
     corpus_buckets: DataFrame | None = None,
 ) -> DataFrame:
-    """Approximate top-k: bucket the corpus once, probe each query's
-    bucket plus every neighbor within ``probe_bits`` bit flips
+    """Approximate top-TOP_K: bucket the corpus once, probe each query's
+    bucket plus every neighbor within LSH_PROBE_BITS_DEFAULT bit flips
     (multiprobe), exact-rescore only the touched candidates via a
-    shuffle equi-join on bucket id. The registered query keeps the
-    1-bit default (recall/wall trade measured at 100k — SCALING.md);
-    ``probe_bits=2`` is the serving knob for recall-critical batches.
+    shuffle equi-join on bucket id. The width is 1 bit (recall/wall
+    trade measured at 100k — SCALING.md's probe-width table, where
+    2 bits is the recall-critical alternative).
 
     ``corpus_buckets`` is the STORED index path (round 8, same
     contract as the IVF and embedding-dedup families): pass the
@@ -172,7 +170,7 @@ def ann_lsh(
     probes = F.array(
         *[
             F.col("qbucket").bitwiseXOR(F.lit(m))
-            for m in _probe_masks(probe_bits)
+            for m in _probe_masks(LSH_PROBE_BITS_DEFAULT)
         ],
     )
     probing = qb.select(
@@ -189,7 +187,7 @@ def ann_lsh(
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "cosine", "rank")
     )
 
@@ -255,12 +253,10 @@ MMR_SHORTLIST = 30  #: exact top-N shortlist the greedy runs over
 def mmr_rerank(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = TOP_K,
-    shortlist: int = MMR_SHORTLIST,
     shortlist_df: DataFrame | None = None,
 ) -> DataFrame:
     """Maximal-marginal-relevance re-rank (Carbonell & Goldstein
-    1998): per query, greedily pick k of the top-``shortlist`` exact
+    1998): per query, greedily pick TOP_K of the top-MMR_SHORTLIST exact
     candidates maximizing λ·relevance − μ·max-similarity-to-already-
     picked — the diversity-aware serving top-k (RAG context selection,
     dedup-aware retrieval) where plain kNN returns five copies of the
@@ -282,14 +278,14 @@ def mmr_rerank(
     # is skipped entirely; the greedy diversifies whatever shortlist
     # the caller's index produced (subset/diversity pytest-pinned)
     short = (
-        knn_topk(corpus, queries, k=shortlist)
+        knn_topk(corpus, queries, k=MMR_SHORTLIST)
         if shortlist_df is None
         else shortlist_df
     )
     cand = short.select(
         "query_id", "vec_id", F.col("cosine").alias("rel")
     ).join(corpus, "vec_id")
-    lam, mu, kk = MMR_LAMBDA, MMR_MU, k
+    lam, mu, kk = MMR_LAMBDA, MMR_MU, TOP_K
 
     def greedy(pdf):
         import numpy as np
@@ -427,7 +423,7 @@ def _np_q6(a):
     ) / 1e6
 
 
-def ivf_centroids(corpus: DataFrame, n_cells: int = IVF_CELLS) -> list[list[float]]:
+def ivf_centroids(corpus: DataFrame) -> list[list[float]]:
     """Train the coarse quantizer: deterministic quantized Lloyd over a
     bounded, hash-ordered sample of the corpus, driver-side in numpy.
 
@@ -441,7 +437,7 @@ def ivf_centroids(corpus: DataFrame, n_cells: int = IVF_CELLS) -> list[list[floa
       (TakeOrdered, no full sort — reproducible at any parallelism).
       md5 — unlike the xxhash64 this used before round 8 — is computed
       identically by Spark and DuckDB, so the oracle re-derives the
-      SAME sample. Init = the first n_cells sample points.
+      SAME sample. Init = the first IVF_CELLS sample points.
     - assign: argmax of the QUANTIZED (scale 6, half-away) left-fold
       dot, first-max = lowest cell — the _assign_struct convention.
     - update: per-component mean in exact int64 arithmetic (each x
@@ -459,6 +455,7 @@ def ivf_centroids(corpus: DataFrame, n_cells: int = IVF_CELLS) -> list[list[floa
         .collect()
     )
     x = np.array([r.v for r in sample], dtype=np.float64)
+    n_cells = IVF_CELLS
     cents = x[:n_cells].copy()
     for _ in range(IVF_ITERS):
         dots = np.stack(
@@ -512,23 +509,21 @@ def _probe_cells_expr(vec_col: F.Column, cents: list[list[float]], nprobe: int) 
 
 
 def ann_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    cents: list[list[float]],
-    k: int = TOP_K,
-    nprobe: int = IVF_PROBES,
+    corpus: DataFrame, queries: DataFrame, cents: list[list[float]]
 ) -> DataFrame:
     """IVF search: assign the corpus to its nearest centroid cell (a
     one-time write-side job in production — the inverted file), probe
-    each query's nprobe nearest cells via an equi-join, exact-rescore
-    only those candidates. Scan cost ~ nprobe/n_cells of the corpus;
+    each query's IVF_PROBES nearest cells via an equi-join, exact-rescore
+    only those candidates. Scan cost ~ IVF_PROBES/IVF_CELLS of the corpus;
     every stage partitions by cell id, linear in corpus size."""
     dot = VEC.dot_arrow(F.col("qv"), F.col("v"))
     celled = corpus.withColumn("cell", _cell_expr(F.col("v"), cents))
     probing = queries.select(
         "query_id",
         "qv",
-        F.explode(_probe_cells_expr(F.col("qv"), cents, nprobe)).alias("cell"),
+        F.explode(_probe_cells_expr(F.col("qv"), cents, IVF_PROBES)).alias(
+            "cell"
+        ),
     )
     cands = probing.join(celled, "cell").where(F.col("vec_id") != F.col("query_id"))
     scored = cands.select(
@@ -539,7 +534,7 @@ def ann_ivf(
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "cosine", "rank")
     )
 
@@ -595,10 +590,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", bucket_expr(F.col("v"), dim).alias("nbucket")
     )
     qb = queries.withColumn("qbucket", bucket_expr(F.col("qv"), dim))
-    # Probe set derived from the SAME mask generator (and default
-    # width) ann_lsh uses, so the twin's found_iff_probed invariant
-    # tracks any future change to the registered probe_bits default at
-    # the source instead of diverging silently (ADVICE r6).
+    # Probe set derived from the SAME mask generator and width
+    # (LSH_PROBE_BITS_DEFAULT) ann_lsh uses, so the twin's
+    # found_iff_probed invariant tracks any future change to the width
+    # at the source instead of diverging silently (ADVICE r6).
     probes = F.array(
         *[
             F.col("qbucket").bitwiseXOR(F.lit(m))
@@ -1403,10 +1398,8 @@ ORACLE_MATRYOSHKA = f"""
 INT8_SCREEN_MARGIN = 1e-6
 
 
-def knn_topk_int8_screened(
-    corpus: DataFrame, queries: DataFrame, k: int = TOP_K
-) -> DataFrame:
-    """Exact top-k via int8-screened search: approximate every
+def knn_topk_int8_screened(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-k (k = TOP_K) via int8-screened search: approximate every
     query-corpus score from the 4x-smaller int8 codes, keep only
     vectors whose error interval can still reach the top-k, and
     exact-rescore that candidate set. Output is PROVABLY the true
@@ -1427,6 +1420,8 @@ def knn_topk_int8_screened(
     stores), and only the candidate sliver — here a few % of rows,
     pytest-asserted — touches the full-precision vectors."""
     from pyspark.sql.functions import pandas_udf
+
+    k = TOP_K
 
     @pandas_udf("struct<codes: array<double>, scale: double>")
     def _codes(xs):
@@ -1650,19 +1645,14 @@ def _assign_struct(vec_col: F.Column, cents: list[list[float]]) -> F.Column:
     return _assign(vec_col)
 
 
-def kmeans_assignments(
-    emb: DataFrame,
-    k: int = KMEANS_K,
-    rounds: int = KMEANS_ROUNDS,
-    keep_vec: bool = False,
-) -> DataFrame:
-    """(vec_id, cluster, cosine) after ``rounds`` deterministic Lloyd
+def kmeans_assignments(emb: DataFrame, keep_vec: bool = False) -> DataFrame:
+    """(vec_id, cluster, cosine) after KMEANS_ROUNDS deterministic Lloyd
     assignment rounds over a normalized ``(vec_id, v)`` frame.
     ``keep_vec=True`` additionally carries ``v`` through the final
     assignment projection, so downstream per-cluster work (SemDeDup's
     prune) gets the vector WITHOUT a corpus self-join on vec_id.
 
-    - init: the vectors of the k lowest vec_ids (k-row bounded
+    - init: the vectors of the KMEANS_K lowest vec_ids (k-row bounded
       collect; reproducible at any parallelism — no RNG);
     - update: EXACT per-component mean via the engine's quantized-sum
       discipline (posexplode → groupBy(cluster, i) → quantized_avg at
@@ -1678,8 +1668,8 @@ def kmeans_assignments(
     volume k·dim rows. No stage touches more than O(n·dim) data."""
     import numpy as np
 
-    cents = [list(r.v) for r in emb.orderBy("vec_id").limit(k).collect()]
-    for _ in range(rounds - 1):
+    cents = [list(r.v) for r in emb.orderBy("vec_id").limit(KMEANS_K).collect()]
+    for _ in range(KMEANS_ROUNDS - 1):
         # the vector rides the assignment projection — the update
         # aggregate needs (cluster, v) and both live on the same row,
         # so there is no self-join back onto emb (previously two
@@ -1951,9 +1941,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(_raw_corpus(load_table(spark, sf_dir, "embeddings")))
 
 
-def _pq_adc_scores(
-    raw: DataFrame, n_queries: int
-) -> tuple[DataFrame, DataFrame]:
+def _pq_adc_scores(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Shared ADC front half of the PQ searches: train codebooks,
     encode the corpus, build the broadcast query LUT, and return
     ``(ad, queries)`` — asymmetric distances per (query, vec) and the
@@ -1962,7 +1950,7 @@ def _pq_adc_scores(
     codes = raw.select(
         "vec_id", F.posexplode(_pq_codes(cents)(F.col("e"))).alias("m", "code")
     )
-    queries = raw.where(F.col("vec_id") < n_queries).select(
+    queries = raw.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("e").alias("qe")
     )
     centframe = raw.sparkSession.createDataFrame(
@@ -1994,13 +1982,12 @@ def _pq_adc_scores(
     return ad, queries
 
 
-def pq_adc_topk(raw: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
+def pq_adc_topk(raw: DataFrame) -> DataFrame:
     """Core of :func:`ann_pq_topk` over any (vec_id, e: array<double>)
     frame with dim = PQ_M · PQ_SUBDIM — separated so tests can run the
     full train/encode/score pipeline on planted clustered corpora, and
-    the scale rehearsal can widen the query batch (``n_queries``; the
-    registered query keeps the default — identical plan and result)."""
-    ad, _ = _pq_adc_scores(raw, n_queries)
+    the scale rehearsal can widen the query batch (N_QUERIES)."""
+    ad, _ = _pq_adc_scores(raw)
     w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
     return (
         ad.withColumn("rank", F.row_number().over(w))
@@ -2010,24 +1997,19 @@ def pq_adc_topk(raw: DataFrame, n_queries: int = N_QUERIES) -> DataFrame:
 
 
 #: ADC shortlist width for the exact re-rank — the standard
-#: accuracy/IO knob of IVF-PQ serving stacks (FAISS's k_factor).
-#: Default re-chosen by the round-6 sweep (tools/ann_recall.py,
-#: SCALING.md shortlist table): on the 100k separated corpus the wall
-#: is dominated by the shared ADC scan, so widening 50 → 100 costs
+#: accuracy/IO trade of IVF-PQ serving stacks (FAISS's k_factor).
+#: Re-chosen by the round-6 sweep (tools/ann_recall.py, SCALING.md
+#: shortlist table): on the 100k separated corpus the wall is
+#: dominated by the shared ADC scan, so widening 50 → 100 costs
 #: nothing measurable and lifts planted-partner recall 0.955 → 0.984
-#: (= IVF's); 200 buys 0.997 at ~1.3× — the knob is there for
-#: recall-critical batches.
+#: (= IVF's); 200 buys 0.997 at ~1.3×.
 PQ_RERANK_SHORTLIST = 100
 
 
-def pq_rerank_topk(
-    raw: DataFrame,
-    n_queries: int = N_QUERIES,
-    shortlist: int = PQ_RERANK_SHORTLIST,
-) -> DataFrame:
+def pq_rerank_topk(raw: DataFrame) -> DataFrame:
     """PQ search with exact re-rank — the production serving shape:
     the linear ADC scan over 4-byte codes produces a per-query
-    SHORTLIST (top-``shortlist`` by asymmetric distance), and only
+    SHORTLIST (top-PQ_RERANK_SHORTLIST by asymmetric distance), and only
     those rows fetch their full float vectors for an exact quantized
     L2 re-rank. Compute: the corpus-sized pass still touches only
     codes (the memory win PQ exists for); the exact distance runs on
@@ -2035,16 +2017,16 @@ def pq_rerank_topk(
     query frame. Recall becomes shortlist-membership-bounded instead
     of ADC-top-k-bounded, which is why every serving stack layers
     this on top of PQ (Jégou et al. 2011's ADC + re-ranking)."""
-    ad, queries = _pq_adc_scores(raw, n_queries)
+    ad, queries = _pq_adc_scores(raw)
     w1 = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
     short = (
         ad.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= shortlist)
+        .where(F.col("arank") <= PQ_RERANK_SHORTLIST)
         .select("query_id", "vec_id")
     )
-    # the shortlist is bounded (n_queries · shortlist rows) — broadcast
-    # it so the full-vector corpus is probed in place, never shuffled
-    # on vec_id
+    # the shortlist is bounded (N_QUERIES · PQ_RERANK_SHORTLIST rows)
+    # — broadcast it so the full-vector corpus is probed in place,
+    # never shuffled on vec_id
     rescored = (
         F.broadcast(short).join(raw, "vec_id")
         .join(F.broadcast(queries), "query_id")

@@ -218,26 +218,22 @@ CMS_WIDTH = 1024  #: w columns — expected overcount ≤ e·N/w per row
 CMS_TOPK = 20  #: heavy-hitter rows the registered query reports
 
 
-def _cms_bucket(term, j: int, width: int = CMS_WIDTH):
+def _cms_bucket(term, j: int):
     """Row-j column of ``term`` — the cross-engine md5 convention
     (similarity.py's md5-ordered sample, dedup.py's Bloom positions):
     row index j is prefixed into the key so the d rows are independent
-    hash functions, then the leading 60 bits of the md5 mod w."""
+    hash functions, then the leading 60 bits of the md5 mod
+    w = CMS_WIDTH."""
     return (
         F.conv(
             F.substring(F.md5(F.concat(F.lit(f"{j}:"), term)), 1, 15), 16, 10
         ).cast("long")
-        % width
+        % CMS_WIDTH
     )
 
 
-def cms_build(
-    toks: DataFrame,
-    col: str = "term",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
-    """Build the count-min TABLE ``(j, c, cnt)`` over a token column —
+def cms_build(toks: DataFrame) -> DataFrame:
+    """Build the count-min TABLE ``(j, c, cnt)`` over the ``term`` column —
     the stored artifact (Cormode & Muthukrishnan 2005). Each token contributes one count to one cell
     per row; the groupBy's partial aggregation collapses every map
     partition to ≤ d·w rows (4096 here) before the shuffle, so the
@@ -252,9 +248,9 @@ def cms_build(
                 *[
                     F.struct(
                         F.lit(j).alias("j"),
-                        _cms_bucket(F.col(col), j, width).alias("c"),
+                        _cms_bucket(F.col("term"), j).alias("c"),
                     )
-                    for j in range(depth)
+                    for j in range(CMS_DEPTH)
                 ]
             )
         ).alias("p")

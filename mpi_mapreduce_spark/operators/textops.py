@@ -957,21 +957,19 @@ ORACLE_BOILERPLATE = f"""
 # BPE merge training (iterative)
 # ---------------------------------------------------------------------------
 
-#: merge rounds materialized by the registered query — enough to show
-#: the loop converging on real pair statistics; a production tokenizer
-#: run sets this to its vocab budget (the per-round cost is
-#: vocabulary-sized either way)
+#: merge rounds trained by bpe_merge_list — enough to show the loop
+#: converging on real pair statistics; a production tokenizer run sets
+#: this to its vocab budget (the per-round cost is vocabulary-sized
+#: either way). The oracles mirror it at import time.
 BPE_MERGE_ROUNDS = 5
 
 
-def bpe_train_merges(
-    docs: DataFrame, rounds: int = BPE_MERGE_ROUNDS
-) -> DataFrame:
+def bpe_train_merges(docs: DataFrame) -> DataFrame:
     """The trained merges of :func:`bpe_merge_list` as a DataFrame —
     (merge_rank, lhs, rhs, merged, pair_freq), the merge table a
     tokenizer ships."""
     return docs.sparkSession.createDataFrame(
-        bpe_merge_list(docs, rounds),
+        bpe_merge_list(docs),
         "merge_rank int, lhs string, rhs string, merged string, pair_freq long",
     )
 
@@ -1036,10 +1034,8 @@ def _bpe_merges_local(
     return merges
 
 
-def bpe_merge_list(
-    docs: DataFrame, rounds: int = BPE_MERGE_ROUNDS
-) -> list[tuple[int, str, str, str, int]]:
-    """Train the first N byte-pair-encoding merges on the corpus:
+def bpe_merge_list(docs: DataFrame) -> list[tuple[int, str, str, str, int]]:
+    """Train the first BPE_MERGE_ROUNDS byte-pair-encoding merges on the corpus:
     per round, the most frequent adjacent symbol pair (weighted by
     word frequency, ties broken lexicographically on the space-joined
     pair) is merged everywhere, classic Sennrich-style, starting from
@@ -1074,6 +1070,7 @@ def bpe_merge_list(
     scan rather than twice (the classic greedy would pair twice);
     this deterministic variant is pinned identically in the DuckDB
     oracle's chained-CTE rounds."""
+    rounds = BPE_MERGE_ROUNDS
     toks = docs.select(F.explode(tokens(F.col("text"))).alias("w"))
     vocab = toks.groupBy("w").agg(F.count("*").alias("freq"))
     # one partition, so the bounded collect is one job rather than
@@ -1129,11 +1126,10 @@ def bpe_merge_list(
             rep_expr, F.lit(f" {pair} "), F.lit(f" {lhs + rhs} ")
         )
         # ADVICE r13: the replace chain nests one level per round, so
-        # a caller passing large ``rounds`` (public parameter) would
-        # grow expression depth linearly into codegen/analysis limits
-        # the old per-round checkpoint form never hit. Re-materialize
-        # every 32 rounds to bound the depth while keeping the
-        # one-job-per-round win at the default 5.
+        # a large BPE_MERGE_ROUNDS would grow expression depth linearly
+        # into codegen/analysis limits the old per-round checkpoint
+        # form never hit. Re-materialize every 32 rounds to bound the
+        # depth while keeping the one-job-per-round win at 5 rounds.
         if r % 32 == 0:
             words = words.select(
                 rep_expr.alias("rep"), "freq"
@@ -1147,7 +1143,7 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train_merges(_docs(spark, sf_dir))
 
 
-def _bpe_ctes(rounds: int = BPE_MERGE_ROUNDS) -> str:
+def _bpe_ctes() -> str:
     """The shared chained-CTE merge rounds (word identity carried so
     the encode oracle can join final reps back onto documents)."""
     ctes = [
@@ -1165,7 +1161,7 @@ def _bpe_ctes(rounds: int = BPE_MERGE_ROUNDS) -> str:
           FROM wf
         )"""
     ]
-    for k in range(1, rounds + 1):
+    for k in range(1, BPE_MERGE_ROUNDS + 1):
         ctes.append(
             f"""p{k} AS (
               SELECT pair, CAST(SUM(freq) AS BIGINT) AS c FROM (
@@ -1187,7 +1183,7 @@ def _bpe_ctes(rounds: int = BPE_MERGE_ROUNDS) -> str:
     return "WITH " + ", ".join(ctes)
 
 
-def _bpe_oracle(rounds: int = BPE_MERGE_ROUNDS) -> str:
+def _bpe_oracle() -> str:
     selects = " UNION ALL ".join(
         f"""SELECT {k} AS merge_rank,
                string_split(pair, ' ')[1] AS lhs,
@@ -1195,9 +1191,9 @@ def _bpe_oracle(rounds: int = BPE_MERGE_ROUNDS) -> str:
                replace(pair, ' ', '') AS merged,
                c AS pair_freq
             FROM t{k}"""
-        for k in range(1, rounds + 1)
+        for k in range(1, BPE_MERGE_ROUNDS + 1)
     )
-    return _bpe_ctes(rounds) + " " + selects
+    return _bpe_ctes() + " " + selects
 
 
 ORACLE_BPE_MERGES = _bpe_oracle()

@@ -194,9 +194,7 @@ TAKE_K = 20
 WSAMPLE_K = 100
 
 
-def weighted_sample_k(
-    df: DataFrame, weight_col: str, k: int, key: str = "doc_id"
-) -> DataFrame:
+def weighted_sample_k(df: DataFrame, weight_col: str, k: int) -> DataFrame:
     """Weighted sampling without replacement, deterministic: the
     Efraimidis–Spirakis scheme (each row keyed by u^(1/w), keep the
     top k) with the uniform u derived from the same multiplicative
@@ -214,7 +212,7 @@ def weighted_sample_k(
     global top-k — physicalizes as TakeOrderedAndProject (per-
     partition heaps), shuffling only k rows per partition at 100 TB."""
     u = (
-        (F.col(key) * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
+        (F.col("doc_id") * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
         + F.lit(0.5)
     ) / F.lit(float(SAMPLE_MOD))
     es_key = ex.quantize(
@@ -227,7 +225,7 @@ def weighted_sample_k(
     )
     return (
         df.withColumn("es_key", es_key)
-        .orderBy(F.col("es_key").desc(), F.col(key).asc())
+        .orderBy(F.col("es_key").desc(), F.col("doc_id").asc())
         .limit(k)
     )
 
@@ -244,7 +242,6 @@ def weighted_sample_k_per_stratum(
     stratum_col: str,
     weight_col: str,
     k: int,
-    key: str = "doc_id",
 ) -> DataFrame:
     """Per-stratum weighted draw: the Efraimidis–Spirakis key ranks
     WITHIN each stratum, so every stratum yields exactly min(k, size)
@@ -254,7 +251,7 @@ def weighted_sample_k_per_stratum(
     weighted_sample_k; the global top-k becomes one window per
     stratum (skew note of take_k_per_stratum_salted applies)."""
     u = (
-        (F.col(key) * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
+        (F.col("doc_id") * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
         + F.lit(0.5)
     ) / F.lit(float(SAMPLE_MOD))
     es_key = ex.quantize(
@@ -266,7 +263,7 @@ def weighted_sample_k_per_stratum(
         9,
     )
     w = W.partitionBy(stratum_col).orderBy(
-        es_key.desc(), F.col(key).asc()
+        es_key.desc(), F.col("doc_id").asc()
     )
     return (
         df.withColumn("es_key", es_key)
@@ -316,9 +313,7 @@ ORACLE_WEIGHTED_SAMPLE = f"""
 """
 
 
-def take_k_per_stratum(
-    df: DataFrame, stratum_col: str, k: int, key: str = "doc_id"
-) -> DataFrame:
+def take_k_per_stratum(df: DataFrame, stratum_col: str, k: int) -> DataFrame:
     """EXACTLY k rows per stratum (or all rows in smaller strata) —
     the eval/holdout-set builder where rate-based sampling
     (sample_stratified) can't hit a target size. Selection order is a
@@ -332,8 +327,8 @@ def take_k_per_stratum(
     stratum key; at 100 TB strata are few and fat, so skew-prone
     strata want the two-phase variant (per-partition top-k then
     global top-k merge, the TakeOrderedAndProject trick per group)."""
-    coin = (F.col(key) * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
-    w = W.partitionBy(stratum_col).orderBy(coin.asc(), F.col(key).asc())
+    coin = (F.col("doc_id") * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
+    w = W.partitionBy(stratum_col).orderBy(coin.asc(), F.col("doc_id").asc())
     return (
         df.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)
@@ -341,35 +336,36 @@ def take_k_per_stratum(
     )
 
 
+#: phase-1 cells per stratum in take_k_per_stratum_salted
+TAKE_K_SALT = 16
+
+
 def take_k_per_stratum_salted(
-    df: DataFrame,
-    stratum_col: str,
-    k: int,
-    key: str = "doc_id",
-    salt: int = 16,
+    df: DataFrame, stratum_col: str, k: int
 ) -> DataFrame:
     """Skew-safe two-phase form of take_k_per_stratum — SAME result
     (asserted in tests), different shuffle shape: phase 1 ranks within
-    (stratum, key % salt) cells and keeps k per cell, so no single
-    reducer ever sees a whole hot stratum — each handles ~1/salt of
-    it; phase 2 ranks the ≤ k·salt survivors per stratum, a tiny
-    frame. This is the per-group TakeOrderedAndProject trick: total
-    shuffled rows drop from |stratum| to k·salt after phase 1.
+    (stratum, doc_id % salt) cells (salt = TAKE_K_SALT) and keeps k per
+    cell, so no single reducer ever sees a whole hot stratum — each
+    handles ~1/salt of it; phase 2 ranks the ≤ k·salt survivors per
+    stratum, a tiny frame. This is the per-group TakeOrderedAndProject
+    trick: total shuffled rows drop from |stratum| to k·salt after
+    phase 1.
 
     Equivalence argument: the final k rows of a stratum (global coin
     order) are each top-k within their own cell a fortiori, so phase 1
     never discards a final winner."""
-    coin = (F.col(key) * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
-    cell = F.pmod(F.col(key), F.lit(salt))
+    coin = (F.col("doc_id") * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
+    cell = F.pmod(F.col("doc_id"), F.lit(TAKE_K_SALT))
     w1 = W.partitionBy(F.col(stratum_col), cell).orderBy(
-        coin.asc(), F.col(key).asc()
+        coin.asc(), F.col("doc_id").asc()
     )
     survivors = (
         df.withColumn("rnk", F.row_number().over(w1))
         .where(F.col("rnk") <= k)
         .drop("rnk")
     )
-    return take_k_per_stratum(survivors, stratum_col, k, key)
+    return take_k_per_stratum(survivors, stratum_col, k)
 
 
 def training_take_k_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -432,9 +428,7 @@ def training_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOMAIN_QUOTA = 15
 
 
-def quota_per_stratum(
-    df: DataFrame, stratum_col: str, quota: int, key: str = "doc_id"
-) -> DataFrame:
+def quota_per_stratum(df: DataFrame, stratum_col: str, quota: int) -> DataFrame:
     """Deterministic per-stratum quota capping: within each stratum,
     rank rows by the multiplicative hash coin (key tiebreak) and keep
     rank ≤ quota — an unbiased uniform subsample of over-represented
@@ -445,8 +439,8 @@ def quota_per_stratum(
     domains/sources (many, shallow), so no single-partition sort
     exists and the skew note of take_k_per_stratum_salted applies if
     one source dominates row counts."""
-    coin = (F.col(key) * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
-    w = W.partitionBy(stratum_col).orderBy(coin.asc(), F.col(key).asc())
+    coin = (F.col("doc_id") * F.lit(SAMPLE_MULTIPLIER)) % F.lit(SAMPLE_MOD)
+    w = W.partitionBy(stratum_col).orderBy(coin.asc(), F.col("doc_id").asc())
     return df.withColumn(
         "src_rank", F.row_number().over(w).cast("long")
     ).withColumn("keep", F.col("src_rank") <= quota)
@@ -633,8 +627,7 @@ def training_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic epoch shuffle + sharding (training-order writer)
 # ---------------------------------------------------------------------------
 
-#: epochs materialized by the registered query; production would pass
-#: the epoch number in
+#: epochs materialized by epoch_shard_order
 EPOCH_COUNT = 2
 #: output shards per epoch — at 100 TB this is the output-file fan-out
 #: (tens of thousands), here small so every shard's ordering is dense
@@ -649,13 +642,8 @@ EPOCH_STEP = 1_000_003
 EPOCH_MOD = 2_147_483_647
 
 
-def epoch_shard_order(
-    df: DataFrame,
-    key: str = "doc_id",
-    epochs: int = EPOCH_COUNT,
-    shards: int = EPOCH_SHARDS,
-) -> DataFrame:
-    """(epoch, key, shard, pos): a deterministic global shuffle of the
+def epoch_shard_order(df: DataFrame) -> DataFrame:
+    """(epoch, doc_id, shard, pos): a deterministic global shuffle of the
     corpus per training epoch, materialized as shard assignment plus
     position within the shard — the write order a dataloader consumes.
 
@@ -663,13 +651,14 @@ def epoch_shard_order(
     whole mapping is pure key arithmetic: reproducible across reruns,
     engines, and any partitioning, with no rand() and no global sort —
     ordering is a row_number per (epoch, shard), so parallelism =
-    epochs x shards and window state is bounded by the largest shard.
+    EPOCH_COUNT x EPOCH_SHARDS and window state is bounded by the largest shard.
     Coin stays in int64: (key + 1 + epoch·step) · multiplier < 2^63
     for keys < ~1e9 (same documented bound as split_bucket; beyond
     that, xxhash64 — losing only the DuckDB-checkable property)."""
+    key = "doc_id"
     k = F.col(key)
     epoch = F.explode(
-        F.array(*[F.lit(e) for e in range(epochs)])
+        F.array(*[F.lit(e) for e in range(EPOCH_COUNT)])
     ).alias("epoch")
     e = df.select(k.alias(key), epoch)
     coin = (
@@ -679,7 +668,7 @@ def epoch_shard_order(
     w = W.partitionBy("epoch", "shard").orderBy("coin", key)
     return (
         e.select("epoch", key, coin.alias("coin"))
-        .withColumn("shard", F.col("coin") % F.lit(shards))
+        .withColumn("shard", F.col("coin") % F.lit(EPOCH_SHARDS))
         .select(
             "epoch",
             key,
@@ -747,23 +736,9 @@ def training_split_cluster_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_safe_oracle() -> str:
-    from mpi_mapreduce_spark.operators.dedup import ORACLE_NGRAM_JACCARD
+    from mpi_mapreduce_spark.operators.dedup import CC_SQL_CTE
 
-    return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({ORACLE_NGRAM_JACCARD})
-    ), sym AS (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ), reach AS (
-      SELECT src, dst FROM sym
-      UNION
-      SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src
-    ), comp AS (
-      SELECT src AS doc_id, least(src, MIN(dst)) AS component
-      FROM reach GROUP BY src
-    ), labeled AS (
+    return CC_SQL_CTE + f""", labeled AS (
       SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
       FROM documents d LEFT JOIN comp c USING (doc_id)
     )
@@ -789,9 +764,9 @@ EOS_ID = 0  #: document separator in the token stream
 from mpi_mapreduce_spark.functions.text import FP_MOD  # noqa: E402
 
 
-def token_id_stream(docs: DataFrame, shards: int = SHARD_COUNT) -> DataFrame:
+def token_id_stream(docs: DataFrame) -> DataFrame:
     """(shard, doc_id, p, wid): every document as a token-id sequence
-    with an EOS separator appended, sharded by doc_id.
+    with an EOS separator appended, sharded by doc_id % SHARD_COUNT.
 
     Word ids come from an order-sensitive polynomial hash
     (Σ (i+1)·codepoint(ch_i) mod 2^31−1, then +1 so EOS keeps id 0) —
@@ -818,7 +793,7 @@ def token_id_stream(docs: DataFrame, shards: int = SHARD_COUNT) -> DataFrame:
         (F.max("p") + 1).alias("p")
     ).select("doc_id", "p", F.lit(EOS_ID).cast("long").alias("wid"))
     return body.unionByName(eos).select(
-        (F.col("doc_id") % shards).alias("shard"), "doc_id", "p", "wid"
+        (F.col("doc_id") % SHARD_COUNT).alias("shard"), "doc_id", "p", "wid"
     )
 
 
@@ -844,7 +819,7 @@ def training_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def write_token_shards(
-    docs: DataFrame, out_dir: str, shards: int = SHARD_COUNT
+    docs: DataFrame, out_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize the token-id stream as the binary artifact a
     trainer mmaps: one ``shard_{k}.bin`` of little-endian uint32 ids
@@ -862,7 +837,7 @@ def write_token_shards(
     scale shard count is set so a shard fits a task comfortably."""
     import os
 
-    stream = token_id_stream(docs, shards)
+    stream = token_id_stream(docs)
     w = W.partitionBy("shard").orderBy("doc_id", "p")
     r = stream.withColumn("rn", F.row_number().over(w).cast("long"))
 
@@ -948,14 +923,12 @@ DSIR_TARGET_SOURCE = "src0"
 DSIR_TOPK = 100
 
 
-def hashed_bucket_rows(
-    docs: DataFrame, n_buckets: int = DSIR_BUCKETS
-) -> DataFrame:
+def hashed_bucket_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, source, bucket): one row per token occurrence with its
     hashed feature bucket — the shared featurization under DSIR and
     the logistic-regression quality classifier. The bucket of each
     DISTINCT word comes from the engine's cross-engine polynomial
-    char hash mod ``n_buckets`` (vocabulary-sized work, joined back;
+    char hash mod DSIR_BUCKETS (vocabulary-sized work, joined back;
     the corpus itself is scanned once).
 
     Token occurrences come straight off the scan (explode of the
@@ -983,7 +956,7 @@ def hashed_bucket_rows(
                 % F.lit(FP_MOD)
                 + 1
             )
-            % n_buckets
+            % DSIR_BUCKETS
         ).alias("bucket")
     )
     return toks.join(buckets, toks.tok == buckets.w).select(
@@ -991,11 +964,7 @@ def hashed_bucket_rows(
     )
 
 
-def dsir_logweights(
-    docs: DataFrame,
-    target_source: str = DSIR_TARGET_SOURCE,
-    n_buckets: int = DSIR_BUCKETS,
-) -> DataFrame:
+def dsir_logweights(docs: DataFrame) -> DataFrame:
     """(doc_id, dsir_logweight): per-document log importance weight
     log p_target(doc)/p_raw(doc) under hashed-unigram bag-of-words
     models with add-one smoothing — the DSIR scoring rule that selects
@@ -1005,11 +974,11 @@ def dsir_logweights(
     - token rows once (one window pass, shared shape with
       token_id_stream);
     - the bucket of each DISTINCT word via the engine's cross-engine
-      polynomial char hash mod ``n_buckets`` (vocabulary-sized work,
+      polynomial char hash mod DSIR_BUCKETS (vocabulary-sized work,
       joined back — the corpus is never re-scanned per feature);
-    - bucket unigram counts for target (source filter) and raw (all
-      docs) — two grouped counts with map-side combine, ``n_buckets``
-      result rows;
+    - bucket unigram counts for target (source DSIR_TARGET_SOURCE) and
+      raw (all docs) — two grouped counts with map-side combine,
+      DSIR_BUCKETS result rows;
     - per-bucket smoothed log ratio, quantized (scale 6), broadcast
       back onto token rows; per-doc order-independent quantized sum.
 
@@ -1018,18 +987,19 @@ def dsir_logweights(
     scalable alternative to model-based quality scoring."""
     # collapse token occurrences to the compact (doc, source, bucket,
     # cnt) feature frame FIRST (map-side combine shrinks the shuffle
-    # to ≤ n_buckets rows per doc) and materialize it once; the model
-    # statistics and the per-doc scoring pass all derive from it —
+    # to ≤ DSIR_BUCKETS rows per doc) and materialize it once; the
+    # model statistics and the per-doc scoring pass all derive from it —
     # the corpus is tokenized exactly once
+    n_buckets = DSIR_BUCKETS
     counts = (
-        hashed_bucket_rows(docs, n_buckets)
+        hashed_bucket_rows(docs)
         .groupBy("doc_id", "source", "bucket")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint()
     )
     raw_counts = counts.groupBy("bucket").agg(F.sum("cnt").alias("cr"))
     tgt_counts = (
-        counts.where(F.col("source") == target_source)
+        counts.where(F.col("source") == DSIR_TARGET_SOURCE)
         .groupBy("bucket")
         .agg(F.sum("cnt").alias("ct"))
     )
@@ -1142,22 +1112,18 @@ ORACLE_DSIR = f"""
 #: the oracle can unroll the training loop CTE-for-CTE. The in-plan
 #: loop references the weight frame about 5× per round, so the plan
 #: grows geometrically in the rounds since ``w`` was last materialized;
-#: a caller raising this pays one localCheckpoint job per 2 rounds
+#: raising this costs one localCheckpoint job per 2 rounds
 #: (the depth guard bpe_merge_list applies every 32), which keeps the
 #: final plan no larger than the default's
 QL_ROUNDS = 2
 
 
-def quality_logreg_scores(
-    docs: DataFrame,
-    target_source: str = DSIR_TARGET_SOURCE,
-    n_buckets: int = DSIR_BUCKETS,
-    rounds: int = QL_ROUNDS,
-) -> DataFrame:
+def quality_logreg_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, logit, prob, keep): a fasttext-style model-based
     quality filter — binary logistic regression on hashed-unigram
     counts, weakly labeled "does this doc come from the trusted
-    source", trained with ``rounds`` full-batch gradient steps and
+    source" (DSIR_TARGET_SOURCE), trained with QL_ROUNDS full-batch
+    gradient steps and
     then scored over the whole corpus. The model-based counterpart to
     DSIR's closed-form likelihood ratio (same feature space, shared
     :func:`hashed_bucket_rows`).
@@ -1176,7 +1142,7 @@ def quality_logreg_scores(
     is exactly 0.0, so err₁ = 0.5 - y without touching counts
     (quantize(σ(0)) = 0.5 bit-for-bit). Every 2nd round but the
     last, the weight frame is localCheckpoint'ed, so a large
-    ``rounds`` costs one eager job per checkpoint instead of a plan
+    QL_ROUNDS costs one eager job per checkpoint instead of a plan
     5× larger per round. The feature matrix is persisted (five
     consumers across the rounds); the deployable frozen-model path
     (:func:`logreg_model`) keeps the driver-side collect loop — a
@@ -1200,7 +1166,8 @@ def quality_logreg_scores(
     sequence the r13 driver-side Python performed (equivalence pinned
     in tests/test_r14_optimizations.py)."""
     spark = docs.sparkSession
-    tb = hashed_bucket_rows(docs, n_buckets)
+    rounds = QL_ROUNDS
+    tb = hashed_bucket_rows(docs)
     counts = (
         tb.groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("cnt"))
@@ -1208,7 +1175,7 @@ def quality_logreg_scores(
     )
     y = docs.select(
         "doc_id",
-        F.when(F.col("source") == target_source, F.lit(1.0))
+        F.when(F.col("source") == DSIR_TARGET_SOURCE, F.lit(1.0))
         .otherwise(F.lit(0.0))
         .alias("y"),
     )
@@ -1265,7 +1232,7 @@ def quality_logreg_scores(
             )
         )
 
-    w = spark.range(-1, n_buckets).select(
+    w = spark.range(-1, DSIR_BUCKETS).select(
         F.col("id").alias("bucket"), F.lit(0.0).alias("wgt")
     )
     for r in range(1, rounds + 1):
@@ -1328,32 +1295,24 @@ def _logreg_logits(
     )
 
 
-def logreg_model(
-    docs: DataFrame,
-    target_source: str = DSIR_TARGET_SOURCE,
-    n_buckets: int = DSIR_BUCKETS,
-    rounds: int = QL_ROUNDS,
-) -> tuple[dict[int, float], float]:
+def logreg_model(docs: DataFrame) -> tuple[dict[int, float], float]:
     """Train on ``docs`` and return the FROZEN model ``(weights,
-    bias)`` — n_buckets + 1 doubles, the deployable artifact the
+    bias)`` — DSIR_BUCKETS + 1 doubles, the deployable artifact the
     streaming quality gate broadcasts into every micro-batch
     (streaming/quality_gate.py)."""
-    weights, bias, _, _ = _logreg_fit(docs, target_source, n_buckets, rounds)
+    weights, bias, _, _ = _logreg_fit(docs)
     return weights, bias
 
 
 def logreg_score(
-    docs: DataFrame,
-    weights: dict[int, float],
-    bias: float,
-    n_buckets: int = DSIR_BUCKETS,
+    docs: DataFrame, weights: dict[int, float], bias: float
 ) -> DataFrame:
     """Score ANY (doc_id, text, source) frame under a frozen model:
     (doc_id, logit, prob, keep) with the exact arithmetic of
     quality_logreg_scores' final pass — batch/stream scoring parity is
     pinned in tests/test_streaming.py."""
     counts = (
-        hashed_bucket_rows(docs, n_buckets)
+        hashed_bucket_rows(docs)
         .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("cnt"))
     )
@@ -1372,14 +1331,11 @@ def logreg_score(
 
 def _logreg_fit(
     docs: DataFrame,
-    target_source: str,
-    n_buckets: int,
-    rounds: int,
 ) -> tuple[dict[int, float], float, DataFrame, DataFrame]:
     """The gradient loop of :func:`quality_logreg_scores`; returns
     (weights, bias, counts, y) so the caller can reuse the
     checkpointed feature matrix for its final pass."""
-    tb = hashed_bucket_rows(docs, n_buckets)
+    tb = hashed_bucket_rows(docs)
     # the feature matrix is referenced 2×/round + once for final
     # scoring — materialize it once (executor-local, same pattern as
     # the BPE vocab frame) instead of re-tokenizing the corpus five
@@ -1391,16 +1347,17 @@ def _logreg_fit(
     )
     y = docs.select(
         "doc_id",
-        F.when(F.col("source") == target_source, F.lit(1.0))
+        F.when(F.col("source") == DSIR_TARGET_SOURCE, F.lit(1.0))
         .otherwise(F.lit(0.0))
         .alias("y"),
     )
     n_docs = float(docs.count())
 
+    n_buckets = DSIR_BUCKETS
     weights = {b: 0.0 for b in range(n_buckets)}
     bias = 0.0
 
-    for _ in range(rounds):
+    for _ in range(QL_ROUNDS):
         lg = _logreg_logits(counts, y, weights, bias)
         err = lg.select(
             "doc_id",
@@ -1454,7 +1411,7 @@ def training_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_logreg_scores(load_table(spark, sf_dir, "documents"))
 
 
-def _logreg_oracle(rounds: int = QL_ROUNDS) -> str:
+def _logreg_oracle() -> str:
     """Unrolled CTE mirror of quality_logreg_scores: one (g{r}, w{r},
     b{r}) block per gradient round, then final scoring — the same
     loop-unrolling discipline as the BPE and k-means oracles."""
@@ -1492,6 +1449,7 @@ def _logreg_oracle(rounds: int = QL_ROUNDS) -> str:
     ), b0 AS (SELECT 0.0 AS bias)
     """
     blocks = []
+    rounds = QL_ROUNDS
     for r in range(rounds):
         p, c = r, r + 1  # previous / current round suffix
         blocks.append(f"""

@@ -590,7 +590,7 @@ def test_containment_hot_shingle_cap(spark):
     assert capped == {(100, 101): 1.0}  # hot buckets gone, true pair kept
 
 
-def test_embedding_auto_path_selection(spark):
+def test_embedding_auto_path_selection(spark, monkeypatch):
     """The density probe: a separated corpus (tight planted pairs,
     production-shape banding b=8/L=8 at threshold 0.9) must pick LSH
     and find exactly the planted pairs; a threshold-hugging corpus
@@ -598,6 +598,9 @@ def test_embedding_auto_path_selection(spark):
     must fall back to the exact blocked plan."""
     import numpy as np
 
+    monkeypatch.setattr(D, "EMBED_DUP_THRESHOLD", 0.9)
+    monkeypatch.setattr(D, "EMBED_LSH_BAND_BITS", 8)
+    monkeypatch.setattr(D, "EMBED_LSH_BANDS", 8)
     rng = np.random.RandomState(7)
     dim = 16
 
@@ -614,9 +617,7 @@ def test_embedding_auto_path_selection(spark):
             vid += 1
         planted.add((a, b))
     sep = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    pairs, path = D.embedding_neardup_auto(
-        sep, dim=dim, threshold=0.9, band_bits=8, n_bands=8
-    )
+    pairs, path = D.embedding_neardup_auto(sep, dim=dim)
     assert path == "lsh"
     found = {(r.vec_a, r.vec_b) for r in pairs.collect()}
     assert planted <= found
@@ -626,9 +627,7 @@ def test_embedding_auto_path_selection(spark):
         [(i, norm(center + 0.01 * rng.randn(dim))) for i in range(40)],
         "vec_id long, v array<double>",
     )
-    _, path2 = D.embedding_neardup_auto(
-        hug, dim=dim, threshold=0.9, band_bits=8, n_bands=8
-    )
+    _, path2 = D.embedding_neardup_auto(hug, dim=dim)
     assert path2 == "exact"
 
 
@@ -800,7 +799,7 @@ def test_exact_canonical_docs_keeps_min_doc_id(spark):
     assert kept == [3, 9]
 
 
-def test_auto_probe_picks_lsh_on_separated_100k_corpus(spark):
+def test_auto_probe_picks_lsh_on_separated_100k_corpus(spark, monkeypatch):
     """The round-5 scale rehearsal corpus (tools/scale_rehearsal.py
     separated_embeddings: 100k unit vectors, 1000 planted pairs at
     cosine ≈ 0.97, bulk pair cosines ~ N(0, 1/64)) is the regime the
@@ -831,13 +830,10 @@ def test_auto_probe_picks_lsh_on_separated_100k_corpus(spark):
         pd.DataFrame({"vec_id": ids, "v": list(v.astype("float64"))}),
         "vec_id long, v array<double>",
     )
-    _pairs_df, path = D.embedding_neardup_auto(
-        emb,
-        EMB_SEP_DIM,
-        EMB_PROD_THRESHOLD,
-        EMB_PROD_BITS,
-        EMB_PROD_BANDS,
-    )
+    monkeypatch.setattr(D, "EMBED_DUP_THRESHOLD", EMB_PROD_THRESHOLD)
+    monkeypatch.setattr(D, "EMBED_LSH_BAND_BITS", EMB_PROD_BITS)
+    monkeypatch.setattr(D, "EMBED_LSH_BANDS", EMB_PROD_BANDS)
+    _pairs_df, path = D.embedding_neardup_auto(emb, EMB_SEP_DIM)
     assert path == "lsh"
 
 
@@ -1008,7 +1004,7 @@ def test_shingle_index_no_cache_growth(spark, sf_dir):
         assert cm.isEmpty(), f"{fn.__name__} left a cache entry"
 
 
-def test_minhash_band_shape_recall_monotone(spark):
+def test_minhash_band_shape_recall_monotone(spark, monkeypatch):
     """Pins the r7 MinHash band-shape/signature-length knobs by their
     SUBSET theorems (stronger than recall comparison), on the planted
     corpus the SCALING.md sweep uses (tools/scale_rehearsal.py
@@ -1033,10 +1029,12 @@ def test_minhash_band_shape_recall_monotone(spark):
     )
     truth = _pairs(D.ngram_jaccard_pairs(docs))
     assert len(truth) > 40, "planted fixture lost its truth set"
-    shape = {
-        (h, b): _pairs(D.minhash_jaccard_pairs(docs, n_hashes=h, n_bands=b))
-        for h, b in ((32, 8), (32, 16), (32, 32), (16, 8), (64, 32))
-    }
+    shape = {}
+    for h, b in ((32, 8), (32, 16), (32, 32), (16, 8), (64, 32)):
+        with monkeypatch.context() as m:
+            m.setattr(D, "MINHASH_HASHES", h)
+            m.setattr(D, "MINHASH_BANDS", b)
+            shape[(h, b)] = _pairs(D.minhash_jaccard_pairs(docs))
     # rows-per-band chain at 32 hashes
     assert shape[(32, 8)] <= shape[(32, 16)] <= shape[(32, 32)]
     # signature-length chain at 2 rows/band
@@ -1049,7 +1047,7 @@ def test_minhash_band_shape_recall_monotone(spark):
     assert len(shape[(32, 16)]) / len(truth) >= 0.95
 
 
-def test_incremental_embedding_flags_planted_batch(spark):
+def test_incremental_embedding_flags_planted_batch(spark, monkeypatch):
     """Batch vectors dedup against the corpus bucket index ONLY: a
     batch vector near-identical to a corpus vector is dropped, a fresh
     one kept, and the corpus-internal near-dup pair (1, 2) never flags
@@ -1083,10 +1081,13 @@ def test_incremental_embedding_flags_planted_batch(spark):
         ],
         "vec_id long, v array<double>",
     )
+    monkeypatch.setattr(D, "EMBED_DUP_THRESHOLD", 0.9)
+    monkeypatch.setattr(D, "EMBED_LSH_BAND_BITS", 8)
+    monkeypatch.setattr(D, "EMBED_LSH_BANDS", 8)
     got = {
         r.vec_id: (r.is_near_dup, r.keep)
         for r in D.embedding_dedup_against_corpus(
-            batch, corpus, dim=dim, threshold=0.9, band_bits=8, n_bands=8
+            batch, corpus, dim=dim
         ).collect()
     }
     assert got == {10: (True, False), 20: (True, False), 30: (False, True)}
@@ -1107,7 +1108,7 @@ def test_incremental_embedding_validate_all_true(spark, sf_dir):
     assert all(r.found_iff_cobucketed for r in rows)
 
 
-def test_minhash_band_shape_must_divide(spark):
+def test_minhash_band_shape_must_divide(spark, monkeypatch):
     """A band count that doesn't divide the signature length is a
     config error, not a silent truncation: minhash_band_keys raises
     before any job runs."""
@@ -1116,9 +1117,11 @@ def test_minhash_band_shape_must_divide(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e", 9)], "doc_id long, text string, n_chars int"
     )
-    sig = D.minhash_signature_table(D.shingle_rows(docs), n_hashes=32)
+    monkeypatch.setattr(D, "MINHASH_HASHES", 32)
+    sig = D.minhash_signature_table(D.shingle_rows(docs))
+    monkeypatch.setattr(D, "MINHASH_BANDS", 5)
     with pytest.raises(ValueError, match="must divide"):
-        D.minhash_band_keys(sig, n_hashes=32, n_bands=5)
+        D.minhash_band_keys(sig)
 
 
 def test_bucket_index_feeds_incremental(spark, sf_dir):

@@ -206,16 +206,20 @@ def test_duplicated_spans_match_python_reference(spark, docs, n):
     """duplicated_span_rows agrees with a direct python derivation:
     mark every token covered by an n-gram occurring in >= 2 distinct
     docs, then emit maximal runs of covered positions."""
-    from mpi_mapreduce_spark.operators.dedup import duplicated_span_rows
+    import pytest
+
+    from mpi_mapreduce_spark.operators import dedup as D
 
     df = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(docs)],
         "doc_id long, text string",
     )
-    got = {
-        (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in duplicated_span_rows(df, n).collect()
-    }
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(D, "SPAN_N", n)
+        got = {
+            (r.doc_id, r.span_start, r.span_end, r.span_tokens)
+            for r in D.duplicated_span_rows(df).collect()
+        }
 
     # python reference: gram -> set of docs, covered positions, islands
     from collections import defaultdict

@@ -136,12 +136,13 @@ def test_array_positional_grams_match_window_form(spark):
         ), f"n={n}"
 
 
-def test_logreg_fused_bias_gradient_matches_two_pass_model(spark):
+def test_logreg_fused_bias_gradient_matches_two_pass_model(spark, monkeypatch):
     """_logreg_fit folds the bias gradient into the weight-gradient
     aggregate under sentinel bucket -1; the trained model must equal
     the two-collect formulation it replaced (recomputed here
     literally)."""
     from mpi_mapreduce_spark.functions import exact as ex
+    from mpi_mapreduce_spark.operators import training as T
     from mpi_mapreduce_spark.operators.training import (
         DSIR_TARGET_SOURCE,
         _logreg_fit,
@@ -149,12 +150,14 @@ def test_logreg_fused_bias_gradient_matches_two_pass_model(spark):
         hashed_bucket_rows,
     )
 
+    monkeypatch.setattr(T, "DSIR_BUCKETS", 64)
+    monkeypatch.setattr(T, "QL_ROUNDS", 2)
     docs = _docs(spark)
-    weights, bias, _, _ = _logreg_fit(docs, DSIR_TARGET_SOURCE, 64, 2)
+    weights, bias, _, _ = _logreg_fit(docs)
 
     # the r12 two-collect reference, verbatim
     counts = (
-        hashed_bucket_rows(docs, 64)
+        hashed_bucket_rows(docs)
         .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint()

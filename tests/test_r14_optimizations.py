@@ -48,7 +48,7 @@ def test_window_minmax_dup_filter_matches_distinct_join(spark):
     )
     starts = occ.join(dup, "s").select("doc_id", "q")
     via_join = _spans_from_starts(starts, SPAN_N)
-    assert _rows(duplicated_span_rows(docs, SPAN_N)) == _rows(via_join)
+    assert _rows(duplicated_span_rows(docs)) == _rows(via_join)
 
 
 def test_bm25_large_vocab_falls_back_to_semi_join(spark):
@@ -87,9 +87,6 @@ def test_declarative_logreg_matches_driver_loop_model(spark):
     Scores must be bit-equal to the driver-loop model from
     _logreg_fit applied through _logreg_logits (the r13 shape)."""
     from mpi_mapreduce_spark.operators.training import (
-        DSIR_BUCKETS,
-        DSIR_TARGET_SOURCE,
-        QL_ROUNDS,
         _logreg_fit,
         _logreg_logits,
         quality_logreg_scores,
@@ -97,9 +94,7 @@ def test_declarative_logreg_matches_driver_loop_model(spark):
     from mpi_mapreduce_spark.functions import exact as ex
 
     docs = _docs(spark)
-    weights, bias, counts, y = _logreg_fit(
-        docs, DSIR_TARGET_SOURCE, DSIR_BUCKETS, QL_ROUNDS
-    )
+    weights, bias, counts, y = _logreg_fit(docs)
     final = _logreg_logits(counts, y, weights, bias)
     logit_q = ex.quantize(F.col("logit"), 6)
     loop_scores = final.select(

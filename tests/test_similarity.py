@@ -420,7 +420,7 @@ def _planted_recall(df, partner_of, n_queries: int) -> tuple[float, int]:
     return len(found) / n_queries, max(found.values(), default=0)
 
 
-def test_pq_rerank_shortlist_recall_monotone(planted_sep):
+def test_pq_rerank_shortlist_recall_monotone(planted_sep, monkeypatch):
     """Round-6 knob pin: widening the ADC shortlist can only ADD
     candidates to the exact re-rank, so planted-partner recall is
     monotone in the shortlist width — recall(100) ≥ recall(50) — and
@@ -431,18 +431,17 @@ def test_pq_rerank_shortlist_recall_monotone(planted_sep):
     df, partner_of = planted_sep
     raw = df.select("vec_id", F.col("embedding").alias("e"))
     nq = len(partner_of)
-    r50, worst50 = _planted_recall(
-        S.pq_rerank_topk(raw, n_queries=nq, shortlist=50), partner_of, nq
-    )
-    r100, worst100 = _planted_recall(
-        S.pq_rerank_topk(raw, n_queries=nq, shortlist=100), partner_of, nq
-    )
+    monkeypatch.setattr(S, "N_QUERIES", nq)
+    monkeypatch.setattr(S, "PQ_RERANK_SHORTLIST", 50)
+    r50, worst50 = _planted_recall(S.pq_rerank_topk(raw), partner_of, nq)
+    monkeypatch.setattr(S, "PQ_RERANK_SHORTLIST", 100)
+    r100, worst100 = _planted_recall(S.pq_rerank_topk(raw), partner_of, nq)
     assert r100 >= r50, f"recall(100)={r100:.2f} < recall(50)={r50:.2f}"
     assert r50 >= 0.9, f"recall(50)={r50:.2f} on separated data"
     assert worst50 <= 1 and worst100 <= 1, "re-ranked partner not rank 1"
 
 
-def test_lsh_probe_bits_recall_monotone(planted_sep):
+def test_lsh_probe_bits_recall_monotone(planted_sep, monkeypatch):
     """Round-6 knob pin: the 2-bit multiprobe set strictly contains
     the 1-bit set (every ≤1-flip mask is a ≤2-flip mask), so the
     candidate pool — and hence planted-partner recall — is monotone
@@ -455,12 +454,10 @@ def test_lsh_probe_bits_recall_monotone(planted_sep):
     queries = corpus.where(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    r1, _ = _planted_recall(
-        S.ann_lsh(corpus, queries, 64, probe_bits=1), partner_of, nq
-    )
-    r2, _ = _planted_recall(
-        S.ann_lsh(corpus, queries, 64, probe_bits=2), partner_of, nq
-    )
+    monkeypatch.setattr(S, "LSH_PROBE_BITS_DEFAULT", 1)
+    r1, _ = _planted_recall(S.ann_lsh(corpus, queries, 64), partner_of, nq)
+    monkeypatch.setattr(S, "LSH_PROBE_BITS_DEFAULT", 2)
+    r2, _ = _planted_recall(S.ann_lsh(corpus, queries, 64), partner_of, nq)
     assert r2 >= r1, f"recall(2-bit)={r2:.2f} < recall(1-bit)={r1:.2f}"
     assert r2 >= 0.9, f"recall(2-bit)={r2:.2f} on separated data"
 
@@ -487,7 +484,7 @@ def test_probe_masks_generic_contract():
             S._probe_masks(bad)
 
 
-def test_ivf_nprobe_recall_monotone(planted_sep):
+def test_ivf_nprobe_recall_monotone(planted_sep, monkeypatch):
     """Completes the ANN knob triptych (LSH probe_bits, PQ shortlist,
     IVF nprobe): the top-(nprobe=3) probed cells are a prefix-superset
     of the top-(nprobe=1) cells (argsort prefix, [:, :nprobe]), so the
@@ -501,12 +498,10 @@ def test_ivf_nprobe_recall_monotone(planted_sep):
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     cents = S.ivf_centroids(corpus)
-    r1, _ = _planted_recall(
-        S.ann_ivf(corpus, queries, cents, nprobe=1), partner_of, nq
-    )
-    r3, _ = _planted_recall(
-        S.ann_ivf(corpus, queries, cents, nprobe=3), partner_of, nq
-    )
+    monkeypatch.setattr(S, "IVF_PROBES", 1)
+    r1, _ = _planted_recall(S.ann_ivf(corpus, queries, cents), partner_of, nq)
+    monkeypatch.setattr(S, "IVF_PROBES", 3)
+    r3, _ = _planted_recall(S.ann_ivf(corpus, queries, cents), partner_of, nq)
     assert r3 >= r1, f"recall(nprobe=3)={r3:.2f} < recall(nprobe=1)={r1:.2f}"
     assert r3 >= 0.9, f"recall(nprobe=3)={r3:.2f} on separated data"
 
@@ -727,7 +722,7 @@ def test_mmr_structural_invariants(spark, sf_dir):
             assert (qid, r.vec_id) in shortset
 
 
-def test_mmr_diversifies_planted_clusters(spark):
+def test_mmr_diversifies_planted_clusters(spark, monkeypatch):
     """Planted fixture: the 10 most-relevant candidates are all
     near-copies of each other (one tight cluster hugging the query);
     a second, looser cluster sits a bit further. Plain kNN top-3 is
@@ -763,12 +758,14 @@ def test_mmr_diversifies_planted_clusters(spark):
         .orderBy("rank")
         .collect()
     ]
-    mmr3 = [
-        r.vec_id
-        for r in S.mmr_rerank(corpus, queries, k=3)
-        .orderBy("rank")
-        .collect()
-    ]
+    with monkeypatch.context() as m:
+        m.setattr(S, "TOP_K", 3)
+        mmr3 = [
+            r.vec_id
+            for r in S.mmr_rerank(corpus, queries)
+            .orderBy("rank")
+            .collect()
+        ]
     assert all(10 <= v < 20 for v in knn3), knn3  # kNN: all cluster A
     assert any(v >= 30 for v in mmr3), mmr3  # MMR escapes by rank 3
     assert 10 <= mmr3[0] < 20  # rank 1 still pure relevance
@@ -795,14 +792,16 @@ def test_mmr_fewer_candidates_than_k(spark):
     assert len({r.vec_id for r in out}) == 3
 
 
-def test_mmr_over_ann_shortlist(spark, sf_dir):
+def test_mmr_over_ann_shortlist(spark, sf_dir, monkeypatch):
     """The production serving composition: MMR diversifies an
     ANN-produced shortlist instead of the exact scan. Contracts:
     every pick comes from the supplied shortlist, rank 1 is the
     shortlist's top relevance, k rows per query (or the whole
     shortlist when shorter)."""
     corpus, queries, dim = S._table_corpus_queries(spark, sf_dir)
-    ann = S.ann_lsh(corpus, queries, dim, k=S.MMR_SHORTLIST)
+    with monkeypatch.context() as m:
+        m.setattr(S, "TOP_K", S.MMR_SHORTLIST)
+        ann = S.ann_lsh(corpus, queries, dim)
     out = S.mmr_rerank(corpus, queries, shortlist_df=ann).collect()
     short = {(r.query_id, r.vec_id): r.cosine for r in ann.collect()}
     byq = {}

@@ -200,25 +200,28 @@ def test_boilerplate_strip_fully_boiler_doc_kept_empty(spark):
     assert out[2].clean_text == "" and out[2].n_tokens == 4
 
 
-def test_bpe_train_merges_hand_model(spark):
+def test_bpe_train_merges_hand_model(spark, monkeypatch):
     """Merges match a by-hand run: frequency argmax, lexicographic
     ties, and the documented one-merge-per-scan run semantics."""
+    from mpi_mapreduce_spark.operators import textops as TX
     from mpi_mapreduce_spark.operators.textops import bpe_train_merges
 
     docs = spark.createDataFrame(
         [(1, "aa ab aa"), (2, "aa b")], "doc_id long, text string"
     )
+    monkeypatch.setattr(TX, "BPE_MERGE_ROUNDS", 4)
     out = [
         (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_freq)
-        for r in bpe_train_merges(docs, rounds=4).orderBy("merge_rank").collect()
+        for r in bpe_train_merges(docs).orderBy("merge_rank").collect()
     ]
     # round 1: 'a a' freq 3 (from aa x3); round 2: 'a b' freq 1; then dry
     assert out == [(1, "a", "a", "aa", 3), (2, "a", "b", "ab", 1)]
 
     runs = spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
+    monkeypatch.setattr(TX, "BPE_MERGE_ROUNDS", 3)
     out2 = [
         (r.merge_rank, r.lhs, r.rhs, r.merged, r.pair_freq)
-        for r in bpe_train_merges(runs, rounds=3).orderBy("merge_rank").collect()
+        for r in bpe_train_merges(runs).orderBy("merge_rank").collect()
     ]
     # ' a a a a ': merge1 'a a'(3 overlapping counts) -> ' aa a a '
     # (one merge per scan); merge2 ties 'a a'/'aa a' at 1 -> lexicographic
@@ -257,10 +260,11 @@ def test_bpe_driver_merges_match_distributed(spark, sf_dir, monkeypatch):
 
     edge = _bpe_docs(spark, _BPE_EDGE_WORDS)
     for docs, rounds in ((_docs(spark, sf_dir), 12), (edge, 8)):
-        driver = TX.bpe_merge_list(docs, rounds)
+        monkeypatch.setattr(TX, "BPE_MERGE_ROUNDS", rounds)
+        driver = TX.bpe_merge_list(docs)
         with monkeypatch.context() as m:
             m.setattr(TX, "BPE_DRIVER_MAX_WORDS", 0)
-            assert TX.bpe_merge_list(docs, rounds) == driver
+            assert TX.bpe_merge_list(docs) == driver
     assert driver == [
         (1, "a", "\x01", "a\x01", 5),
         (2, "a\x01", "b", "a\x01b", 4),  # 'a\x01 b' < 'a b'
@@ -285,11 +289,12 @@ def test_bpe_gate_at_budget(spark, monkeypatch):
         "_bpe_merges_local",
         lambda vocab, rounds: calls.append(len(vocab)) or local(vocab, rounds),
     )
+    monkeypatch.setattr(TX, "BPE_MERGE_ROUNDS", 3)
     monkeypatch.setattr(TX, "BPE_DRIVER_MAX_WORDS", 6)
-    at_budget = TX.bpe_merge_list(docs, 3)
+    at_budget = TX.bpe_merge_list(docs)
     assert calls == [6]
     monkeypatch.setattr(TX, "BPE_DRIVER_MAX_WORDS", 5)
-    over_budget = TX.bpe_merge_list(docs, 3)
+    over_budget = TX.bpe_merge_list(docs)
     assert calls == [6]  # the driver path was not taken
     assert at_budget == over_budget
 

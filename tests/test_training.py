@@ -238,7 +238,7 @@ def test_take_k_per_stratum_exact_and_deterministic(spark, sf_dir):
     }
 
 
-def test_take_k_salted_equals_single_phase(spark, sf_dir):
+def test_take_k_salted_equals_single_phase(spark, sf_dir, monkeypatch):
     """The two-phase skew-safe draw must return exactly the same rows
     as the single-window form for several k and salt values."""
     import mpi_mapreduce_spark.operators.training as TR
@@ -250,11 +250,10 @@ def test_take_k_salted_equals_single_phase(spark, sf_dir):
                 (r.lang, r.doc_id)
                 for r in TR.take_k_per_stratum(d, "lang", k).collect()
             }
+            monkeypatch.setattr(TR, "TAKE_K_SALT", salt)
             b = {
                 (r.lang, r.doc_id)
-                for r in TR.take_k_per_stratum_salted(
-                    d, "lang", k, salt=salt
-                ).collect()
+                for r in TR.take_k_per_stratum_salted(d, "lang", k).collect()
             }
             assert a == b, (k, salt)
 
@@ -316,14 +315,16 @@ def test_domain_quota_caps_every_source(spark, sf_dir):
         assert kept.get(src, 0) == min(n, T.DOMAIN_QUOTA), src
 
 
-def test_epoch_shard_is_a_permutation_and_epochs_differ(spark):
+def test_epoch_shard_is_a_permutation_and_epochs_differ(spark, monkeypatch):
     """Each epoch's (shard, pos) mapping is a bijection over the
     corpus; positions are dense 1..shard_size; epoch orders differ;
     re-running yields the identical mapping (determinism)."""
     docs = spark.createDataFrame(
         [(i,) for i in range(200)], "doc_id long"
     )
-    out = T.epoch_shard_order(docs, epochs=2, shards=4).collect()
+    monkeypatch.setattr(T, "EPOCH_COUNT", 2)
+    monkeypatch.setattr(T, "EPOCH_SHARDS", 4)
+    out = T.epoch_shard_order(docs).collect()
     by_epoch = {}
     for r in out:
         by_epoch.setdefault(r.epoch, []).append(r)
@@ -340,11 +341,11 @@ def test_epoch_shard_is_a_permutation_and_epochs_differ(spark):
     order0 = [(r.shard, r.pos) for r in sorted(by_epoch[0], key=lambda r: r.doc_id)]
     order1 = [(r.shard, r.pos) for r in sorted(by_epoch[1], key=lambda r: r.doc_id)]
     assert order0 != order1  # epochs shuffle differently
-    rerun = T.epoch_shard_order(docs, epochs=2, shards=4).collect()
+    rerun = T.epoch_shard_order(docs).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, rerun))
 
 
-def test_token_shard_export_roundtrip(spark, tmp_path):
+def test_token_shard_export_roundtrip(spark, tmp_path, monkeypatch):
     """shard_{k}.bin bytes reconstruct every document's token-id
     sequence through the boundary index, ids match a python
     polynomial-hash recount, and EOS separates documents."""
@@ -358,7 +359,8 @@ def test_token_shard_export_roundtrip(spark, tmp_path):
         "doc_id long, text string",
     )
     out = str(tmp_path / "shards")
-    manifest, index = T.write_token_shards(docs, out, shards=4)
+    monkeypatch.setattr(T, "SHARD_COUNT", 4)
+    manifest, index = T.write_token_shards(docs, out)
     man = {r.shard: r for r in manifest.collect()}
     idx = {r.doc_id: r for r in index.collect()}
 
@@ -406,7 +408,7 @@ def test_cluster_safe_split_keeps_neardups_together(spark, sf_dir):
             assert r.split == plain[r.doc_id]
 
 
-def test_dsir_target_like_docs_score_higher(spark):
+def test_dsir_target_like_docs_score_higher(spark, monkeypatch):
     from mpi_mapreduce_spark.operators.training import dsir_logweights
 
     # target source docs speak "alpha beta"; raw pool has one doc in
@@ -421,10 +423,8 @@ def test_dsir_target_like_docs_score_higher(spark):
         ],
         "doc_id long, text string, source string",
     )
-    w = {
-        r.doc_id: r.dsir_logweight
-        for r in dsir_logweights(docs, target_source="tgt").collect()
-    }
+    monkeypatch.setattr(T, "DSIR_TARGET_SOURCE", "tgt")
+    w = {r.doc_id: r.dsir_logweight for r in dsir_logweights(docs).collect()}
     assert w[3] > w[4]
 
 
@@ -442,7 +442,7 @@ def test_dsir_resample_is_topk_and_deterministic(spark, sf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_quality_logreg_separates_sources(spark):
+def test_quality_logreg_separates_sources(spark, monkeypatch):
     from mpi_mapreduce_spark.operators.training import quality_logreg_scores
 
     # trusted docs speak one vocabulary, raw docs another; after two
@@ -454,7 +454,8 @@ def test_quality_logreg_separates_sources(spark):
     for i in range(8, 24):
         rows.append((i, "zebra quux flange grommet zebra quux", "pool"))
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {r.doc_id: r for r in quality_logreg_scores(docs, target_source="tgt").collect()}
+    monkeypatch.setattr(T, "DSIR_TARGET_SOURCE", "tgt")
+    out = {r.doc_id: r for r in quality_logreg_scores(docs).collect()}
     assert out[0].prob > out[20].prob
     assert out[0].keep != out[20].keep or out[0].logit > out[20].logit
 
@@ -474,7 +475,9 @@ def test_quality_logreg_deterministic(spark, sf_dir):
     assert all(0.0 <= p <= 1.0 for _, _, p, _ in a)
 
 
-def test_quality_logreg_many_rounds_plan_stays_bounded(spark, sf_dir):
+def test_quality_logreg_many_rounds_plan_stays_bounded(
+    spark, sf_dir, monkeypatch
+):
     """Every weight-update round references the weight frame about 5×,
     so without re-materialization the plan grows geometrically in
     ``rounds``. With the periodic checkpoint the exchange count
@@ -485,7 +488,8 @@ def test_quality_logreg_many_rounds_plan_stays_bounded(spark, sf_dir):
     docs = T._docs(spark, sf_dir)
 
     def n_exchanges(rounds):
-        df = T.quality_logreg_scores(docs, rounds=rounds)
+        monkeypatch.setattr(T, "QL_ROUNDS", rounds)
+        df = T.quality_logreg_scores(docs)
         return df._jdf.queryExecution().executedPlan().toString().count(
             "Exchange"
         )
@@ -493,9 +497,7 @@ def test_quality_logreg_many_rounds_plan_stays_bounded(spark, sf_dir):
     base = n_exchanges(2)
     assert n_exchanges(10) <= base * 10 / 2
 
-    weights, bias, counts, y = T._logreg_fit(
-        docs, T.DSIR_TARGET_SOURCE, T.DSIR_BUCKETS, 10
-    )
+    weights, bias, counts, y = T._logreg_fit(docs)
     logit_q = ex.quantize(F.col("logit"), 6)
     loop_scores = T._logreg_logits(counts, y, weights, bias).select(
         "doc_id",
@@ -505,4 +507,4 @@ def test_quality_logreg_many_rounds_plan_stays_bounded(spark, sf_dir):
         ).alias("prob"),
         (logit_q > 0).alias("keep"),
     )
-    assert _rows(T.quality_logreg_scores(docs, rounds=10)) == _rows(loop_scores)
+    assert _rows(T.quality_logreg_scores(docs)) == _rows(loop_scores)

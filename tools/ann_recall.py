@@ -2,7 +2,8 @@
 """Planted-partner recall / wall sweep for the ANN paths — the
 committed, reproducible form of SCALING.md's round-5 recall table
 (which was measured ad-hoc) plus the round-6 knob sweeps (PQ re-rank
-shortlist width, LSH multiprobe width).
+shortlist width, LSH multiprobe width, IVF nprobe), each set on the
+similarity module's constants through tools/constants.py.
 
     python tools/ann_recall.py gen  [dir]            # permuted corpus
     python tools/ann_recall.py run  m1,m2,... [dir]  # measure methods
@@ -37,6 +38,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
+from tools.constants import patched  # noqa: E402
 from tools.scale_rehearsal import (  # noqa: E402
     EMB_SEP_DIM,
     EMB_SEP_N,
@@ -128,18 +130,20 @@ def _run_method(spark, d: str, method: str, n_queries: int):
     name, _, arg = method.partition(":")
     if name == "lsh":
         c = norm()
-        return S.ann_lsh(c, qs(c), EMB_SEP_DIM, probe_bits=int(arg or 1))
+        with patched(S, LSH_PROBE_BITS_DEFAULT=int(arg or 1)):
+            return S.ann_lsh(c, qs(c), EMB_SEP_DIM)
     if name == "ivf":
         c = norm()
-        return S.ann_ivf(
-            c, qs(c), S.ivf_centroids(c), nprobe=int(arg or S.IVF_PROBES)
-        )
+        cents = S.ivf_centroids(c)
+        with patched(S, IVF_PROBES=int(arg or S.IVF_PROBES)):
+            return S.ann_ivf(c, qs(c), cents)
     if name == "pq":
-        return S.pq_adc_topk(raw(), n_queries=n_queries)
+        with patched(S, N_QUERIES=n_queries):
+            return S.pq_adc_topk(raw())
     if name == "pq_rerank":
-        return S.pq_rerank_topk(
-            raw(), n_queries=n_queries, shortlist=int(arg or S.PQ_RERANK_SHORTLIST)
-        )
+        shortlist = int(arg or S.PQ_RERANK_SHORTLIST)
+        with patched(S, N_QUERIES=n_queries, PQ_RERANK_SHORTLIST=shortlist):
+            return S.pq_rerank_topk(raw())
     if name == "exact":
         c = norm()
         return S.knn_topk(c, qs(c))

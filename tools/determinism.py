@@ -16,18 +16,29 @@ value hashes.
 Usage::
 
     python tools/determinism.py [sf_dir] [partsA] [partsB]
+    python tools/determinism.py --plans DIR [sf_dir]
 
 defaults: /root/testdata/sf0.001, 8, 32 (the unit-test and driver
 parallelism respectively). Exit 0 iff every query hashes identically
 under both settings. This is a verification harness, not CI — it runs
 the whole registry twice (~2 full constructions); schedule it like
 the scale rehearsals.
+
+``--plans DIR`` checks the other half of the claim, that a query plans
+the same way on every warm call: in one ``get_spark`` session it
+constructs and executes every registered query PLAN_CALLS times,
+compares the ``executedPlan()`` strings with per-call ids stripped
+(``_PLAN_IDS``), prints the queries whose plan changed between
+calls, and writes each query's last normalized plan to
+``DIR/<query>.txt``, so two checkouts' directories can be ``diff -r``'d.
+Exit 0 iff every query's plan is stable.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import re
 import sys
 import time
 
@@ -79,6 +90,62 @@ def _sweep(sf_dir: str, partitions: int, aqe: bool = True) -> dict[str, tuple]:
     return out
 
 
+PLAN_CALLS = 3
+
+# ids Spark hands out per session or per call, not per plan shape:
+# expression, plan and RDD ids, lambda variable suffixes, and the
+# whole-stage-codegen and query-stage numbers, which AQE assigns in the
+# order stages become ready (a reordered but identical plan keeps its
+# operators, exchanges and join strategies, which stay compared)
+_PLAN_IDS = (
+    (re.compile(r"#\d+L?"), "#"),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"(lambda \w+?)_\d+"), r"\1"),
+    (re.compile(r"\*\(\d+\)"), "*()"),
+    (re.compile(r"QueryStage \d+"), "QueryStage"),
+)
+
+
+def _normalized_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    for pattern, repl in _PLAN_IDS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
+def _plan_sweep(out_dir: str, sf_dir: str) -> int:
+    from mpi_mapreduce_spark.plans.registry import QUERIES
+    from mpi_mapreduce_spark.session import get_spark
+
+    t0 = time.perf_counter()
+    spark = get_spark(app_name="determinism-plans")
+    spark.sparkContext.setLogLevel("ERROR")
+    os.makedirs(out_dir, exist_ok=True)
+    unstable = []
+    for name, fn in QUERIES.items():
+        plans = []
+        for _ in range(PLAN_CALLS):
+            try:
+                df = fn(spark, sf_dir)
+                df.collect()
+                plans.append(_normalized_plan(df))
+            except Exception as e:  # noqa: BLE001 — report-and-continue
+                plans.append(f"ERROR {type(e).__name__}: {str(e)[:200]}")
+        if len(set(plans)) > 1:
+            unstable.append(name)
+            print(f"UNSTABLE {name}")
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(plans[-1] + "\n")
+    spark.stop()
+    print(
+        f"plans: {len(QUERIES) - len(unstable)}/{len(QUERIES)} stable over "
+        f"{PLAN_CALLS} calls ({sf_dir}, {time.perf_counter() - t0:.0f}s); "
+        f"unstable: {','.join(unstable) or '-'}"
+    )
+    return 1 if unstable else 0
+
+
 def main() -> int:
     # --vary-aqe: additionally flip adaptive execution OFF in run A
     # and ON in run B, so the static plan and every AQE re-plan
@@ -86,7 +153,14 @@ def main() -> int:
     # produce the identical result
     vary_aqe = "--vary-aqe" in sys.argv
     argv = [x for x in sys.argv if x != "--vary-aqe"]
+    plans_dir = None
+    if "--plans" in argv:
+        i = argv.index("--plans")
+        plans_dir = argv[i + 1]
+        del argv[i : i + 2]
     sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.001"
+    if plans_dir is not None:
+        return _plan_sweep(plans_dir, sf_dir)
     pa = int(argv[2]) if len(argv) > 2 else 8
     pb = int(argv[3]) if len(argv) > 3 else 32
     t0 = time.perf_counter()

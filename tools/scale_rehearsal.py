@@ -33,6 +33,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
+from tools.constants import patched  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.1"
 SCRATCH = "/tmp/scale10x"
 DOC_REPL = 10
@@ -241,6 +243,18 @@ def gen_txt(scratch: str, n: int = TXT_SEP_N) -> None:
     print(f"documents: {n} rows, {n_pairs} planted pairs -> {scratch}")
 
 
+def _emb_prod(D, bits: int | None = None, bands: int | None = None):
+    """The production embedding search shape (threshold 0.9 and the
+    EMB_PROD banding, or a swept ``bits``/``bands``) set on the dedup
+    module's constants for the length of a block."""
+    return patched(
+        D,
+        EMBED_DUP_THRESHOLD=EMB_PROD_THRESHOLD,
+        EMBED_LSH_BAND_BITS=bits or EMB_PROD_BITS,
+        EMBED_LSH_BANDS=bands or EMB_PROD_BANDS,
+    )
+
+
 def _resolve(name):
     from mpi_mapreduce_spark.plans.registry import QUERIES
 
@@ -257,8 +271,8 @@ def _resolve(name):
         # MinHash band-shape/signature-length sweep): txtsep_exact is
         # the truth row (registered dedup_ngram_jaccard semantics);
         # txtsep_minhash:<hashes>:<bands> runs the production LSH path
-        # at an overridden shape. Run ONE name per invocation — the
-        # default path persists the shingle index and the CacheManager
+        # with MINHASH_HASHES/MINHASH_BANDS set to that shape. Run ONE
+        # name per invocation — the default path persists the shingle index and the CacheManager
         # dedupes identical plans, so a multi-name run would hand
         # later shapes a warm index and understate their walls.
         from mpi_mapreduce_spark.datamodel import load_table
@@ -273,9 +287,14 @@ def _resolve(name):
             parts = op.split(":")
             h = int(parts[1]) if len(parts) > 1 else D.MINHASH_HASHES
             b = int(parts[2]) if len(parts) > 2 else D.MINHASH_BANDS
-            return lambda spark, d: D.minhash_jaccard_pairs(
-                load_table(spark, d, "documents"), n_hashes=h, n_bands=b
-            )
+
+            def run_minhash(spark, d):
+                with patched(D, MINHASH_HASHES=h, MINHASH_BANDS=b):
+                    return D.minhash_jaccard_pairs(
+                        load_table(spark, d, "documents")
+                    )
+
+            return run_minhash
         raise SystemExit(f"unknown txtsep op {op}")
     if name == "minhash_after_exact":
         # the composed production ordering — since round 5 this IS the
@@ -306,6 +325,12 @@ def _resolve(name):
                 F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
             )
 
+        def _raw(spark, d):
+            return load_table(spark, d, "embeddings").select(
+                "vec_id", VEC.as_double(F.col("embedding")).alias("e")
+            )
+
+
         op = name.removeprefix("embsep_")
         if op == "knn_exact":
             return lambda spark, d: S.knn_topk(_norm(spark, d), _qs(_norm(spark, d)))
@@ -328,27 +353,24 @@ def _resolve(name):
                 return S.ann_ivf(corpus, _qs(corpus), S.ivf_centroids(corpus))
 
             return run_ivf
-        if op == "ann_pq":
-            return lambda spark, d: S.pq_adc_topk(
-                load_table(spark, d, "embeddings").select(
-                    "vec_id", VEC.as_double(F.col("embedding")).alias("e")
-                ),
-                n_queries=EMB_SEP_QUERIES,
-            )
-        if op == "ann_pq_rerank":
-            return lambda spark, d: S.pq_rerank_topk(
-                load_table(spark, d, "embeddings").select(
-                    "vec_id", VEC.as_double(F.col("embedding")).alias("e")
-                ),
-                n_queries=EMB_SEP_QUERIES,
-            )
+        if op in ("ann_pq", "ann_pq_rerank"):
+            pq = S.pq_adc_topk if op == "ann_pq" else S.pq_rerank_topk
+
+            def run_pq(spark, d):
+                with patched(S, N_QUERIES=EMB_SEP_QUERIES):
+                    return pq(_raw(spark, d))
+
+            return run_pq
         if op == "dedup_exact":
-            return lambda spark, d: D.embedding_neardup_exact(
-                _norm(spark, d), EMB_PROD_THRESHOLD
-            )
+
+            def run_exact(spark, d):
+                with _emb_prod(D):
+                    return D.embedding_neardup_exact(_norm(spark, d))
+
+            return run_exact
         if op.startswith("dedup_lsh"):
             # optional banding override: dedup_lsh:<bits>:<bands> —
-            # the round-6 b/L knob sweep (default = the production
+            # the round-6 b/L sweep (default = the production
             # EMB_PROD_BITS/EMB_PROD_BANDS shape, b=10/L=12 since the
             # round-6 sweep; recall follows the banding theorem
             # 1-(1-p^b)^L, row count / planted pairs ≈ recall on this
@@ -356,13 +378,12 @@ def _resolve(name):
             parts = op.split(":")
             bits = int(parts[1]) if len(parts) > 1 else EMB_PROD_BITS
             bands = int(parts[2]) if len(parts) > 2 else EMB_PROD_BANDS
-            return lambda spark, d: D.embedding_neardup_lsh(
-                _norm(spark, d),
-                EMB_SEP_DIM,
-                EMB_PROD_THRESHOLD,
-                bits,
-                bands,
-            )
+
+            def run_lsh(spark, d):
+                with _emb_prod(D, bits, bands):
+                    return D.embedding_neardup_lsh(_norm(spark, d), EMB_SEP_DIM)
+
+            return run_lsh
         if op.startswith("dedup_incremental"):
             # dedup_incremental:<mod> — the r7 incremental embedding
             # path at production banding/threshold: every mod-th
@@ -378,25 +399,20 @@ def _resolve(name):
             mod = int(parts[1]) if len(parts) > 1 else 10
             def run_incr(spark, d, mod=mod):
                 emb = _norm(spark, d)
-                return D.embedding_incremental_hits(
-                    emb.where(F.col("vec_id") % mod == 0),
-                    emb.where(F.col("vec_id") % mod != 0),
-                    EMB_SEP_DIM,
-                    EMB_PROD_THRESHOLD,
-                    EMB_PROD_BITS,
-                    EMB_PROD_BANDS,
-                )
+                with _emb_prod(D):
+                    return D.embedding_incremental_hits(
+                        emb.where(F.col("vec_id") % mod == 0),
+                        emb.where(F.col("vec_id") % mod != 0),
+                        EMB_SEP_DIM,
+                    )
             return run_incr
         if op == "dedup_auto":
 
             def run_auto(spark, d):
-                pairs, path = D.embedding_neardup_auto(
-                    _norm(spark, d),
-                    EMB_SEP_DIM,
-                    EMB_PROD_THRESHOLD,
-                    EMB_PROD_BITS,
-                    EMB_PROD_BANDS,
-                )
+                with _emb_prod(D):
+                    pairs, path = D.embedding_neardup_auto(
+                        _norm(spark, d), EMB_SEP_DIM
+                    )
                 print(f"  # auto picked: {path}", flush=True)
                 return pairs
 
@@ -460,23 +476,18 @@ def time_incr_stored(scratch: str, mods: list[int]) -> None:
         corpus = emb.where(F.col("vec_id") % mod != 0)
         batch = emb.where(F.col("vec_id") % mod == 0)
         idx_dir = tempfile.mkdtemp(prefix=f"embidx_m{mod}_")
-        t0 = time.perf_counter()
-        D.embedding_band_rows(
-            corpus, EMB_SEP_DIM, EMB_PROD_BITS, EMB_PROD_BANDS
-        ).write.mode("overwrite").parquet(idx_dir)
-        build = time.perf_counter() - t0
-        stored = spark.read.parquet(idx_dir)
-        t0 = time.perf_counter()
-        n = D.embedding_incremental_hits(
-            batch,
-            corpus,
-            EMB_SEP_DIM,
-            EMB_PROD_THRESHOLD,
-            EMB_PROD_BITS,
-            EMB_PROD_BANDS,
-            corpus_bands=stored,
-        ).count()
-        serve = time.perf_counter() - t0
+        with _emb_prod(D):
+            t0 = time.perf_counter()
+            D.embedding_band_rows(corpus, EMB_SEP_DIM).write.mode(
+                "overwrite"
+            ).parquet(idx_dir)
+            build = time.perf_counter() - t0
+            stored = spark.read.parquet(idx_dir)
+            t0 = time.perf_counter()
+            n = D.embedding_incremental_hits(
+                batch, corpus, EMB_SEP_DIM, corpus_bands=stored
+            ).count()
+            serve = time.perf_counter() - t0
         print(
             f"| {mod} | {build:.1f} s | {serve:.1f} s |  # {n} hits",
             flush=True,
@@ -643,7 +654,8 @@ def time_bloom(scratch: str, m_bits_list: list[int]) -> None:
         filt = D.bloom_build(corpus, m_bits=m).localCheckpoint()
         build = time.perf_counter() - t0
         t0 = time.perf_counter()
-        rows = D.bloom_screen(batch, filt, m_bits=m).collect()
+        with patched(D, BLOOM_BITS=m):
+            rows = D.bloom_screen(batch, filt).collect()
         screen = time.perf_counter() - t0
         seen = {r.doc_id for r in rows if r.bloom_seen}
         fn = truth - seen
@@ -697,10 +709,11 @@ def time_novelty(scratch: str, m_bits_list: list[int]) -> None:
           "FP predicted | max gap |")
     for m in m_bits_list:
         t0 = time.perf_counter()
-        est = {
-            r.doc_id: r.novelty_est
-            for r in D.novelty_scores_bloom(batch, corpus, m_bits=m).collect()
-        }
+        with patched(D, NOVELTY_BLOOM_BITS=m):
+            est = {
+                r.doc_id: r.novelty_est
+                for r in D.novelty_scores_bloom(batch, corpus).collect()
+            }
         wall = time.perf_counter() - t0
         gaps = []
         for did, nov in exact.items():
@@ -896,24 +909,25 @@ def time_cms(scratch: str, widths: list[int]) -> None:
     print(f"tokens {n_tokens}, vocab {exact.count()}")
     print("| w | build | mean over | p99 over | N/w |")
     for w in widths:
-        t0 = time.perf_counter()
-        sk = SK.cms_build(toks, width=w).localCheckpoint()
-        build = time.perf_counter() - t0
-        probes = exact.select(
-            "term",
-            "exact_cnt",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            SK._cms_bucket(F.col("term"), j, w).alias("c"),
-                        )
-                        for j in range(SK.CMS_DEPTH)
-                    ]
-                )
-            ).alias("p"),
-        ).select("term", "exact_cnt", "p.j", "p.c")
+        with patched(SK, CMS_WIDTH=w):
+            t0 = time.perf_counter()
+            sk = SK.cms_build(toks).localCheckpoint()
+            build = time.perf_counter() - t0
+            probes = exact.select(
+                "term",
+                "exact_cnt",
+                F.explode(
+                    F.array(
+                        *[
+                            F.struct(
+                                F.lit(j).alias("j"),
+                                SK._cms_bucket(F.col("term"), j).alias("c"),
+                            )
+                            for j in range(SK.CMS_DEPTH)
+                        ]
+                    )
+                ).alias("p"),
+            ).select("term", "exact_cnt", "p.j", "p.c")
         est = (
             probes.join(sk, ["j", "c"])
             .groupBy("term", "exact_cnt")
