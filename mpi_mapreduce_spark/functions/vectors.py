@@ -35,13 +35,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def normalize(a: Column) -> Column:
-    """a / ||a|| — pre-normalizing once turns cosine into a plain dot
-    product, the trick every ANN stage here relies on."""
-    n = norm(a)
-    return F.when(n > 0, F.transform(a, lambda x: x / n)).otherwise(a)
-
-
 # ---------------------------------------------------------------------------
 # Arrow-vectorized variants — the hot path.
 #

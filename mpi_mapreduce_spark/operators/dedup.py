@@ -88,14 +88,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
 
 
-def _shingled(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "doc_id",
-        "n_chars",
-        TXT.word_shingles(TXT.tokens(F.col("text")), SHINGLE_N).alias("sh"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -1310,7 +1302,7 @@ def _nightly_bloom_core(
         "doc_id", (F.row_number().over(wdup) > 1).alias("seen_in_batch")
     )
 
-    if has_committed_parquet(index_dir):
+    if has_committed_parquet(spark, index_dir):
         stored = bloom_merge(
             spark.read.parquet(index_dir)
             .where(F.col("batch") != F.lit(bkey))
@@ -2664,7 +2656,7 @@ def _nightly_embedding_core(
             bands_dir,
             exclude=bkey,
         )
-        if has_committed_parquet(vecs_dir)
+        if has_committed_parquet(spark, vecs_dir)
         else None
     )
     if cross_cands is not None:
@@ -4088,24 +4080,19 @@ def _batch_partition_dirs(
     """{batch key: partition path} for every ``batch=<k>`` directory
     under a nightly index dir.
 
-    Listed through the Hadoop FileSystem API (VERDICT r10 item 5) —
-    the same listing Spark's own file index uses — so the compaction
-    loop's partition enumeration works against any configured
-    filesystem (local, HDFS, object stores via their Hadoop
-    connectors), not just the local FS an ``os.listdir`` would see.
-    One listStatus call: driver-side metadata work, the same cost
-    class as the scan planning that follows it."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(index_dir)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return {}
-    out: dict[str, str] = {}
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            out[name[len("batch="):]] = st.getPath().toString()
-    return dict(sorted(out.items()))
+    Listed through sources/io.py's Hadoop FileSystem view (VERDICT
+    r10 item 5), so the compaction loop's partition enumeration works
+    against any configured filesystem (local, HDFS, object stores via
+    their Hadoop connectors)."""
+    import os
+
+    from mpi_mapreduce_spark.sources.io import _list_dir
+
+    return {
+        name[len("batch="):]: os.path.join(index_dir, name)
+        for name, is_dir, _ in sorted(_list_dir(spark, index_dir) or ())
+        if is_dir and name.startswith("batch=")
+    }
 
 
 def _serving_table(index_dir: str, family: str) -> str:
@@ -4188,16 +4175,20 @@ def _delta_dirs_small(spark: SparkSession, delta_dirs: list[str]) -> bool:
     under :data:`DELTA_BROADCAST_MAX_BYTES` (read at call time so
     tests can shrink it) — driver-side Hadoop FS metadata only, no
     job."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
+    import os
+
+    from mpi_mapreduce_spark.sources.io import _list_dir
+
     total = 0
-    for d in delta_dirs:
-        jp = jvm.org.apache.hadoop.fs.Path(d)
-        fs = jp.getFileSystem(hconf)
-        if fs.exists(jp):
-            total += fs.getContentSummary(jp).getLength()
-            if total > DELTA_BROADCAST_MAX_BYTES:
-                return False
+    todo = list(delta_dirs)
+    while todo:
+        d = todo.pop()
+        for name, is_dir, length in _list_dir(spark, d) or ():
+            if is_dir:
+                todo.append(os.path.join(d, name))
+            total += length
+        if total > DELTA_BROADCAST_MAX_BYTES:
+            return False
     return True
 
 
@@ -4342,7 +4333,7 @@ def _serving_tiers(
                 delta = F.broadcast(delta)
             tiers.append(delta)
         return tiers
-    if has_committed_parquet(index_dir):
+    if has_committed_parquet(spark, index_dir):
         flat = spark.read.parquet(index_dir)
         if exclude is not None:
             flat = flat.where(F.col("batch") != F.lit(exclude))
@@ -4613,11 +4604,9 @@ def _serving_state_files_ok(spark: SparkSession, index_dir: str) -> bool:
 
     if not _serving_fingerprint_ok(index_dir):
         return False
-    if not (
-        has_committed_parquet(os.path.join(index_dir, "batch=b1"))
-        and has_committed_parquet(os.path.join(index_dir, "batch=b2"))
-        and has_committed_parquet(os.path.join(index_dir, "_base"))
-        and has_committed_parquet(os.path.join(index_dir, "_base_folded"))
+    if not all(
+        has_committed_parquet(spark, os.path.join(index_dir, sub))
+        for sub in ("batch=b1", "batch=b2", "_base", "_base_folded")
     ):
         return False
     ledger = spark.read.parquet(os.path.join(index_dir, "_base_folded"))
@@ -4664,8 +4653,8 @@ def _serving_state_ok(
 
     ledger_tbl = f"{tbl}_folded"
     return (
-        has_committed_parquet(os.path.join(index_dir, "batch=b1"))
-        and has_committed_parquet(os.path.join(index_dir, "batch=b2"))
+        has_committed_parquet(spark, os.path.join(index_dir, "batch=b1"))
+        and has_committed_parquet(spark, os.path.join(index_dir, "batch=b2"))
         and spark.catalog.tableExists(tbl)
         and spark.catalog.tableExists(ledger_tbl)
         and {r.batch_key for r in spark.table(ledger_tbl).collect()}

@@ -74,29 +74,16 @@ def trade_edges(
     )
 
 
-def pagerank(
-    nodes: DataFrame,
-    edges: DataFrame,
-    n_iter: int = N_ITER,
-    checkpoint_every: int = 0,
-) -> DataFrame:
+def pagerank(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Weighted PageRank, integer-exact. `nodes` has column `id`;
     `edges` has (src, dst, w). Returns (id, pr) with pr in SCALE
     units. Dangling nodes keep their base share (sink mass is dropped,
     not redistributed — deterministic and cross-engine-identical).
 
-    checkpoint_every=0 keeps the whole loop lazy: one job whose plan
-    chains n_iter broadcast joins — for a handful of rounds this
-    beats eager per-round materialization (each localCheckpoint is a
-    blocking job of its own). Set it >0 for long/unbounded loops
-    where lineage depth or replay cost matters (the
-    dedup.connected_components regime).
-
-    Quiet-box A/B at sf0.1 (6 alternating full construct+count runs,
-    warm JVM): lazy min 2.24 s vs eager-every-round min 2.84 s — the
-    lazy default stands. Neither setting reproduces the 1.6 s figure
-    from the round-1 bench record, so that number was measured under
-    host contention, not a real regression in this loop."""
+    The N_ITER rounds stay lazy: one job whose plan chains N_ITER
+    broadcast joins, with no per-round localCheckpoint. Quiet-box A/B
+    at sf0.1 (6 alternating full construct+count runs, warm JVM):
+    lazy min 2.24 s vs eager-every-round min 2.84 s."""
     n = nodes.count()
     base = (SCALE // n) * (DAMP_DEN - DAMP_NUM) // DAMP_DEN
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
@@ -105,7 +92,7 @@ def pagerank(
     ew = ew.localCheckpoint(eager=True)
 
     pr = nodes.select("id", (F.lit(SCALE // n)).cast("long").alias("pr"))
-    for it in range(n_iter):
+    for _ in range(N_ITER):
         contrib = (
             ew.join(F.broadcast(pr), ew.src == pr.id)
             .select(
@@ -124,8 +111,6 @@ def pagerank(
                 )
             ).cast("long").alias("pr"),
         )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            pr = pr.localCheckpoint(eager=True)
     return pr
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from mpi_mapreduce_spark.operators import dedup, similarity, sketches
 from mpi_mapreduce_spark.sources.io import (
+    _list_dir,
     committed_batch_keys,
     has_committed_parquet,
     ingest_incremental,
@@ -91,6 +92,12 @@ COMPACTED_INDEXES = (
         "embband",
     ),
 )
+
+#: maybe_weekly_curation_compaction folds once any family holds more
+#: committed post-compaction deltas than this: one week of nightly
+#: partitions, the point past which the broadcast-delta tier stops
+#: being 'a few small frames'
+MAX_DELTAS = 7
 
 
 def _batch_key(files: list[str]) -> str:
@@ -191,7 +198,7 @@ def nightly_curation_update(
     batches: dict[str, tuple[DataFrame, list[str], str]] = {}
     for modality in (DOCS_SUBDIR, VECS_SUBDIR):
         src = os.path.join(batch_dir, modality)
-        if modality in modalities and os.path.isdir(src):
+        if modality in modalities:
             frame, files = ingest_incremental(spark, src, ledger)
             if files:
                 batches[modality] = (frame, files, _batch_key(files))
@@ -274,20 +281,17 @@ def weekly_curation_compaction(
 def maybe_weekly_curation_compaction(
     spark: SparkSession,
     state_dir: str,
-    max_deltas: int = 7,
     timings: dict[str, float] | None = None,
 ) -> dict[str, int] | None:
     """Policy-triggered form of :func:`weekly_curation_compaction`:
     compact when ANY family's post-compaction delta count exceeds
-    ``max_deltas`` (default 7 — one week of nightly partitions, the
-    point past which the broadcast-delta tier stops being 'a few
-    small frames'). The count is a schedule trigger, not a safety
-    bound: the serving ladder itself byte-gates its delta broadcast
-    (dedup.DELTA_BROADCAST_MAX_BYTES, 256 MB on-disk cap, see
-    dedup._serving_tiers) and falls back to a plain shuffle join
-    above it, so a week of unusually fat nights degrades to
-    correct-but-shuffled serving rather than an oversized broadcast
-    (ADVICE r12). A scheduler can simply call this after every
+    :data:`MAX_DELTAS` (read at call time). The count is a schedule
+    trigger, not a safety bound: the serving ladder itself byte-gates
+    its delta broadcast (dedup.DELTA_BROADCAST_MAX_BYTES, 256 MB
+    on-disk cap, see dedup._serving_tiers) and falls back to a plain
+    shuffle join above it, so a week of unusually fat nights degrades
+    to correct-but-shuffled serving rather than an oversized
+    broadcast (ADVICE r12). A scheduler can simply call this after every
     :func:`nightly_curation_update` instead of maintaining its own
     calendar: no-op (returns None) while the delta tier is small, one
     fold when it isn't. Uncommitted partials never count as deltas
@@ -304,7 +308,7 @@ def maybe_weekly_curation_compaction(
         deltas = [
             k for k in parts if k not in folded and k in committed
         ]
-        if len(deltas) > max_deltas:
+        if len(deltas) > MAX_DELTAS:
             return weekly_curation_compaction(
                 spark, state_dir, timings=timings
             )
@@ -345,21 +349,23 @@ def curation_state_audit(
     parts: list[DataFrame] = []
 
     grams = os.path.join(state_dir, STATE_SUBDIRS["substring"])
-    if has_committed_parquet(grams):
+    if has_committed_parquet(spark, grams):
         parts.append(_long("grams", dedup.gram_index_integrity(spark, grams)))
     bloom = os.path.join(state_dir, STATE_SUBDIRS["bloom"])
-    if has_committed_parquet(bloom):
-        parts.append(_long("bloom", dedup.bloom_filter_integrity(spark, bloom)))
+    if has_committed_parquet(spark, bloom):
+        parts.append(
+            _long("bloom", dedup.bloom_filter_integrity(spark, bloom))
+        )
     emb = os.path.join(state_dir, STATE_SUBDIRS["embedding"])
-    if has_committed_parquet(os.path.join(emb, "bands")) and (
-        has_committed_parquet(os.path.join(emb, "vectors"))
+    if has_committed_parquet(spark, os.path.join(emb, "bands")) and (
+        has_committed_parquet(spark, os.path.join(emb, "vectors"))
     ):
         parts.append(
             _long("embedding", dedup.embedding_index_integrity(spark, emb))
         )
 
     mh = os.path.join(state_dir, STATE_SUBDIRS["minhash"])
-    if has_committed_parquet(mh):
+    if has_committed_parquet(spark, mh):
         sig = spark.read.parquet(mh)
         parts.append(
             _long(
@@ -385,7 +391,7 @@ def curation_state_audit(
             )
         )
     cms = os.path.join(state_dir, STATE_SUBDIRS["cms"])
-    if has_committed_parquet(cms):
+    if has_committed_parquet(spark, cms):
         t = spark.read.parquet(cms)
         parts.append(
             _long(
@@ -400,7 +406,7 @@ def curation_state_audit(
             )
         )
     lsh = os.path.join(state_dir, STATE_SUBDIRS["ann_lsh"])
-    if has_committed_parquet(os.path.join(lsh, "buckets")):
+    if has_committed_parquet(spark, os.path.join(lsh, "buckets")):
         b = spark.read.parquet(os.path.join(lsh, "buckets"))
         parts.append(
             spark.createDataFrame(
@@ -428,10 +434,10 @@ def curation_state_audit(
         )
 
     pq = os.path.join(state_dir, STATE_SUBDIRS["pq"])
-    if has_committed_parquet(os.path.join(pq, "codebooks")):
+    if has_committed_parquet(spark, os.path.join(pq, "codebooks")):
         books = spark.read.parquet(os.path.join(pq, "codebooks"))
         rows = [("pq", "n_codebook_rows", books.count())]
-        if has_committed_parquet(os.path.join(pq, "codes")):
+        if has_committed_parquet(spark, os.path.join(pq, "codes")):
             codes = spark.read.parquet(os.path.join(pq, "codes"))
             rows.append(("pq", "n_code_rows", codes.count()))
             rows.append(
@@ -460,10 +466,10 @@ def curation_state_audit(
         )
 
     ivf = os.path.join(state_dir, STATE_SUBDIRS["ivf"])
-    if has_committed_parquet(os.path.join(ivf, "centroids")):
+    if has_committed_parquet(spark, os.path.join(ivf, "centroids")):
         cents = spark.read.parquet(os.path.join(ivf, "centroids"))
         counters = [F.count("*").alias("n_centroids")]
-        if has_committed_parquet(os.path.join(ivf, "cells")):
+        if has_committed_parquet(spark, os.path.join(ivf, "cells")):
             cells = spark.read.parquet(os.path.join(ivf, "cells"))
             orphan = cells.join(
                 cents.select("cell"), "cell", "left_anti"
@@ -481,9 +487,7 @@ def curation_state_audit(
         else:
             parts.append(_long("ivf", cents.select(*counters)))
     ledger = os.path.join(state_dir, LEDGER_SUBDIR)
-    if os.path.isdir(ledger) and any(
-        f.endswith(".parquet") for f in os.listdir(ledger)
-    ):
+    if has_committed_parquet(spark, ledger):
         led = spark.read.parquet(ledger)
         parts.append(
             _long(
@@ -496,8 +500,8 @@ def curation_state_audit(
                 ),
             )
         )
-    serving = os.path.join(state_dir, SERVING_SUBDIR)
-    if os.path.isdir(serving):
+    serving = _list_dir(spark, os.path.join(state_dir, SERVING_SUBDIR))
+    if serving is not None:
         # a dir that is neither a compacted leg's base nor the base's
         # fold ledger beside it is dead bytes (e.g. the pre-rename
         # serving/grams): nothing serves or re-folds it
@@ -507,9 +511,7 @@ def curation_state_audit(
             for d in (leg, f"{leg}_folded")
         }
         orphans = [
-            d
-            for d in os.listdir(serving)
-            if d not in live and os.path.isdir(os.path.join(serving, d))
+            d for d, is_dir, _ in serving if is_dir and d not in live
         ]
         parts.append(
             spark.createDataFrame(

@@ -841,7 +841,7 @@ def _nightly_ivf_core(
     cells_dir = os.path.join(index_dir, "cells")
     from mpi_mapreduce_spark.sources.io import has_committed_parquet
 
-    if has_committed_parquet(cent_dir):
+    if has_committed_parquet(spark, cent_dir):
         rows = spark.read.parquet(cent_dir).orderBy("cell").collect()
         cents = [list(r.c) for r in rows]
     else:
@@ -941,7 +941,7 @@ def _nightly_pq_core(
 
     book_dir = os.path.join(index_dir, "codebooks")
     codes_dir = os.path.join(index_dir, "codes")
-    if has_committed_parquet(book_dir):
+    if has_committed_parquet(spark, book_dir):
         # validate on read, loudly (ADVICE r9): a geometry drift or a
         # foreign row in the stored codebooks would otherwise die as
         # an IndexError here or as a None-centroid crash deep inside

@@ -13,10 +13,11 @@ cover the cases AQE can't fix:
   Correct for any commutative+associative aggregate (sum/count/min/
   max); exactly Spark's own partial-aggregation trick applied one
   level deeper.
-- salted_broadcast_left: a shuffle join where a few left keys are hot
-  and the right side is broadcastable — broadcast kills join skew
-  entirely (no shuffle of the skewed side at all). Provided as the
-  explicit recommended rewrite.
+- hot_key_split_join: a shuffle join where a few left keys are hot
+  and only the hot slice of the right side is broadcastable — the hot
+  rows ride a broadcast, only the cold tail shuffles. (When the whole
+  right side is broadcastable, a plain ``F.broadcast`` join already
+  kills the skew.)
 
 The salted path costs one extra (tiny) shuffle, so it's opt-in per
 query, not a default.
@@ -61,17 +62,6 @@ def salted_agg(
     )
 
 
-def salted_broadcast_left(
-    left: DataFrame, right: DataFrame, on, how: str = "inner"
-) -> DataFrame:
-    """Join rewrite for a skewed left side: broadcast the right side so
-    the hot left keys never shuffle. (If the right side is too big to
-    broadcast, the classic rewrite salts left keys and explodes the
-    right side `salt_n`-fold; with AQE skew-join on, Spark plans that
-    split automatically — keep that as the default.)"""
-    return left.join(F.broadcast(right), on, how)
-
-
 #: hot-key cap for hot_key_split_join — Zipf mass concentrates in the
 #: first few hundred keys, and 1024 rows is broadcast-trivial
 HOT_SPLIT_K = 1024
@@ -111,7 +101,7 @@ def hot_key_split_join(
     (localCheckpoint / driver collect) would take an action at plan-
     construction time, the exact leaked-block pattern the r12 bench
     autopsy removed (SCALING.md §r12). When the right side is
-    broadcastable whole, prefer :func:`salted_broadcast_left`; this
+    broadcastable whole, prefer a plain broadcast join; this
     is for vocabulary-scale right sides (e.g. a 100 TB corpus's
     bigram count table) where only the hot slice fits a broadcast."""
     hot = right.orderBy(F.desc(hot_by), *on).limit(hot_k)

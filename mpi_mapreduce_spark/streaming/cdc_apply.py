@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from mpi_mapreduce_spark.operators.cdc import merge_upsert
+from mpi_mapreduce_spark.sources.io import _list_dir
 
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 
@@ -49,15 +50,14 @@ def latest_per_key(
     )
 
 
-def snapshot_versions(base: str) -> list[int]:
-    if not os.path.isdir(base):
-        return []
-    out = []
-    for entry in os.listdir(base):
-        m = _VERSION_RE.match(entry)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+def snapshot_versions(spark: SparkSession, base: str) -> list[int]:
+    """Sorted version numbers of the ``v=<n>`` entries under ``base``
+    ([] when ``base`` is absent)."""
+    return sorted(
+        int(m.group(1))
+        for name, _, _ in _list_dir(spark, base) or ()
+        if (m := _VERSION_RE.match(name))
+    )
 
 
 def write_snapshot(df: DataFrame, base: str, version: int) -> None:
@@ -68,7 +68,7 @@ def read_snapshot(
     spark: SparkSession, base: str, version: int | None = None
 ) -> DataFrame:
     """Latest snapshot, or any retained historical version."""
-    versions = snapshot_versions(base)
+    versions = snapshot_versions(spark, base)
     if not versions:
         raise FileNotFoundError(f"no snapshot versions under {base}")
     v = versions[-1] if version is None else version

@@ -53,7 +53,7 @@ def test_stream_apply_matches_sequential_batch_merge(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    assert C.snapshot_versions(base) == [0, 1, 2]
+    assert C.snapshot_versions(spark, base) == [0, 1, 2]
     final = {r.k: (r.s, r.v) for r in C.read_snapshot(spark, base).collect()}
     assert final == {2: ("b3", 22.0), 3: ("c", 30.0), 4: ("d2", 41.0)}
 
@@ -100,4 +100,4 @@ def test_reapplied_batch_rewrites_same_version(spark, tmp_path):
     apply_once()
     again = sorted(tuple(r) for r in C.read_snapshot(spark, base, 1).collect())
     assert first == again == [(1, 6.0), (2, 7.0)]
-    assert C.snapshot_versions(base) == [0, 1]
+    assert C.snapshot_versions(spark, base) == [0, 1]

@@ -59,7 +59,7 @@ def _state_rows(spark, state_dir):
         if leg == "embedding":
             for part in ("bands", "vectors"):
                 p = os.path.join(d, part)
-                if has_committed_parquet(p):
+                if has_committed_parquet(spark, p):
                     out[f"{leg}/{part}"] = sorted(
                         map(tuple, spark.read.parquet(p).collect())
                     )
@@ -71,11 +71,11 @@ def _state_rows(spark, state_dir):
             }[leg]
             for part in subparts:
                 p = os.path.join(d, part)
-                if has_committed_parquet(p):
+                if has_committed_parquet(spark, p):
                     out[f"{leg}/{part}"] = sorted(
                         map(tuple, spark.read.parquet(p).collect())
                     )
-        elif has_committed_parquet(d):
+        elif has_committed_parquet(spark, d):
             out[leg] = sorted(map(tuple, spark.read.parquet(d).collect()))
     return out
 
@@ -748,7 +748,7 @@ def test_weekly_compaction_legacy_ledger_folds_nothing(spark, tmp_path):
     assert not spark.catalog.tableExists(D._serving_table(idx, "grams"))
 
 
-def test_maybe_weekly_compaction_policy(spark, tmp_path):
+def test_maybe_weekly_compaction_policy(spark, tmp_path, monkeypatch):
     """The delta-count trigger: below the threshold it's a no-op;
     past it, one fold runs; uncommitted partials don't count toward
     the trigger (and never fold)."""
@@ -765,15 +765,11 @@ def test_maybe_weekly_compaction_policy(spark, tmp_path):
             N.maybe_weekly_curation_compaction(spark, state) is None
         )
         # threshold 0: any committed delta triggers the fold
-        folded = N.maybe_weekly_curation_compaction(
-            spark, state, max_deltas=0
-        )
+        monkeypatch.setattr(N, "MAX_DELTAS", 0)
+        folded = N.maybe_weekly_curation_compaction(spark, state)
         assert folded is not None and folded["substring"] == 1
         # everything folded: trigger is quiet again even at 0
-        assert (
-            N.maybe_weekly_curation_compaction(spark, state, max_deltas=0)
-            is None
-        )
+        assert N.maybe_weekly_curation_compaction(spark, state) is None
         # an uncommitted partial lands (crashed night): still quiet —
         # partials are reconciliation's problem, not compaction's
         import pyspark.sql.functions as F  # noqa: N812
@@ -786,10 +782,7 @@ def test_maybe_weekly_compaction_policy(spark, tmp_path):
         ).write.mode("overwrite").parquet(
             os.path.join(grams, "batch=bCRASH")
         )
-        assert (
-            N.maybe_weekly_curation_compaction(spark, state, max_deltas=0)
-            is None
-        )
+        assert N.maybe_weekly_curation_compaction(spark, state) is None
     finally:
         _drop_serving_tables(spark, state)
 
@@ -827,3 +820,93 @@ def test_reconcile_ledger_gate_uses_hadoop_fs(spark, tmp_path):
     )
     assert dropped == []
     assert os.path.isdir(os.path.join(idx, "batch=bOLD"))
+
+
+def test_curation_state_audit_torn_ledger_reads_as_absent(spark, tmp_path):
+    """A TORN ledger write — one that died before commit, leaving only
+    a dot-staged ``.part-*`` file a direct committer renames on commit
+    — is no ledger: the audit reports no ledger rows instead of
+    reading the directory without a schema and dying with
+    UNABLE_TO_INFER_SCHEMA (the ADVICE r8 bug class of
+    has_committed_parquet, in the audit's own gate)."""
+    state = str(tmp_path / "state")
+    ledger = os.path.join(state, N.LEDGER_SUBDIR)
+    os.makedirs(ledger)
+    open(os.path.join(ledger, ".part-00000.snappy.parquet"), "w").close()
+    open(os.path.join(ledger, "_SUCCESS"), "w").close()
+
+    audit = N.curation_state_audit(spark, state).collect()
+    assert [r for r in audit if r.leg == "ledger"] == []
+
+
+def test_nightly_composite_file_uri_dirs_equal_plain_paths(spark, tmp_path):
+    """``file:`` URIs for batch_dir and state_dir (the in-container
+    proxy for a non-local filesystem) see the same files as plain
+    paths: two nights give the same per-leg decisions and state rows,
+    and the state audit reports zero violations. Batch keys hash the
+    ingested path strings, so state rows compare with each run's keys
+    replaced by (night, modality) labels."""
+
+    def run(root, uri):
+        os.makedirs(root)
+        batch, state = os.path.join(root, "batch"), os.path.join(root, "state")
+        prefix = "file:" if uri else ""
+        decisions, labels = [], {}
+        nights = [
+            (
+                [(1, f"c-lead {SHARED} c-tail"), (2, "beta text two words")],
+                [(1, axis_vec(0)), (2, axis_vec(1))],
+            ),
+            (
+                [
+                    (10, "beta text two words"),
+                    (11, f"b-pre {SHARED} b-post"),
+                    (12, "completely novel stuff here ok"),
+                ],
+                [(10, axis_vec(0, wiggle=0.04)), (11, axis_vec(2))],
+            ),
+        ]
+        for night, (docs, vecs) in enumerate(nights, 1):
+            _stage(
+                spark, tmp_path, batch, f"n{night}.parquet",
+                docs=docs, vecs=vecs,
+            )
+            result, files = N.nightly_curation_update(
+                spark, prefix + batch, prefix + state
+            )
+            assert len(files) == 2
+            decisions.append(_decisions(result))
+            for sub in (N.DOCS_SUBDIR, N.VECS_SUBDIR):
+                key = N._batch_key([f for f in files if f"/{sub}/" in f])
+                labels[key] = f"night{night}-{sub}"
+        rows = {
+            leg: sorted(
+                tuple(labels.get(v, v) if isinstance(v, str) else v for v in r)
+                for r in leg_rows
+            )
+            for leg, leg_rows in _state_rows(spark, state).items()
+        }
+        audit = N.curation_state_audit(spark, prefix + state).collect()
+        return decisions, rows, audit
+
+    plain = run(str(tmp_path / "plain"), uri=False)
+    uri = run(str(tmp_path / "uri"), uri=True)
+    assert uri[0] == plain[0]
+    assert uri[1] == plain[1]
+    assert {(r.leg, r.counter) for r in uri[2]} == {
+        (r.leg, r.counter) for r in plain[2]
+    }
+    size_counters = {
+        "n_rows", "n_word_rows", "n_vectors", "n_band_rows", "n_signatures",
+        "n_cell_rows", "n_bucket_rows", "n_codebook_rows", "n_code_rows",
+        "n_centroids", "n_files",
+    }
+    violations = {
+        (r.leg, r.counter): r.value
+        for r in uri[2]
+        if r.counter not in size_counters and r.value != 0
+    }
+    assert violations == {}
+    assert {(r.leg, r.counter): r.value for r in uri[2]}[
+        ("ledger", "n_files")
+    ] == 4

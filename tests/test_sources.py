@@ -376,29 +376,34 @@ def test_incremental_ingest_ledger(spark, tmp_path):
         ingest_incremental(spark, src, ledger)
 
 
-def test_has_committed_parquet_ignores_temporary(tmp_path):
+def test_has_committed_parquet_ignores_temporary(spark, tmp_path):
     """Round-8 review regression: a TORN Spark write (only
     _temporary task attempts on disk) must read as 'no committed
     table' — Spark's reader ignores underscore dirs, so counting them
     made nightly crash replays die with UNABLE_TO_INFER_SCHEMA
-    forever."""
+    forever. The same census holds through a ``file:`` URI (the
+    Hadoop FileSystem view every state-directory probe shares)."""
     import os
 
     from mpi_mapreduce_spark.sources.io import has_committed_parquet
 
     d = str(tmp_path / "idx")
-    assert not has_committed_parquet(d)  # absent
+    assert not has_committed_parquet(spark, d)  # absent
     os.makedirs(os.path.join(d, "_temporary", "0"))
     open(os.path.join(d, "_temporary", "0", "part-0.snappy.parquet"), "w").close()
     open(os.path.join(d, "_SUCCESS"), "w").close()
-    assert not has_committed_parquet(d)  # torn: only in-flight files
+    assert not has_committed_parquet(spark, d)  # torn: only in-flight files
     # dot-staged files (a direct committer's pre-rename staging) and
     # hidden dirs are ignored by Spark's hiddenFileFilter too — a
     # directory holding only those is still a torn table (ADVICE r8)
     open(os.path.join(d, ".part-1.snappy.parquet"), "w").close()
     os.makedirs(os.path.join(d, ".staging"))
     open(os.path.join(d, ".staging", "part-2.snappy.parquet"), "w").close()
-    assert not has_committed_parquet(d)  # still torn: only hidden files
+    assert not has_committed_parquet(spark, d)  # still torn: only hidden files
     os.makedirs(os.path.join(d, "batch=b1"))
     open(os.path.join(d, "batch=b1", "part-0.snappy.parquet"), "w").close()
-    assert has_committed_parquet(d)  # committed file present
+    assert has_committed_parquet(spark, d)  # committed file present
+    assert has_committed_parquet(spark, f"file:{d}")  # same through a URI
+    assert not has_committed_parquet(spark, f"file:{tmp_path / 'absent'}")
+    os.remove(os.path.join(d, "batch=b1", "part-0.snappy.parquet"))
+    assert not has_committed_parquet(spark, f"file:{d}")  # torn again
