@@ -6,9 +6,13 @@ relied on the external driver's round bench to notice a plan
 regression. This test runs the committed bench CLI exactly as the
 driver does (subprocess, sf0.1, local[$SPARK_GRAFT_CPUS]) and asserts
 every headline query lands within BUDGET_FACTOR x its manifest wall
-(tools/bench_manifest_sf0.1.json = per-query minima across the
-round-8 gc'd idle A/B runs and the prior manifest), so a lost
-broadcast or a new global sort fails HERE before the driver sees it.
+(tools/bench_manifest_sf0.1.json = per-query medians over >= 2 full
+bench runs of the current code, see "Reference policy" below), so a
+lost broadcast or a new global sort fails HERE before the driver sees
+it. The manifest is bound to the core count it was measured at (its
+"cpus"): compute-bound queries scale with local[N], so walls are
+compared only when this run's cpus equals the manifest's, and a
+mismatch fails naming both counts instead of as an overrun.
 
 Budget calibration (round 8): bench.py's untimed System.gc() before
 each timed rep roughly halved the measured idle A/B noise band —
@@ -77,6 +81,15 @@ def test_headline_queries_within_budget():
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
     assert len(lines) == 1, f"bench stdout must be ONE JSON line: {lines}"
     result = json.loads(lines[0])
+
+    # walls measured at another local[N] are not a reference for this one
+    assert manifest.get("cpus") == result["cpus"], (
+        f"manifest measured at cpus={manifest.get('cpus')}, this bench ran "
+        f"at cpus={result['cpus']}; regenerate it at this core count: "
+        f"SPARK_GRAFT_CPUS={result['cpus']} python bench.py > runN.json "
+        f"(>= 2 full runs), then python tools/gen_bench_manifest.py "
+        f"run1.json run2.json ..."
+    )
 
     # every manifest query must still be a headline query (a silently
     # dropped headline row would un-gate its plan) ...

@@ -17,10 +17,19 @@ operator INVALIDATES its manifest entry — regenerate from fresh runs
 of the new code before the round ends; never tighten an entry in the
 same commit window as an unbenched code change.
 
+Core-count binding: the walls of compute-bound queries scale with the
+local[N] core count (multimodal_png_palette_alpha: 0.70-0.97 s at 32
+cores, 1.50-1.59 s at 8, 1.72-2.00 s at 4), so every run must record the
+same "cpus" and the manifest carries it; tests/test_bench_budget.py
+refuses to compare walls against a manifest from another count.
+
+    SPARK_GRAFT_CPUS=$(env -u OMP_NUM_THREADS nproc) \
+        python bench.py > run1.json     # >= 2 full runs, same settings
     python tools/gen_bench_manifest.py run1.json run2.json [...]
 
 Each input is either the driver's BENCH_r*.json wrapper (with a
-"parsed" key) or bench.py's own one-line JSON output saved to a file.
+"parsed" key; its top-level "cpus" counts if the parsed line has none)
+or bench.py's own one-line JSON output saved to a file.
 """
 
 from __future__ import annotations
@@ -34,7 +43,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MANIFEST = os.path.join(REPO, "tools", "bench_manifest_sf0.1.json")
 
 
-def load_queries(path: str) -> dict[str, float]:
+def load_run(path: str) -> tuple[int, dict[str, float]]:
+    """(cpus, {query: wall}) of one full bench run."""
     with open(path) as f:
         text = f.read()
     try:
@@ -43,16 +53,26 @@ def load_queries(path: str) -> dict[str, float]:
         line = [l for l in text.splitlines() if l.strip().startswith("{")][-1]
         d = json.loads(line)
     if "parsed" in d:
-        d = d["parsed"]
+        d = {"cpus": d.get("cpus"), **d["parsed"]}
     if d.get("sf") != 0.1:
         raise SystemExit(f"{path}: sf={d.get('sf')} != 0.1")
-    return d["queries"]
+    cpus = d.get("cpus")
+    if not isinstance(cpus, int) or cpus < 1:
+        raise SystemExit(f"{path}: no core count recorded (cpus={cpus!r})")
+    return cpus, d["queries"]
 
 
 def main() -> None:
-    runs = [load_queries(p) for p in sys.argv[1:]]
-    if len(runs) < 2:
+    loaded = [load_run(p) for p in sys.argv[1:]]
+    if len(loaded) < 2:
         raise SystemExit("need >= 2 full-run JSONs for a median")
+    counts = {cpus for cpus, _ in loaded}
+    if len(counts) != 1:
+        raise SystemExit(
+            f"runs measured at different core counts: {sorted(counts)}"
+        )
+    (cpus,) = counts
+    runs = [queries for _, queries in loaded]
     names = set(runs[0])
     for r in runs[1:]:
         if set(r) != names:
@@ -63,19 +83,20 @@ def main() -> None:
     }
     out = {
         "generated": (
-            "r14 median-of-%d-runs policy (VERDICT r13 item 2): entries "
-            "are per-query MEDIANS over full bench runs of the current "
-            "code, not all-time minima; a commit touching an operator "
-            "invalidates its entry (regenerate before round end)"
-            % len(runs)
+            "median-of-%d-runs policy at local[%d]: entries are "
+            "per-query MEDIANS over full bench runs of the current code "
+            "at one core count, not all-time minima; a commit touching "
+            "an operator invalidates its entry (regenerate before round "
+            "end)" % (len(runs), cpus)
         ),
         "queries": queries,
         "sf": 0.1,
+        "cpus": cpus,
     }
     with open(MANIFEST, "w") as f:
         json.dump(out, f, indent=2, sort_keys=False)
         f.write("\n")
-    print(f"wrote {MANIFEST}: {len(queries)} entries, "
+    print(f"wrote {MANIFEST}: {len(queries)} entries at cpus={cpus}, "
           f"total {sum(queries.values()):.2f}s")
 
 
